@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.Bridge
 
 import graft.api.{QueryCache, ResultFormatter}
 import graft.functions.GraftFunctions
@@ -23,17 +24,11 @@ object GraftEngine {
       resolver: TableResolver = new CatalogResolver,
       properties: Map[String, String] = Map.empty): GraftSession = {
     manifest.validateLayoutVersion()
-    val planner = new SemanticPlanner(spark, manifest, resolver, properties)
-    // deployment writes the shared temp-view namespace AND the constructor
-    // claims view ownership — both must happen atomically with any concurrent
-    // session's analysis, or a session swapping its views in between would
-    // leave ownership pointing at THIS deployment while the catalog holds the
-    // other one's views (and this session's first query would skip reregister)
-    GraftSession.viewLock(spark).synchronized {
-      planner.deploy()
-      GraftFunctions.register(spark)
-      new GraftSession(spark, manifest, planner, properties)
-    }
+    // before the clone, which inherits the functions
+    GraftFunctions.registerOnce(spark)
+    val planner = new SemanticPlanner(Bridge.cloneSession(spark), manifest, resolver, properties)
+    planner.deploy()
+    new GraftSession(spark, manifest, planner, properties)
   }
 
   /** Deploy from a JSON (or base64 JSON) manifest string, pruned to the models a given
@@ -54,9 +49,8 @@ object GraftEngine {
 
   /** Deployment cache for `deployOnDir`: keyed structurally on (session, manifest,
     * dir, properties). Building the governed model plans costs hundreds of ms per
-    * manifest; a cache hit only re-registers the temp views (plans are immutable),
-    * which keeps correctness even when other work on the session has shadowed the
-    * view names in between.
+    * manifest; a cache hit returns the deployment as is — its views live in its own
+    * session, so nothing done on the caller's session in between can shadow them.
     */
   // keyed on the SparkSession reference itself (identity equality) — an int hash
   // could collide across GC'd sessions and hand back a GraftSession bound elsewhere
@@ -71,11 +65,10 @@ object GraftEngine {
       properties: Map[String, String] = Map.empty): GraftSession = {
     val key = (spark, manifest, dir, properties)
     val cached = deployCache.get(key)
-    if (cached != null) { cached.reregister(); cached }
+    if (cached != null) cached
     else {
       val s = deploy(spark, manifest, new PathResolver(dir), properties)
       deployCache.put(key, s) // LRU-bounded
-
       s
     }
   }
@@ -110,26 +103,6 @@ private[graft] final class LruCache[K, V](capacity: Int) {
 }
 
 object GraftSession {
-  /** Which deployment's temp views are currently registered, per Spark session.
-    * Sessions over the same SparkSession (e.g. per-query property overrides) share
-    * one view namespace; a query from a session that is not the current owner
-    * re-registers its views first (milliseconds — the plans are immutable).
-    */
-  private val viewOwner =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, AnyRef]
-
-  /** Per-SparkSession lock serializing view-ownership swap + query ANALYSIS.
-    * Two GraftSessions share one temp-view namespace; without atomicity a
-    * thread could swap the views in while another thread's query is mid-
-    * analysis and silently resolve against the WRONG deployment. Execution
-    * stays fully parallel — resolved plans never re-read the catalog — so the
-    * lock costs only the (sub-ms, warm) analysis window.
-    */
-  private val viewLocks =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, AnyRef]
-  private[graft] def viewLock(spark: SparkSession): AnyRef =
-    viewLocks.computeIfAbsent(spark, _ => new Object)
-
   /** Executor for time-bounded query actions (daemon threads — must not block JVM
     * exit; cached — bounded by concurrent timed queries, idle threads reaped).
     */
@@ -148,22 +121,25 @@ object GraftSession {
       overridden: Boolean, overriddenAtMs: Option[Long])
 }
 
+/** One deployment of a manifest over the caller's session `spark`.
+  *
+  * Names resolve in the deployment's own session (`planner.spark`, a clone of
+  * `spark`): its models, views, metrics, macros and raw-source views live there, so
+  * concurrent deployments neither see nor wait for each other, and the caller's
+  * own temp views and functions are never touched. That session takes the
+  * caller's conf as it was at deploy time, plus the `timezone` property; nothing
+  * changes it afterwards, so a plan is a function of (sql, limit) alone. Every
+  * DataFrame returned here is rebound to `spark`, so execution conf, result
+  * formatting, memory sinks and streaming queries stay the caller's.
+  */
 final class GraftSession(
     val spark: SparkSession,
     val manifest: Manifest,
     planner: SemanticPlanner,
     properties: Map[String, String] = Map.empty) {
 
-  GraftSession.viewOwner.put(spark, this)
-
-  /** Run `f` (which must cover every catalog-touching step — view lookup and
-    * plan ANALYSIS) with this deployment's views atomically in place.
-    */
-  private def withViews[T](f: => T): T =
-    GraftSession.viewLock(spark).synchronized {
-      if (GraftSession.viewOwner.put(spark, this) ne this) planner.reregister()
-      f
-    }
+  /** The deployment's own session, where every name resolves. */
+  private def own: SparkSession = planner.spark
 
   /** Sessions derived from this deployment under overridden properties, one per
     * distinct merged property set (bounded; rebuilds are cheap — base scans are
@@ -176,26 +152,10 @@ final class GraftSession(
     * Overrides merge onto deploy-time properties; RLAC filters and CLAC projections
     * re-resolve against the merged set without re-reading sources. The property
     * `timezone` (the `x-wren-timezone` analogue, wren-core/core/src/mdl/context.rs:50-52)
-    * is applied as the session timezone while this session's queries are analyzed.
+    * is the session timezone this session's queries are analyzed under.
     */
-  def withProperties(overrides: Map[String, String]): GraftSession = {
-    val merged = properties ++ overrides
-    if (merged == properties) this
-    else {
-      val cached = propSessions.get(merged)
-      if (cached != null) cached
-      else {
-        val p = planner.withProperties(merged)
-        // deploy + ownership claim atomic with concurrent analysis (see deploy())
-        val s = GraftSession.viewLock(spark).synchronized {
-          p.deploy()
-          new GraftSession(spark, manifest, p, merged)
-        }
-        propSessions.put(merged, s) // LRU-bounded
-        s
-      }
-    }
-  }
+  def withProperties(overrides: Map[String, String]): GraftSession =
+    withExactProperties(properties ++ overrides)
 
   /** Like `withProperties`, but `props` REPLACES the deploy-time properties instead
     * of merging over them — the per-request form (an HTTP request's headers are the
@@ -209,12 +169,9 @@ final class GraftSession(
       val cached = propSessions.get(props)
       if (cached != null) cached
       else {
-        val p = planner.withProperties(props)
-        // deploy + ownership claim atomic with concurrent analysis (see deploy())
-        val s = GraftSession.viewLock(spark).synchronized {
-          p.deploy()
-          new GraftSession(spark, manifest, p, props)
-        }
+        val p = planner.withProperties(props, Bridge.cloneSession(spark))
+        p.deploy()
+        val s = new GraftSession(spark, manifest, p, props)
         propSessions.put(props, s) // LRU-bounded
         s
       }
@@ -223,20 +180,6 @@ final class GraftSession(
   /** Per-query properties: resolve against a property-override session and run. */
   def query(sql: String, props: Map[String, String]): DataFrame =
     withProperties(props).query(sql)
-
-  /** The session timezone binds into timestamp expressions during analysis
-    * (ResolveTimeZone), so scoping the conf around `spark.sql` is enough for the
-    * resulting lazy DataFrame to keep it.
-    */
-  private def withSessionTimezone[T](f: => T): T =
-    properties.collectFirst { case (k, v) if k.equalsIgnoreCase("timezone") => v } match {
-      case Some(tz) =>
-        val key = "spark.sql.session.timeZone"
-        val prev = spark.conf.get(key)
-        spark.conf.set(key, tz)
-        try f finally spark.conf.set(key, prev)
-      case None => f
-    }
 
   /** Execute user SQL written against model/view names. `limit` clamps the result like
     * the reference's pushdown_limit (wren-core-py/src/context.rs:271-320).
@@ -260,7 +203,7 @@ final class GraftSession(
       analyzed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
       optimized: Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan])
 
-  private val planCache = new LruCache[(String, Option[Int], String), CachedPlan](256)
+  private val planCache = new LruCache[(String, Option[Int]), CachedPlan](256)
 
   /** (hits, misses) of the per-session plan cache — PlanProfile evidence. */
   def planCacheStats: (Long, Long) = planCache.stats
@@ -283,23 +226,15 @@ final class GraftSession(
     stable
   }
 
-  /** Analysis-relevant session conf baked into cached plans — a change must miss. */
-  private def planConfKey: String =
-    spark.conf.get("spark.sql.session.timeZone") + "|" +
-      spark.conf.get("spark.sql.ansi.enabled", "false") + "|" +
-      spark.conf.get("spark.sql.caseSensitive", "false")
-
   def query(sql: String, limit: Option[Int] = None): DataFrame = {
-    val key = (sql, limit, planConfKey)
+    val key = (sql, limit)
     val hit = planCache.get(key)
     if (hit != null) return hit.optimized match {
-      case Some(opt) =>
-        org.apache.spark.sql.graft.Bridge.ofRowsPreOptimized(spark, hit.analyzed, opt)
-      case None => org.apache.spark.sql.graft.Bridge.ofRows(spark, hit.analyzed)
+      case Some(opt) => Bridge.ofRowsPreOptimized(spark, hit.analyzed, opt)
+      case None => Bridge.ofRows(spark, hit.analyzed)
     }
-    withViews {
     val df =
-      try withSessionTimezone(planner.runSql(sql))
+      try planner.runSql(sql)
       catch {
         case e: org.apache.spark.sql.AnalysisException
             if e.getCondition != null && e.getCondition.startsWith("UNRESOLVED_COLUMN") =>
@@ -328,7 +263,7 @@ final class GraftSession(
     // A6 partial-model pruning: drop engine-generated to-one join sides the query
     // never references (see PartialModelPruner) — then cache the pruned plan.
     val pruned = graft.planner.PartialModelPruner.prune(limited.queryExecution.analyzed)
-    val out = org.apache.spark.sql.graft.Bridge.ofRows(spark, pruned)
+    val out = Bridge.ofRows(spark, pruned)
     // Optimize eagerly on the miss path (execution would anyway) so warm hits can
     // skip the optimizer entirely; time-sensitive plans cache analyzed-only.
     val optimized =
@@ -337,7 +272,6 @@ final class GraftSession(
       else None
     planCache.put(key, CachedPlan(pruned, optimized))
     out
-    }
   }
 
   /** The planned form of the SQL — the `/dry-plan` analogue. The reference returns
@@ -387,7 +321,7 @@ final class GraftSession(
   def validatePolicy(
       sql: String, strictMode: Boolean = true,
       deniedFunctions: Set[String] = Set.empty): Unit =
-    graft.semantics.Policy.validate(spark, sql,
+    graft.semantics.Policy.validate(own, sql,
       (manifest.models.map(_.name) ++ manifest.views.map(_.name) ++
         manifest.metrics.map(_.name)).toSet,
       strictMode, deniedFunctions)
@@ -398,14 +332,7 @@ final class GraftSession(
     query(sql)
   }
 
-  def modelDF(name: String): DataFrame = withViews(spark.table(name))
-
-  /** Re-register this deployment's temp views (cache-hit path of deployOnDir). */
-  private[graft] def reregister(): Unit =
-    GraftSession.viewLock(spark).synchronized {
-      GraftSession.viewOwner.put(spark, this)
-      planner.reregister()
-    }
+  def modelDF(name: String): DataFrame = Bridge.rebind(own.table(name), spark)
 
   /** Refresh the deployment's cached source file listings — call after the
     * underlying table directories were REWRITTEN in place (e.g. a
@@ -419,11 +346,10 @@ final class GraftSession(
   /** Model substitution (A13): run SQL written against *physical* table names by
     * rewriting each relation to its governing model (substitute.py:14-124).
     */
-  def querySubstituted(sql: String): DataFrame = withViews {
+  def querySubstituted(sql: String): DataFrame =
     // same enum semantics as query(): Enum.Value rewrites before substitution
-    org.apache.spark.sql.graft.Bridge.ofRows(spark, planner.rewriteEnums(
-      Substitution.substitute(spark, manifest, planner.stripNamespace(sql))))
-  }
+    Bridge.rebind(Bridge.ofRows(own, planner.rewriteEnums(
+      Substitution.substitute(own, manifest, planner.stripNamespace(sql)))), spark)
 
   /** Collision-resistant deployment identity: SHA-256 over the full structural
     * rendering of the manifest (expressions, access-control rules, ...), so an
@@ -506,11 +432,13 @@ final class GraftSession(
 
   /** Validation probes (A19). */
   def validateColumn(model: String, column: String): Validator.ValidationResult =
-    Validator.columnIsValid(spark, model, column)
+    Validator.columnIsValid(own, model, column)
+  def validateRelationship(rel: graft.mdl.Relationship): Validator.ValidationResult =
+    Validator.relationshipIsValid(own, manifest, rel)
   def validateRelationships(): Seq[Validator.ValidationResult] =
-    manifest.relationships.map(r => Validator.relationshipIsValid(spark, manifest, r))
+    manifest.relationships.map(validateRelationship)
   def validateRlacSyntax(condition: String): Validator.ValidationResult =
-    Validator.rlacConditionSyntaxIsValid(spark, condition)
+    Validator.rlacConditionSyntaxIsValid(own, condition)
   def validateCubeHierarchies(): Seq[Validator.ValidationResult] =
     manifest.cubes.map(Validator.cubeHierarchyIsValid)
 
@@ -529,22 +457,20 @@ final class GraftSession(
     if (manifest.model(cube.name).nonEmpty)
       throw new graft.planner.GraftException(
         s"cube $name would shadow the model view of the same name")
-    withViews {
-      val base = spark.table(cube.baseObject)
-      val timeDims = cube.timeDimensions.map { td =>
-        val (c, grain) = td.split(':') match {
-          case Array(c, g) => (c, g)
-          case _ => (td, "day")
-        }
-        date_trunc(grain, col(c)).alias(s"${c}_$grain")
+    val base = own.table(cube.baseObject)
+    val timeDims = cube.timeDimensions.map { td =>
+      val (c, grain) = td.split(':') match {
+        case Array(c, g) => (c, g)
+        case _ => (td, "day")
       }
-      val dims = cube.dimensions.map(d => col(d)) ++ timeDims
-      val measures = cube.measures.map(m =>
-        expr(m.expression.replace("\"", "`")).alias(m.name))
-      val df = base.cube(dims: _*).agg(measures.head, measures.tail: _*)
-      df.createOrReplaceTempView(cube.name)
-      df
+      date_trunc(grain, col(c)).alias(s"${c}_$grain")
     }
+    val dims = cube.dimensions.map(d => col(d)) ++ timeDims
+    val measures = cube.measures.map(m =>
+      expr(m.expression.replace("\"", "`")).alias(m.name))
+    val df = base.cube(dims: _*).agg(measures.head, measures.tail: _*)
+    df.createOrReplaceTempView(cube.name)
+    Bridge.rebind(df, spark)
   }
 
   /** Function listing for the `/functions` API (A20). */

@@ -14,6 +14,10 @@ object PlanProfile {
     spark.sparkContext.setLogLevel("WARN")
     val session = GraftEngine.deployOnDir(spark, queries.TpcH.manifest, sfDir)
     val sqls = queries.TpcH.oracles.values.toSeq
+    // the deployment's views live in its own session; the raw-Spark timings below
+    // plan the same SQL over the same model plans registered on this session
+    queries.TpcH.manifest.models.foreach(m =>
+      session.modelDF(m.name).createOrReplaceTempView(m.name))
 
     def time(what: String)(f: => Unit): Unit = {
       f // warm

@@ -195,7 +195,7 @@ final class GraftHttpServer(
           case e: RuntimeException if e.getCause == null && !e.isInstanceOf[IllegalArgumentException] =>
             throw new IllegalArgumentException(s"invalid manifest: ${e.getMessage}")
         }
-      if (sessions.size >= 64) sessions.clear() // crude bound, same policy as deployOnDir
+      if (sessions.size >= 64) sessions.clear() // crude bound: clears all (deployOnDir evicts LRU)
       sessions.put(manifestStr, s)
       s
     }

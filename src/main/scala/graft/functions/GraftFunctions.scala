@@ -257,6 +257,23 @@ object GraftFunctions {
       }))
   }
 
+  /** Sessions [[registerOnce]] has registered (weak: a dropped session leaves). */
+  private val registeredSessions =
+    java.util.Collections.newSetFromMap(new java.util.WeakHashMap[SparkSession, java.lang.Boolean])
+
+  /** [[register]] unless this session was already registered here — every deploy
+    * calls it, and a re-register replaces (and logs a WARN for) each function.
+    * Keyed on the session, not on function names: `to_char` deliberately shadows a
+    * Spark builtin, so a name probe would skip it. Cloned sessions inherit the
+    * functions and need no call.
+    */
+  def registerOnce(spark: SparkSession): Unit = registeredSessions.synchronized {
+    if (!registeredSessions.contains(spark)) {
+      register(spark)
+      registeredSessions.add(spark)
+    }
+  }
+
   /** Register every gap-fill as a temporary SQL function on the session. Idempotent. */
   def register(spark: SparkSession): Unit = {
     kernelBuilders.foreach { case (name, builder) =>

@@ -207,8 +207,14 @@ final class GraftException(msg: String) extends RuntimeException(msg)
   * Implements the reference's semantic analysis (ModelAnalyzeRule/ModelGenerationRule/
   * RelationChain/CalculationPlanNode, wren-core/core/src/logical_plan/analyze/) as a
   * pre-pass that materializes each model as a governed DataFrame registered as a temp
-  * view; Catalyst then does column pruning, predicate pushdown, and join planning on
-  * the expanded plan natively (SURVEY.md §4.2 — no custom optimizer rules needed).
+  * view in `spark`; Catalyst then does column pruning, predicate pushdown, and join
+  * planning on the expanded plan natively (SURVEY.md §4.2 — no custom optimizer rules
+  * needed).
+  *
+  * `spark` is the deployment's own session (GraftEngine hands each planner a clone
+  * of the caller's session, like the reference's per-manifest SessionContext,
+  * mdl/mod.rs:420-454): its temp views, macros and timezone belong to this
+  * deployment alone, so no other deployment can shadow them.
   *
   * Per model (plan.rs:63-560 re-expressed Spark-first):
   *   source scan → expression columns (ModelSourceNode, plan.rs:891-1035)
@@ -222,7 +228,7 @@ final class GraftException(msg: String) extends RuntimeException(msg)
   *     (model_generation.rs:88-129) → temp view.
   */
 final class SemanticPlanner(
-    spark: SparkSession,
+    val spark: SparkSession,
     manifest: Manifest,
     resolver: TableResolver,
     properties: Map[String, String]) {
@@ -236,20 +242,14 @@ final class SemanticPlanner(
 
   // ---------------------------------------------------------------- deploy
 
-  /** (view name, resolved DataFrame) pairs from the last deploy, for cheap
-    * re-registration when a cached deployment's temp views may have been shadowed.
-    */
-  private var deployed: Seq[(String, DataFrame)] = Nil
-  private var macroSql: Seq[String] = Nil
   // Raw source scans captured at deploy, addressable by the model's full physical
   // tableReference (dotted, lowercase) — `datafusion.public.orders` keeps resolving
   // to the source even after the model's temp view shadows the bare table name.
   private val srcCache = mutable.Map[String, DataFrame]()
   private var rawViews: Map[String, String] = Map.empty
-  private var rawDeployed: Seq[(String, DataFrame)] = Nil
 
-  /** Build and register every model and view. Returns registered view names. */
-  def deploy(): Seq[String] = {
+  /** Build and register every model, view, metric and macro. */
+  def deploy(): Unit = {
     // 1. refSql models parse against *physical* names: pre-register those views.
     val hasRefSql = manifest.models.exists(_.refSql.nonEmpty)
     if (hasRefSql) {
@@ -264,13 +264,12 @@ final class SemanticPlanner(
     //     model's full tableReference reads the source scan, not the model (the
     //     reference's LocalRuntime sessions keep the underlying catalog visible —
     //     sqllogictest model.slt queries `datafusion.public.order_items` directly).
-    rawDeployed = srcCache.toSeq.map { case (dotted, src) =>
+    srcCache.foreach { case (dotted, src) =>
       val vn = "__graft_raw_" + dotted.replaceAll("[^a-zA-Z0-9]", "_")
       src.createOrReplaceTempView(vn)
       rawViews += dotted -> vn
-      vn -> src
     }
-    val modelViews = manifest.models.map { m =>
+    manifest.models.foreach { m =>
       val df0 = modelDF(m)
       // `cached: true` models persist spill-safely (the reference materializes
       // cached models on a refresh schedule, manifest-macro lib.rs:146-165;
@@ -280,33 +279,30 @@ final class SemanticPlanner(
       val df = if (m.cached && !df0.isStreaming) df0.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else df0
       df.createOrReplaceTempView(m.name)
-      m.name -> df
     }
     // 2.5 v2 macros deploy as SQL temp functions — Catalyst inlines the body into
     //     every caller, which IS the reference's expand-at-rewrite semantics
-    //     (Macro.java:42-56); param types map through TypeMapper. Definitions are
-    //     kept so reregister() can restore them after another deployment on the
-    //     same SparkSession replaced same-named functions.
-    macroSql = manifest.macros.map { m =>
+    //     (Macro.java:42-56); param types map through TypeMapper.
+    manifest.macros.foreach { m =>
       val params = m.parameters
         .map { case (n, t) => s"`$n` ${graft.mdl.TypeMapper.toSpark(t).sql}" }
         .mkString(", ")
-      s"CREATE OR REPLACE TEMPORARY FUNCTION `${m.name}`($params) RETURN ${normalizeQuotes(m.body)}"
+      spark.sql(
+        s"CREATE OR REPLACE TEMPORARY FUNCTION `${m.name}`($params) RETURN ${normalizeQuotes(m.body)}")
     }
-    macroSql.foreach(spark.sql(_))
     // 3. MDL views are plain SQL over models (ViewTable, context.rs:320-327).
     //    View statements are MDL-dialect SQL: double-quoted identifiers normalize
     //    to backticks (the reference parses them as ANSI identifiers).
-    val viewDFs = manifest.views.map { v =>
-      val df = runSql(normalizeQuotes(v.statement))
-      df.createOrReplaceTempView(v.name)
-      v.name -> df
+    manifest.views.foreach { v =>
+      runSql(normalizeQuotes(v.statement)).createOrReplaceTempView(v.name)
     }
     // 4. v2 metrics (grouped rollups; metric-on-metric allowed) and cumulative
     //    metrics (per-period agg + running window over the date spine).
-    val metricDFs = deployMetrics(modelViews.map(_._1).toSet ++ viewDFs.map(_._1))
-    deployed = modelViews ++ viewDFs ++ metricDFs
-    deployed.map(_._1)
+    deployMetrics((manifest.models.map(_.name) ++ manifest.views.map(_.name)).toSet)
+    // 5. The `timezone` property (the `x-wren-timezone` analogue, context.rs:50-52)
+    //    becomes the session zone only now: the plans above bound the deploy-time
+    //    zone, and only user queries analyze under the property's zone.
+    propValue("timezone").foreach(spark.conf.set("spark.sql.session.timeZone", _))
   }
 
   /** Register metric views in dependency order (a metric's baseObject may be a
@@ -315,8 +311,7 @@ final class SemanticPlanner(
     * other unreferenced object. Each `timeGrain` additionally registers
     * `<metric>_<grain>_<datepart>` rollup views (TimeGrain.java:26-47).
     */
-  private def deployMetrics(available: Set[String]): Seq[(String, DataFrame)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, DataFrame)]
+  private def deployMetrics(available: Set[String]): Unit = {
     var known = available.map(_.toLowerCase)
     // one fixpoint over BOTH kinds so metrics may layer on cumulative metrics and
     // vice versa; whatever stays blocked had its base pruned (or is cyclic) and is
@@ -343,25 +338,20 @@ final class SemanticPlanner(
           val df = if (m.cached) df0.persist(
             org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else df0
           df.createOrReplaceTempView(m.name)
-          out += m.name -> df
           known += m.name.toLowerCase
           for (tg <- m.timeGrain; part <- tg.dateParts) {
             val grainCol = date_trunc(part, col(tg.refColumn)).alias(tg.name)
             val gdf = base.groupBy(dims :+ grainCol: _*).agg(measures.head, measures.tail: _*)
             val gname = s"${m.name}_${tg.name}_${part.toLowerCase}"
             gdf.createOrReplaceTempView(gname)
-            out += gname -> gdf
             known += gname.toLowerCase
           }
         case Right(cm) =>
-          val df = cumulativeMetricDF(cm)
-          df.createOrReplaceTempView(cm.name)
-          out += cm.name -> df
+          cumulativeMetricDF(cm).createOrReplaceTempView(cm.name)
           known += cm.name.toLowerCase
       }
       pending = blocked
     }
-    out.toSeq
   }
 
   private def cumulativeMetricDF(cm: CumulativeMetric): DataFrame = {
@@ -404,16 +394,6 @@ final class SemanticPlanner(
     }
   }
 
-  /** Re-register the already-built views (plans are immutable DataFrames, so this is
-    * milliseconds) — used when a cached deployment's temp-view names may have been
-    * overwritten by other work on the session.
-    */
-  def reregister(): Unit = {
-    rawDeployed.foreach { case (name, df) => df.createOrReplaceTempView(name) }
-    deployed.foreach { case (name, df) => df.createOrReplaceTempView(name) }
-    macroSql.foreach(spark.sql(_)) // temp functions are session-global: restore ours
-  }
-
   /** Refresh the cached FILE LISTINGS of every resolved source scan. Model and
     * view plans derive from the source frames, and plan transforms copy nodes
     * but share the `FileIndex` INSTANCE — so refreshing the source plans'
@@ -427,20 +407,23 @@ final class SemanticPlanner(
   def refreshSources(): Unit =
     srcCache.values.foreach(_.queryExecution.analyzed.refresh())
 
-  /** A planner over the same manifest/resolver with different session properties:
-    * resolved base scans are SHARED (sources are property-independent), so a deploy
-    * of the returned planner only re-resolves what properties can change — RLAC
-    * filters, CLAC projections, and the model join plans that embed them. This is the
-    * engine side of per-query session properties (the reference's per-request
-    * variable headers, ibis-server/app/mdl/rewriter.py:177-189).
+  /** A planner in session `own` over the same manifest/resolver with different
+    * session properties: resolved base scans are SHARED (sources are
+    * property-independent), so a deploy of the returned planner only re-resolves
+    * what properties can change — RLAC filters, CLAC projections, and the model join
+    * plans that embed them. This is the engine side of per-query session properties
+    * (the reference's per-request variable headers, ibis-server/app/mdl/rewriter.py:
+    * 177-189).
     */
-  def withProperties(newProps: Map[String, String]): SemanticPlanner = {
-    val p = new SemanticPlanner(spark, manifest, resolver, newProps)
-    p.baseCache ++= baseCache
+  def withProperties(newProps: Map[String, String], own: SparkSession): SemanticPlanner = {
+    // a DataFrame registers temp views in ITS OWN session: rebind each shared scan
+    // to `own`, or the new deploy would overwrite this planner's views
+    val p = new SemanticPlanner(own, manifest, resolver, newProps)
+    p.baseCache ++= baseCache.map { case (k, df) => k -> Bridge.rebind(df, own) }
     // the shared base scans carry the raw-source map with them — without this a
     // cached baseDF hit would leave srcCache empty and physical-name references
     // unresolvable in the property session
-    p.srcCache ++= srcCache
+    p.srcCache ++= srcCache.map { case (k, df) => k -> Bridge.rebind(df, own) }
     p
   }
 

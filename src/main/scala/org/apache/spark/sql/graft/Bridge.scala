@@ -14,6 +14,12 @@ object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     Dataset.ofRows(spark.asInstanceOf[ClassicSession], plan)
 
+  /** `df`'s analyzed plan as a DataFrame of `spark`: its names are already resolved,
+    * so the result executes under `spark` whatever catalog `df` was analyzed in.
+    */
+  def rebind(df: DataFrame, spark: SparkSession): DataFrame =
+    ofRows(spark, df.queryExecution.analyzed)
+
   /** DataFrame over an ALREADY analyzed + optimized plan pair: the QueryExecution's
     * analysis and optimization phases are pinned to the supplied plans, so the warm
     * path pays neither (the optimizer alone is ~half of warm planning latency).
@@ -33,6 +39,12 @@ object Bridge {
     new Dataset[org.apache.spark.sql.Row](qe,
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(analyzedPlan.schema))
   }
+
+  /** A private copy of `spark`'s session state (conf, temp views, temp functions)
+    * over the same SparkContext and shared state (cache manager, catalog).
+    */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[ClassicSession].cloneSession()
 
   def column(e: Expression): Column = ExpressionUtils.column(e)
 

@@ -8,7 +8,7 @@ import graft.{GraftEngine, TestSpark}
 import graft.mdl._
 import graft.planner.GraftException
 import graft.queries.Semantic
-import graft.semantics.{Substitution, Validator}
+import graft.semantics.Substitution
 
 /** A13 substitution, A17 cache, A18 formatter, A19 validators, A20 listing. */
 class ApiSurfaceSpec extends AnyFunSuite {
@@ -52,7 +52,7 @@ class ApiSurfaceSpec extends AnyFunSuite {
     // a deliberately wrong cardinality fails: orders -> lineitem declared MANY_TO_ONE
     val bad = Relationship("bad", List("m_orders", "m_lineitem"), JoinType.ManyToOne,
       "\"m_orders\".\"o_orderkey\" = \"m_lineitem\".\"l_orderkey\"")
-    val r = Validator.relationshipIsValid(spark, Semantic.manifest, bad)
+    val r = session.validateRelationship(bad)
     assert(!r.valid && r.message.contains("not unique"))
   }
 
