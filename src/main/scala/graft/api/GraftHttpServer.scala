@@ -54,6 +54,10 @@ final class GraftHttpServer(
     spark: SparkSession, dataDir: String, port: Int = 0,
     profilesHome: java.nio.file.Path = Profiles.defaultHome) {
 
+  // The JDK server sends a reply's headers and body separately; without TCP_NODELAY
+  // the body waits ~40 ms for the client's delayed ACK. The JDK reads the flag when
+  // the JVM's first server is created; a value given at JVM start wins.
+  sys.props.getOrElseUpdate("sun.net.httpserver.nodelay", "true")
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   private val sessions = new ConcurrentHashMap[String, graft.GraftSession]
 

@@ -134,12 +134,12 @@ object Dedup {
     }
     val banded = sig.select(col("id"), explode(array(bandCols: _*)).alias("bh"))
     // One-shuffle bucket expansion: collect ids per (band, band-hash) bucket and
-    // expand the c(c−1)/2 ordered pairs map-side. The previous self-join
+    // stream its c(c−1)/2 ordered pairs map-side. The previous self-join
     // formulation computed the signature subtree TWICE (both join sides) and
-    // shuffled both copies; this groups once. Bucket posting lists are near-dup
-    // cluster sized by construction — a bucket too large to collect is a bucket
-    // whose quadratic pair expansion is infeasible under ANY formulation, i.e. a
-    // banding parameterization mismatched to the corpus, not a memory knob.
+    // shuffled both copies; this groups once. The posting list is the only O(c)
+    // state a bucket costs; its pair output is still quadratic, so a bucket far
+    // past near-dup cluster size means a banding parameterization mismatched to
+    // the corpus, not a memory knob.
     bucketPairs(banded.select(col("id"), col("bh").alias("key")))
   }
 
@@ -172,20 +172,19 @@ object Dedup {
       .distinct()
   }
 
-  /** Ordered candidate pairs `(id_a < id_b)` from equal-key buckets in one
-    * shuffle: sorted posting list per key, map-side pair expansion, distinct.
+  /** Ordered candidate pairs `(id_a < id_b)` from equal-key `(key, id)` rows in one
+    * shuffle: sorted posting list per key, streamed pairs, distinct. An `id` may be
+    * a struct led by the id, to carry a payload onto both pair sides. A posting is
+    * the only O(c) state of a c-member bucket; its c(c−1)/2 pairs are still output.
+    * Uncapped on purpose: a cap drops whole buckets, and LSH recall, the prefix
+    * filter's exactness and p13's even-wave identity need every bucket complete.
     */
-  private def bucketPairs(keyed: DataFrame): DataFrame = {
-    val postings = keyed.groupBy(col("key"))
-      .agg(sort_array(collect_list(col("id"))).alias("ids"))
-      .filter(size(col("ids")) >= 2)
-    postings.select(explode(flatten(
-        transform(col("ids"), (x, i) =>
-          transform(slice(col("ids"), i + lit(2), size(col("ids"))),
-            y => struct(x.alias("id_a"), y.alias("id_b")))))).alias("p"))
-      .select(col("p.id_a").alias("id_a"), col("p.id_b").alias("id_b"))
+  private def bucketPairs(keyed: DataFrame): DataFrame =
+    CandidatePairs.within(
+        keyed.groupBy(col("key")).agg(sort_array(collect_list(col("id"))).alias("ids")),
+        "ids")
+      .select(col("a").alias("id_a"), col("b").alias("id_b"))
       .distinct()
-  }
 
   /** Exact pairwise Jaccard without materializing shingle arrays: the intersection
     * size is the group-count of the shingle-keyed self-join (a shingle shared by a
@@ -203,23 +202,24 @@ object Dedup {
     // Inverted-index pair expansion in ONE shuffle: group ids per shingle via a
     // size-BOUNDED sorted collect (BoundedSortedCollect — a group past maxDocFreq
     // nulls out and frees its buffer, so a boilerplate shingle in millions of docs
-    // costs O(maxDocFreq) agg state, never an executor OOM), then expand the
+    // costs O(maxDocFreq) agg state, never an executor OOM), then stream the
     // c(c−1)/2 ordered pairs map-side from the sorted posting array — where the
     // previous self-join formulation shuffled the (id, shingle) table twice (both
     // join sides) plus a dfreq pre-aggregation.
     val boundedCollect = org.apache.spark.sql.functions.udaf(
       new graft.functions.Aggregators.BoundedSortedCollect(maxDocFreq))
-    val postings = sh.groupBy(col("shingle"))
-      .agg(boundedCollect(col("id")).alias("ids"))
-      .filter(col("ids").isNotNull && size(col("ids")) >= 2)
-    val pairs = postings.select(explode(flatten(
-      transform(col("ids"), (x, i) =>
-        transform(slice(col("ids"), i + lit(2), size(col("ids"))),
-          y => struct(x.alias("id_a"), y.alias("id_b")))))).alias("p"))
-    val inter = pairs
-      .groupBy(col("p.id_a").alias("id_a"), col("p.id_b").alias("id_b"))
+    postingJaccard(
+      sh.groupBy(col("shingle")).agg(boundedCollect(col("id")).alias("ids")),
+      sh.groupBy(col("id")).agg(count(lit(1)).alias("sz")))
+  }
+
+  /** Exact Jaccard of pairs sharing a capped `ids` posting (a null, over-cap one
+    * counts nothing): |A∩B| counted over postings, |A|, |B| from `(id, sz)` sizes.
+    */
+  private def postingJaccard(postings: DataFrame, sizes: DataFrame): DataFrame = {
+    val inter = CandidatePairs.within(postings, "ids")
+      .groupBy(col("a").alias("id_a"), col("b").alias("id_b"))
       .agg(count(lit(1)).alias("inter"))
-    val sizes = sh.groupBy(col("id")).agg(count(lit(1)).alias("sz"))
     inter
       .join(sizes.select(col("id").alias("id_a"), col("sz").alias("sza")), "id_a")
       .join(sizes.select(col("id").alias("id_b"), col("sz").alias("szb")), "id_b")
@@ -272,6 +272,28 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
 
+  /** The (id, shingle) rows each document INDEXES under prefix filtering: its
+    * `|d| − ⌈t·|d|⌉ + 1` rarest shingles in the global (df asc, shingle) order.
+    * Exposed for plan/pruning assertions; [[prefixJaccardCandidates]] consumes it.
+    */
+  private[graft] def prefixIndex(shRaw: DataFrame, threshold: Double,
+      dfreqPre: Option[DataFrame] = None): DataFrame = {
+    require(threshold > 0.0 && threshold <= 1.0,
+      s"prefix filtering needs 0 < t <= 1, got $threshold")
+    val sh = hashedShingles(shRaw)
+    // the df aggregation is the prefix path's priciest shuffle — reuse a
+    // (shingle, __df) table when the caller already built one (auto dispatch)
+    val dfreq = dfreqPre.getOrElse(
+      sh.groupBy(col("shingle")).agg(count(lit(1)).alias("__df")))
+    val byDoc = Window.partitionBy(col("id"))
+    sh.join(dfreq, "shingle")
+      .withColumn("__rk", row_number().over(byDoc.orderBy(col("__df"), col("shingle"))))
+      .withColumn("__sz", count(lit(1)).over(byDoc))
+      .filter(col("__rk") <=
+        col("__sz") - ceil(lit(threshold) * col("__sz") - lit(1e-9)) + 1)
+      .select(col("id"), col("shingle"))
+  }
+
   /** Prefix-filtered candidate pairs for an exact Jaccard-threshold join — the
     * prefix filtering principle of the set-similarity-join literature (Chaudhuri et
     * al. ICDE'06; Bayardo et al. WWW'07; the candidate stage of PPJoin, Xiao et al.
@@ -298,40 +320,10 @@ object Dedup {
     * (id, shingle-hash) longs), candidate expansion over prefix postings only,
     * then [[verifyJaccard]] within candidates.
     */
-  /** The (id, shingle) rows each document INDEXES under prefix filtering: its
-    * `|d| − ⌈t·|d|⌉ + 1` rarest shingles in the global (df asc, shingle) order.
-    * Exposed for plan/pruning assertions; [[prefixJaccardCandidates]] consumes it.
-    */
-  private[graft] def prefixIndex(shRaw: DataFrame, threshold: Double,
-      dfreqPre: Option[DataFrame] = None): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"prefix filtering needs 0 < t <= 1, got $threshold")
-    val sh = hashedShingles(shRaw)
-    // the df aggregation is the prefix path's priciest shuffle — reuse a
-    // (shingle, __df) table when the caller already built one (auto dispatch)
-    val dfreq = dfreqPre.getOrElse(
-      sh.groupBy(col("shingle")).agg(count(lit(1)).alias("__df")))
-    val byDoc = Window.partitionBy(col("id"))
-    sh.join(dfreq, "shingle")
-      .withColumn("__rk", row_number().over(byDoc.orderBy(col("__df"), col("shingle"))))
-      .withColumn("__sz", count(lit(1)).over(byDoc))
-      .filter(col("__rk") <=
-        col("__sz") - ceil(lit(threshold) * col("__sz") - lit(1e-9)) + 1)
-      .select(col("id"), col("shingle"))
-  }
-
   def prefixJaccardCandidates(shRaw: DataFrame, threshold: Double,
-      dfreqPre: Option[DataFrame] = None): DataFrame = {
-    val postings = prefixIndex(shRaw, threshold, dfreqPre).groupBy(col("shingle"))
-      .agg(sort_array(collect_list(col("id"))).alias("ids"))
-      .filter(size(col("ids")) >= 2)
-    postings.select(explode(flatten(
-        transform(col("ids"), (x, i) =>
-          transform(slice(col("ids"), i + lit(2), size(col("ids"))),
-            y => struct(x.alias("id_a"), y.alias("id_b")))))).alias("p"))
-      .select(col("p.id_a").alias("id_a"), col("p.id_b").alias("id_b"))
-      .distinct()
-  }
+      dfreqPre: Option[DataFrame] = None): DataFrame =
+    bucketPairs(prefixIndex(shRaw, threshold, dfreqPre)
+      .select(col("id"), col("shingle").alias("key")))
 
   /** Shingle equality key: xxhash64 when the column still holds raw shingle strings.
     * Jaccard/MinHash only ever compare shingles for EQUALITY, so joining and
@@ -454,24 +446,9 @@ object Dedup {
   }
 
   /** Pair expansion + exact Jaccard off a prebuilt capped-postings table. */
-  private[graft] def pairJaccardFromPostings(postingsRaw: DataFrame, sets: DataFrame)
-      : DataFrame = {
-    val postings = postingsRaw
-      .filter(col("ids").isNotNull && size(col("ids")) >= 2)
-    val pairs = postings.select(explode(flatten(
-      transform(col("ids"), (x, i) =>
-        transform(slice(col("ids"), i + lit(2), size(col("ids"))),
-          y => struct(x.alias("id_a"), y.alias("id_b")))))).alias("p"))
-    val inter = pairs
-      .groupBy(col("p.id_a").alias("id_a"), col("p.id_b").alias("id_b"))
-      .agg(count(lit(1)).alias("inter"))
-    val sizes = sets.select(col("id"), size(col("s")).cast("long").alias("sz"))
-    inter
-      .join(sizes.select(col("id").alias("id_a"), col("sz").alias("sza")), "id_a")
-      .join(sizes.select(col("id").alias("id_b"), col("sz").alias("szb")), "id_b")
-      .withColumn("jaccard", round(col("inter").cast("double") /
-        (col("sza") + col("szb") - col("inter")).cast("double"), 6))
-  }
+  private[graft] def pairJaccardFromPostings(postings: DataFrame, sets: DataFrame)
+      : DataFrame =
+    postingJaccard(postings, sets.select(col("id"), size(col("s")).cast("long").alias("sz")))
 
   /** Asymmetric shingle-containment near-dup: `C(A→B) = |A∩B| / |A|` over the
     * distinct n-gram shingle sets. Containment is what catches document-INSIDE-
@@ -804,23 +781,13 @@ object Dedup {
     val chunks = (0 until 4).map(i =>
       struct(lit(i).alias("c"),
         shiftright(col("simhash"), i * cw).bitwiseAND((1L << cw) - 1).alias("v")))
-    val banded = sig.select(col("id"), col("simhash"), explode(array(chunks: _*)).alias("ch"))
     // same one-shuffle bucket expansion as lshCandidates, carrying each side's
     // signature in the posting struct so hamming verification stays map-side
     // (structs sort by leading id field, so expanded pairs are id-ordered)
-    val postings = banded.groupBy(col("ch"))
-      .agg(sort_array(collect_list(struct(col("id"), col("simhash")))).alias("ids"))
-      .filter(size(col("ids")) >= 2)
-    val pairs = postings.select(explode(flatten(
-        transform(col("ids"), (x, i) =>
-          transform(slice(col("ids"), i + lit(2), size(col("ids"))),
-            y => struct(x.getField("id").alias("id_a"), y.getField("id").alias("id_b"),
-              x.getField("simhash").alias("sh_a"), y.getField("simhash").alias("sh_b"))))))
-        .alias("p"))
-      .select(col("p.id_a").alias("id_a"), col("p.id_b").alias("id_b"),
-        col("p.sh_a").alias("sh_a"), col("p.sh_b").alias("sh_b"))
-      .distinct()
-    pairs
+    bucketPairs(sig.select(struct(col("id"), col("simhash")).alias("id"),
+        explode(array(chunks: _*)).alias("key")))
+      .select(col("id_a.id").alias("id_a"), col("id_b.id").alias("id_b"),
+        col("id_a.simhash").alias("sh_a"), col("id_b.simhash").alias("sh_b"))
       .withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
       .filter(col("hamming") <= maxHamming)
   }

@@ -60,7 +60,9 @@ object EntityResolution {
     * @param nameCol  string column to match on (caller normalizes case/space).
     * @param idCol    unique record id (orderable; pairs are emitted id_a < id_b).
     * @param maxDist  keep pairs with levenshtein(name_a, name_b) <= maxDist.
-    * @param maxBlock drop blocking keys shared by more than this many records.
+    * @param maxBlock drop blocking keys shared by more than this many records;
+    *                 a block at the cap holds one maxBlock-record posting, and its
+    *                 pairs stream through the verify, never all held at once.
     * @param blocking `"bigram"` (default, scale-sane) or `"token"` (see above).
     *
     * Returns (id_a, id_b, name_a, name_b, dist), one row per matched pair.
@@ -81,8 +83,8 @@ object EntityResolution {
     // aggregator DROPS over-cap blocks in the agg buffer itself, so the old
     // count-aggregate + join-back + tok-keyed self-join (which scanned the
     // exploded key stream four times and paid three extra exchanges) is gone.
-    // Pair expansion is map-side off the sorted posting (id_a < id_b by
-    // position), and the quadratic Levenshtein verify runs in the SAME stage.
+    // Pairs stream map-side off the sorted posting (CandidatePairs.within, id_a <
+    // id_b by position) into the quadratic Levenshtein verify, in the SAME stage.
     val recs = df.select(col(idCol).alias("id"), col(nameCol).alias("name"))
       .withColumn("ws", filter(split(col("name"), " "), w => length(w) > 0))
     val toks = recs
@@ -102,14 +104,9 @@ object EntityResolution {
     // count repartition is the one exchange AQE respects, and it carries the
     // bounded postings, not the candidate pairs.
     val parts = df.sparkSession.sparkContext.defaultParallelism
-    postings.repartition(parts)
-      .select(explode(flatten(transform(col("ps"), (x, i) =>
-        transform(slice(col("ps"), i + lit(2), size(col("ps"))),
-          y => struct(
-            x.getField("_2").alias("id_a"), y.getField("_2").alias("id_b"),
-            x.getField("_3").alias("name_a"), y.getField("_3").alias("name_b"))))))
-        .alias("p"))
-      .select(col("p.id_a"), col("p.id_b"), col("p.name_a"), col("p.name_b"))
+    CandidatePairs.within(postings.repartition(parts), "ps")
+      .select(col("a._2").alias("id_a"), col("b._2").alias("id_b"),
+        col("a._3").alias("name_a"), col("b._3").alias("name_b"))
       .withColumn("dist", levenshtein(col("name_a"), col("name_b")))
       .filter(col("dist") <= maxDist)
       .distinct()
@@ -135,7 +132,8 @@ object EntityResolution {
     * compose with a `min_by(dist)`/row_number top-1 when a best-match link is
     * wanted. The block cap is applied to the COMBINED (left + right) key
     * frequency: a key hot on either side is what makes the block product
-    * explode.
+    * explode. A block at the cap holds postings of `maxBlock` records in all;
+    * its left × right pairs stream through the verify, never all held at once.
     */
   def blockedFuzzyJoin(
       left: DataFrame,
@@ -148,7 +146,7 @@ object EntityResolution {
     // same one-shuffle posting shape as blockedFuzzyPairs, with the two sides
     // tagged into ONE bounded collect (side 0 = left, 1 = right) — the cap
     // applies to the COMBINED block size exactly as the old union-count did,
-    // and pair expansion crosses the side-0 slice with the side-1 slice
+    // and CandidatePairs.across streams the side-0 slice × the side-1 slice
     // map-side. verify-before-dedup + the explicit-count repartition: ditto.
     def toks(df: DataFrame, side: Int): DataFrame = df
       .select(col(idCol).alias("id"), col(nameCol).alias("name"))
@@ -162,14 +160,9 @@ object EntityResolution {
         filter(col("ps"), p => p.getField("_1") === 1).alias("rs"))
       .filter(size(col("ls")) >= 1 && size(col("rs")) >= 1)
     val parts = left.sparkSession.sparkContext.defaultParallelism
-    postings.repartition(parts)
-      .select(explode(flatten(transform(col("ls"), a =>
-        transform(col("rs"), b => struct(
-          a.getField("_2").alias("left_id"), b.getField("_2").alias("right_id"),
-          a.getField("_3").alias("left_name"), b.getField("_3").alias("right_name"))))))
-        .alias("p"))
-      .select(col("p.left_id"), col("p.right_id"),
-        col("p.left_name"), col("p.right_name"))
+    CandidatePairs.across(postings.repartition(parts), "ls", "rs")
+      .select(col("a._2").alias("left_id"), col("b._2").alias("right_id"),
+        col("a._3").alias("left_name"), col("b._3").alias("right_name"))
       .withColumn("dist", levenshtein(col("left_name"), col("right_name")))
       .filter(col("dist") <= maxDist)
       .distinct()

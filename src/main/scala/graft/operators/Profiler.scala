@@ -28,7 +28,8 @@ import org.apache.spark.sql.types.NumericType
   * shape's 70 MB with a 2.5x smaller peak stage (tools.ProfileShapes). Each
   * column is scanned twice (stats + distinct), but columnar pruning keeps that
   * to the column's own bytes — the exchange, not the scan, is what dies at
-  * 100 TB (guide §2.3).
+  * 100 TB (guide §2.3). Because `exactDistinct` reads `df` in two subtrees, it
+  * assumes a stable batch source: persist `df` first when it is not a file scan.
   */
 object Profiler {
 

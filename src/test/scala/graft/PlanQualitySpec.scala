@@ -336,6 +336,18 @@ class PlanQualitySpec extends AnyFunSuite {
     }
   }
 
+  test("pair-producing entries stream candidate pairs: no flatten( in the plan") {
+    // explode(flatten(transform(...))) builds a posting's C(n,2) pairs as one
+    // array in one row before exploding them; the streamed form holds O(n)
+    for (name <- Seq("d2_dedup_minhash", "d3_dedup_simhash", "d4_ngram_jaccard",
+        "er1_fuzzy_pairs", "er3_fuzzy_link", "mm6_image_neardup", "mm7_audio_neardup",
+        "mm9_video_neardup")) {
+      val plan = executedPlan(name)
+      assert(plan.contains("Generate"), s"$name\n${plan.take(2500)}")
+      assert(!plan.contains("flatten("), s"$name\n${plan.take(2500)}")
+    }
+  }
+
   test("t20: the classifier vote table broadcasts (fixed-bucket trick)") {
     val df = SparkEntry.queries("t20_quality_classifier")(spark, dir)
     val plan = df.queryExecution.executedPlan.toString

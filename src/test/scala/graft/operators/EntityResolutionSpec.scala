@@ -57,6 +57,44 @@ class EntityResolutionSpec extends AnyFunSuite {
     assert(capped === Set((1L, 2L)))
   }
 
+  test("block cap boundary: exactly maxBlock records are verified, one more drops the block") {
+    // every name is "blk <code>", a code spelling 4 digits as letter triples, so
+    // "blk" is the only blocking key two records share; the planted records
+    // append a letter to a base code (distance 1 from it)
+    val maxBlock = 2000
+    def code(i: Int) = f"$i%04d".map(d => s"${('a' + (d - '0')).toChar}" * 3).mkString
+    val planted = (0 until 5).map(k => (100000L + k, s"blk ${code(k * 101)}z"))
+    val atCap = (0 until maxBlock - planted.size).map(i => (i.toLong, s"blk ${code(i)}")) ++
+      planted
+    val want = (0 until 5).map(k => (k * 101L, 100000L + k)).toSet
+
+    def lev(a: String, b: String): Int = {
+      var prev = Array.range(0, b.length + 1)
+      for (i <- 1 to a.length) {
+        val cur = new Array[Int](b.length + 1)
+        cur(0) = i
+        for (j <- 1 to b.length)
+          cur(j) = math.min(math.min(cur(j - 1), prev(j)) + 1,
+            prev(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1))
+        prev = cur
+      }
+      prev(b.length)
+    }
+    val close = for {
+      i <- atCap.indices
+      j <- (i + 1) until atCap.size
+      if lev(atCap(i)._2, atCap(j)._2) <= 2
+    } yield (atCap(i)._1, atCap(j)._1)
+    assert(close.toSet === want, "fixture: the planted pairs are the only close ones")
+
+    def pairs(rs: Seq[(Long, String)]) =
+      EntityResolution.blockedFuzzyPairs(rs.toDF("id", "name"), "name", "id",
+          maxDist = 2, maxBlock = maxBlock, blocking = "token")
+        .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs(atCap) === want)
+    assert(pairs(atCap :+ ((999999L, s"blk ${code(9999)}"))) === Set.empty[(Long, Long)])
+  }
+
   test("bigram blocking: recall contract = one intact adjacent bigram") {
     val b = Seq(
       (1L, "alpha beta gamma delta"),
