@@ -14,7 +14,8 @@ import graft.semantics.{ManifestExtractor, Substitution, Validator}
   * and the v3 HTTP routes, ibis-server/app/routers/v3/connector.py:70-247): deploy a
   * manifest, then run SQL written against model names. Execution is Spark itself (the
   * reference's Mode::LocalRuntime analogue, wren-core/core/src/mdl/context.rs:119-128);
-  * there is no unparse-to-dialect layer because Catalyst plans and executes directly.
+  * `transformSql(sql, dialect)` unparses the optimized plan to another engine's SQL
+  * (the reference's Mode::Unparse).
   */
 object GraftEngine {
 
@@ -181,14 +182,6 @@ final class GraftSession(
   def query(sql: String, props: Map[String, String]): DataFrame =
     withProperties(props).query(sql)
 
-  /** Execute user SQL written against model/view names. `limit` clamps the result like
-    * the reference's pushdown_limit (wren-core-py/src/context.rs:271-320).
-    *
-    * Permission UX (the reference's two-phase PermissionAnalyze, mdl/mod.rs:497-592):
-    * a CLAC-dropped column fails Spark analysis as "column not found"; when the
-    * column *does* exist in the manifest, that error is converted into an explicit
-    * access-denied message instead of a confusing resolution failure.
-    */
   /** Warm-path plan cache: raw SQL → its ANALYZED plan, plus the OPTIMIZED plan when
     * the query is time-stable. Analysis (view expansion, resolution, access checks)
     * and optimization are each deterministic for a fixed deployment + property set
@@ -226,6 +219,14 @@ final class GraftSession(
     stable
   }
 
+  /** Execute user SQL written against model/view names. `limit` clamps the result like
+    * the reference's pushdown_limit (wren-core-py/src/context.rs:271-320).
+    *
+    * Permission UX (the reference's two-phase PermissionAnalyze, mdl/mod.rs:497-592):
+    * a CLAC-dropped column fails Spark analysis as "column not found"; when the
+    * column *does* exist in the manifest, that error is converted into an explicit
+    * access-denied message instead of a confusing resolution failure.
+    */
   def query(sql: String, limit: Option[Int] = None): DataFrame = {
     val key = (sql, limit)
     val hit = planCache.get(key)
@@ -263,9 +264,10 @@ final class GraftSession(
     // A6 partial-model pruning: drop engine-generated to-one join sides the query
     // never references (see PartialModelPruner) — then cache the pruned plan.
     val pruned = graft.planner.PartialModelPruner.prune(limited.queryExecution.analyzed)
-    val out = Bridge.ofRows(spark, pruned)
-    // Optimize eagerly on the miss path (execution would anyway) so warm hits can
-    // skip the optimizer entirely; time-sensitive plans cache analyzed-only.
+    val out = Bridge.ofRowsAnalyzed(spark, pruned)
+    // The one optimization of this plan: execution and the dialect dry-plan both
+    // read it from `out`, and warm hits reuse it. Time-sensitive plans cache
+    // analyzed-only and optimize per call.
     val optimized =
       if (timeStable(pruned))
         scala.util.Try(out.queryExecution.optimizedPlan).toOption
@@ -292,16 +294,19 @@ final class GraftSession(
   def transformSql(sql: String, dialect: String): String =
     if (dialect == null || dialect.isEmpty || dialect == "plan") transformSql(sql)
     else {
+      // an unknown dialect is rejected before any planning
+      val target = graft.semantics.SqlUnparser.dialectFor(dialect)
       val qe = query(sql).queryExecution
-      // Optimize the analyzed plan directly, skipping QueryExecution's
-      // cached-data substitution: the emitted text must rebuild from the
-      // SOURCES on whatever engine runs it — an InMemoryRelation swapped in
-      // because some earlier job cached an overlapping scan is local session
-      // state, not part of the query's meaning.
-      val optimized = spark.sessionState.optimizer.execute(qe.analyzed)
-      graft.semantics.SqlUnparser.unparse(optimized,
-        qe.analyzed.output.map(_.name),
-        graft.semantics.SqlUnparser.dialectFor(dialect))
+      // The emitted text must rebuild from the SOURCES on whatever engine runs
+      // it: an InMemoryRelation swapped in because some job cached an
+      // overlapping scan is local session state, not part of the query's
+      // meaning. Only such a plan is optimized again, without that substitution.
+      val held = qe.optimizedPlan
+      val inMemory = held.collectWithSubqueries {
+        case m: org.apache.spark.sql.execution.columnar.InMemoryRelation => m
+      }.nonEmpty
+      val optimized = if (inMemory) spark.sessionState.optimizer.execute(qe.analyzed) else held
+      graft.semantics.SqlUnparser.unparse(optimized, qe.analyzed.output.map(_.name), target)
     }
 
   /** Plan without executing; throws on invalid SQL / access violations (the `/dry-run`

@@ -21,9 +21,10 @@ import graft.planner.PathResolver
   *   - `POST /v3/connector/{ds}/query[?dryRun=true][&limit=n]` — body
   *     `{"sql": ..., "manifestStr": <json-or-base64>}`; dry run answers 204 with no
   *     body, otherwise the v3 result JSON (columns/data/dtypes).
-  *   - `POST /v3/connector/{ds}/dry-plan` — the planned/analyzed form of the SQL
-  *     (the engine's `transformSql`; there is no unparse-to-dialect layer because
-  *     Spark executes the plan directly).
+  *   - `POST /v3/connector/{ds}/dry-plan` — the planned form of the SQL (the
+  *     engine's `transformSql`): with a `dialect`, the optimized plan unparsed to
+  *     that dialect's SQL (the reference's Mode::Unparse); without one, the
+  *     Catalyst plan dump.
   *   - `POST /v3/connector/{ds}/validate/{rule}` — `column_is_valid` /
   *     `relationship_is_valid` / `rlac_condition_syntax_is_valid` /
   *     `cube_hierarchy_is_valid` probes; 204 when valid, 422 with the message.
@@ -451,17 +452,18 @@ final class GraftHttpServer(
           case "dry-plan" :: Nil =>
             val sql = jstr(body \ "sql")
               .getOrElse(throw new IllegalArgumentException("sql is required"))
-            // optional dialect: spark|duckdb|postgres|mysql|bigquery|clickhouse
-            // → unparsed SQL
-            // text (the reference's Mode::Unparse); absent → Catalyst plan dump
+            // optional dialect: spark|duckdb|postgres|mysql|bigquery|clickhouse|
+            // snowflake|mssql|oracle|trino|redshift (plus the aliases
+            // SqlUnparser.dialectFor accepts) → unparsed SQL text (the
+            // reference's Mode::Unparse); absent → Catalyst plan dump
             val dialect = jstr(body \ "dialect").getOrElse("plan")
             respond(ex, 200, session(manifestStr, props).transformSql(sql, dialect),
               "text/plain")
 
           case "model-substitute" :: Nil =>
             // The reference answers with rewritten SQL text (connector.py:482-540);
-            // this engine has no unparse layer (plans execute directly), so the
-            // substituted plan's RESULT is returned in the v3 response shape.
+            // this route returns the substituted plan's RESULT in the v3 response
+            // shape (dialect SQL text for a model query comes from /dry-plan).
             val sql = jstr(body \ "sql")
               .getOrElse(throw new IllegalArgumentException("sql is required"))
             val df = session(manifestStr, props).querySubstituted(sql)

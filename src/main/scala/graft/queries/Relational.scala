@@ -64,6 +64,11 @@ object Relational {
   // money → exact decimal
   private def dec(c: String) = s"cast($c as decimal(18,2))"
 
+  /** The lineitem columns `q28_profile` profiles, each with whether it is numeric. */
+  val q28Columns: Seq[(String, Boolean)] = Seq(
+    "l_quantity" -> true, "l_extendedprice" -> true, "l_orderkey" -> true,
+    "l_returnflag" -> false)
+
   val defs: Seq[(String, ((SparkSession, String) => DataFrame, String))] = Seq(
 
     // --- aggregation: TPC-H Q1 shape (group-by + multi-agg + filter) ---
@@ -490,7 +495,7 @@ object Relational {
       import org.apache.spark.sql.functions.col
       graft.operators.Profiler.profile(
           s.read.parquet(s"$dir/lineitem.parquet"),
-          Seq("l_quantity", "l_extendedprice", "l_orderkey", "l_returnflag"),
+          q28Columns.map(_._1),
           exactDistinct = true)
         .select(col("column").alias("column_name"), col("n_rows"), col("n_nulls"),
           col("n_distinct"), col("min_value"), col("max_value"), col("mean_value"))
@@ -507,8 +512,7 @@ object Relational {
            |  $mean AS mean_value
            |FROM lineitem""".stripMargin
       }
-      Seq(prof("l_quantity", true), prof("l_extendedprice", true),
-        prof("l_orderkey", true), prof("l_returnflag", false))
+      q28Columns.map { case (c, numeric) => prof(c, numeric) }
         .mkString("", "\nUNION ALL\n", "\nORDER BY column_name")
     })),
 

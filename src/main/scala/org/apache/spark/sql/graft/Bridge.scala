@@ -20,6 +20,18 @@ object Bridge {
   def rebind(df: DataFrame, spark: SparkSession): DataFrame =
     ofRows(spark, df.queryExecution.analyzed)
 
+  /** DataFrame over a plan whose names and types are already resolved but whose
+    * nodes were rebuilt after analysis (partial-model pruning): the analyzer's
+    * final check runs on it and the plan is marked analyzed, so the analyzer's
+    * rule batches do not run over it a second time.
+    */
+  def ofRowsAnalyzed(spark: SparkSession, plan: LogicalPlan): DataFrame = {
+    val cs = spark.asInstanceOf[ClassicSession]
+    cs.sessionState.analyzer.checkAnalysis(plan)
+    plan.setAnalyzed()
+    Dataset.ofRows(cs, plan)
+  }
+
   /** DataFrame over an ALREADY analyzed + optimized plan pair: the QueryExecution's
     * analysis and optimization phases are pinned to the supplied plans, so the warm
     * path pays neither (the optimizer alone is ~half of warm planning latency).

@@ -224,6 +224,12 @@ class SqlUnparserSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       session.transformSql("SELECT 1", "oracle9i")
     }
+    // rejected before planning: no plan-cache lookup, no cached plan
+    val before = session.planCacheStats
+    intercept[IllegalArgumentException] {
+      session.transformSql(s"SELECT o_orderkey FROM m_orders -- ${System.nanoTime()}", "oracle9i")
+    }
+    assert(session.planCacheStats == before)
     assert(session.transformSql("SELECT o_orderkey FROM m_orders LIMIT 1", "plan")
       .contains("GlobalLimit"))
   }

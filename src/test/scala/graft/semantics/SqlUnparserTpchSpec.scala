@@ -1,8 +1,12 @@
 package graft.semantics
 
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.RuleExecutor
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{GraftEngine, TestSpark}
+import graft.{GraftEngine, GraftSession, TestSpark}
+import graft.planner.PathResolver
 import graft.queries.TpcH
 
 /** The unparser must be able to express EVERY TPC-H optimized plan: for each of
@@ -18,16 +22,91 @@ class SqlUnparserTpchSpec extends AnyFunSuite {
   private lazy val session =
     GraftEngine.deployOnDir(spark, TpcH.manifest, TestSpark.sfDir)
 
+  private def holdsInMemory(plan: LogicalPlan): Boolean =
+    plan.collectWithSubqueries { case m: InMemoryRelation => m }.nonEmpty
+
+  /** The "spark" dry-plan of `sql` on `sess` scans sources, never an in-memory
+    * relation, and replays on a bare session to the engine's own rows.
+    */
+  private def assertSourceText(sess: GraftSession, sql: String): Unit = {
+    val text = sess.transformSql(sql, "spark")
+    assert(text.contains("parquet.") && !text.contains("InMemory"),
+      s"expected source scans only, got:\n$text")
+    assert(spark.sql(text).collect().map(_.toString).sorted.toSeq ==
+      sess.query(sql).collect().map(_.toString).sorted.toSeq, s"\n$text")
+  }
+
+  private def unique(name: String): String =
+    s"${TpcH.oracles(name)} -- ${System.nanoTime()}"
+
   test("unparse is cache-independent: a cached overlapping scan must not leak InMemoryRelation") {
     val cached = spark.read.parquet(s"${TestSpark.sfDir}/lineitem.parquet").persist()
     cached.count() // materialize so CacheManager substitutes matching subplans
+    try assertSourceText(session, TpcH.oracles("tpch_q6"))
+    finally { cached.unpersist(); () }
+  }
+
+  test("dry-plan hit after an overlapping persist still scans sources") {
+    val sql = unique("tpch_q6")
+    assertSourceText(session, sql) // the miss, planned with nothing cached
+    val cached = spark.read.parquet(s"${TestSpark.sfDir}/lineitem.parquet").persist()
+    cached.count()
+    try assertSourceText(session, sql)
+    finally { cached.unpersist(); () }
+  }
+
+  test("dry-plan hit after the scan it was planned under is unpersisted scans sources") {
+    val sql = unique("tpch_q6")
+    val cached = spark.read.parquet(s"${TestSpark.sfDir}/lineitem.parquet").persist()
     try {
-      val sql = TpcH.oracles("tpch_q6")
-      val text = session.transformSql(sql, "spark")
-      assert(text.contains("parquet."), s"expected a source scan, got:\n$text")
-      assert(spark.sql(text).collect().map(_.toString).sorted.toSeq ==
-        session.query(sql).collect().map(_.toString).sorted.toSeq)
+      cached.count()
+      assert(holdsInMemory(session.query(sql).queryExecution.optimizedPlan),
+        "the miss should have planned over the cached scan")
     } finally { cached.unpersist(); () }
+    assertSourceText(session, sql)
+  }
+
+  test("dry-plan of a cached:true model scans sources") {
+    val m = TpcH.manifest.copy(models = TpcH.manifest.models.map(mm =>
+      if (mm.name == "nation") mm.copy(cached = true) else mm))
+    val sess = GraftEngine.deploy(spark, m, new PathResolver(TestSpark.sfDir))
+    try {
+      val sql = "SELECT n_nationkey, n_name, n_regionkey FROM nation WHERE n_regionkey = 1"
+      assert(holdsInMemory(sess.query(sql).queryExecution.optimizedPlan),
+        "a cached model should plan as an in-memory scan")
+      assertSourceText(sess, sql)
+      assertSourceText(sess, sql) // and again on the plan-cache hit
+    } finally { sess.modelDF("nation").unpersist(); () }
+  }
+
+  /** Total runs of each named analyzer/optimizer rule since the last
+    * `RuleExecutor.resetMetrics()`, read from Spark's global rule meter (the
+    * suites run one at a time in one JVM, so no other query moves it).
+    */
+  private def ruleRuns(rules: String*): Map[String, Long] = {
+    val dump = RuleExecutor.dumpTimeSpent().linesIterator.toSeq
+    rules.map { r =>
+      val line = dump.find(_.trim.startsWith(r + " "))
+      r -> line.map(_.trim.split("\\s+").last.toLong).getOrElse(0L)
+    }.toMap
+  }
+
+  test("a dialect dry-plan analyzes and optimizes once on a miss, neither on a hit") {
+    val finish = "org.apache.spark.sql.catalyst.optimizer.Optimizer$FinishAnalysis"
+    val lookup = "org.apache.spark.sql.catalyst.analysis.Analyzer$LookupFunctions"
+    val sql = unique("tpch_q3")
+    val deployed = session // deploy first: it plans every model
+    RuleExecutor.resetMetrics()
+    val missText = deployed.transformSql(sql, "duckdb")
+    val miss = ruleRuns(finish, lookup)
+    RuleExecutor.resetMetrics()
+    val hitText = deployed.transformSql(sql, "duckdb")
+    val hit = ruleRuns(finish, lookup)
+    assert(hitText == missText)
+    assert(miss(finish) == 1, s"optimizations on a miss: $miss")
+    assert(miss(lookup) == 1, s"analyses on a miss: $miss")
+    assert(hit(finish) == 0, s"optimizations on a hit: $hit")
+    assert(hit(lookup) == 0, s"analyses on a hit: $hit")
   }
 
   test("duckdb dialect: every TPC-H query unparses (cross-engine breadth gate)") {
