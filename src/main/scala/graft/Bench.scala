@@ -3,22 +3,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .getOrCreate()
-    // ERROR, not WARN: the bench's final summary line must land inside the
-    // driver's 2000-char output tail, and sbt interleaves Spark's stderr WARNs
-    // into that capture (BENCH_r3–r6 `parsed: null` show a tail of
-    // SimpleFunctionRegistry WARNs from the per-deploy function re-registration
-    // that deploys no longer do — other WARNs can still crowd the tail).
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkProfile.session("graft-bench")
     // Warm the session (codegen, file listing, shuffle service) outside the timings.
     try {
       spark.sql("select count(*) c from range(1000)").collect()

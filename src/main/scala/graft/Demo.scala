@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Example usage / smoke driver: deploys the semantic manifest, runs the flagship
   * query, and exercises the access-control error paths. `runMain graft.Demo [sfDir]`.
   */
 object Demo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkProfile.session("graft-demo")
 
     println("== flagship entry(spark) ==")
     SparkEntry.entry(spark).show(10, truncate = false)

@@ -1,17 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch profiler for warm planning latency (not part of the driver contract). */
 object PlanProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .appName("graft-planprofile").master("local[4]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkProfile.session("graft-planprofile")
     val session = GraftEngine.deployOnDir(spark, queries.TpcH.manifest, sfDir)
     val sqls = queries.TpcH.oracles.values.toSeq
     // the deployment's views live in its own session; the raw-Spark timings below

@@ -2,7 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.SparkSession
 
-import graft.GraftEngine
+import graft.{GraftEngine, SparkProfile}
 import graft.planner.PathResolver
 
 /** One-shot CLI over the engine — the reference's `wren` CLI/SDK surface
@@ -104,13 +104,7 @@ object Cli {
     val quiet = flags.contains("--quiet")
     val mode = flags.filterNot(_ == "--quiet")
       .headOption.map(_.stripPrefix("--")).getOrElse("table")
-    val spark = SparkSession.builder()
-      .appName("graft-cli").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkProfile.session("graft-cli")
     println(run(spark, pos(0), pos(1), pos(2), mode, propPairs))
     // the store-tip follows executed queries only (not plan/dry-run), and
     // --quiet suppresses it — reference `wren --sql ... [--quiet]` behavior

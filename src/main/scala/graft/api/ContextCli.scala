@@ -148,13 +148,7 @@ object ContextCli {
         val schemaNs = opt("schema").getOrElse("draft")
         val probeRows = opt("probe-rows").map(_.toLong).getOrElse(1000000L)
         val probeBytes = opt("probe-mb").map(_.toLong << 20).getOrElse(256L << 20)
-        val spark = org.apache.spark.sql.SparkSession.builder()
-          .appName("graft-generate-mdl").master("local[8]")
-          .config("spark.sql.shuffle.partitions", 8)
-          .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("ERROR")
+        val spark = graft.SparkProfile.session("graft-generate-mdl")
         val draft =
           if (from.startsWith("jdbc:"))
             graft.mdl.GenerateMdl.fromJdbc(spark, from,
@@ -207,13 +201,7 @@ object ContextCli {
               case Array(c) => "*" -> c
             }
           }.toMap).getOrElse(Map.empty)
-        val spark = org.apache.spark.sql.SparkSession.builder()
-          .appName("graft-ingest").master("local[8]")
-          .config("spark.sql.shuffle.partitions", 8)
-          .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("ERROR")
+        val spark = graft.SparkProfile.session("graft-ingest")
         val landed = graft.mdl.LandRaw.land(
           spark, from, dataDir, disposition, mergeKeys)
         val draft = graft.mdl.GenerateMdl.fromParquetDir(
@@ -298,13 +286,7 @@ object ContextCli {
           Files.write(rawDir.resolve(f), sb.toString.getBytes("UTF-8")) }
         // the ingest loop, end-to-end (same machinery as `ingest`)
         val dataDir = projectPath.resolve("landed").toString
-        val spark = org.apache.spark.sql.SparkSession.builder()
-          .appName("graft-quickstart").master("local[8]")
-          .config("spark.sql.shuffle.partitions", 8)
-          .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("ERROR")
+        val spark = graft.SparkProfile.session("graft-quickstart")
         val landed = graft.mdl.LandRaw.land(spark, rawDir.toString, dataDir)
         val draft = graft.mdl.GenerateMdl.fromParquetDir(
           spark, dataDir, "graft", "demo")

@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
-import graft.GraftEngine
+import graft.{GraftEngine, SparkProfile}
 import graft.planner.PathResolver
 
 /** Thin HTTP façade over the engine library, mirroring the reference's production
@@ -550,11 +550,7 @@ object GraftHttpServer {
 object Serve {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Serve <dataDir> [port]")
-    val spark = SparkSession.builder()
-      .appName("graft-serve").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = SparkProfile.session("graft-serve")
     val server = new GraftHttpServer(spark, args(0), if (args.length > 1) args(1).toInt else 8000)
     val port = server.start()
     println(s"graft engine listening on http://127.0.0.1:$port/v3/connector/spark/query")

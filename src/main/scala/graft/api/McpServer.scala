@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
-import graft.{GraftEngine, GraftSession}
+import graft.{GraftEngine, GraftSession, SparkProfile}
 import graft.planner.PathResolver
 
 /** MCP (Model Context Protocol) server over the engine — the reference ships the
@@ -330,13 +330,7 @@ final class McpServer(
 object Mcp {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Mcp <dataDir>")
-    val spark = SparkSession.builder()
-      .appName("graft-mcp").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR") // stdout belongs to the protocol
+    val spark = SparkProfile.session("graft-mcp") // logs at ERROR: stdout belongs to the protocol
     new McpServer(spark, args(0)).serve(System.in, System.out)
   }
 }

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
+import graft.SparkProfile
 import graft.mdl.{Manifest, ManifestJson}
 import graft.memory._
 
@@ -223,12 +224,7 @@ object MemoryCli {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .appName("graft-memory-cli").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkProfile.session("graft-memory-cli")
     println(run(spark, args.toSeq))
     spark.stop()
   }

@@ -973,13 +973,7 @@ object Semantic {
     * smallest SF).
     */
   def pgUnparseOracles: Map[String, String] = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val session = GraftEngine.deployOnDir(spark, manifest, "/root/testdata/sf0.001")
+    val session = GraftEngine.deployOnDir(SparkSession.active, manifest, "/root/testdata/sf0.001")
     val live = crossCorpus.flatMap { case (n, d, sql) =>
       try Some(n -> session.transformSql(sql, d))
       catch { case e: Exception =>

@@ -484,18 +484,14 @@ object TpcH {
   /** Live-generated DuckDB texts for [[unparseQueries]]. The emitted relation
     * names are path-independent (`basename.parquet` → bare table name), so the
     * manifest is deployed on the smallest SF purely to plan — the driver binds
-    * the text to whatever SF it verifies at. A query the dialect cannot express
-    * is OMITTED (driver falls back to a rows-only check) and logged — and
-    * SqlUnparserTpchSpec fails, so a coverage regression cannot land silently.
+    * the text to whatever SF it verifies at. It plans on the caller's active
+    * session: a session builder here would rewrite that session's runtime
+    * confs. A query the dialect cannot express is OMITTED (driver falls back
+    * to a rows-only check) and logged — and SqlUnparserTpchSpec fails, so a
+    * coverage regression cannot land silently.
     */
   def unparseOracles: Map[String, String] = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val session = GraftEngine.deployOnDir(spark, manifest, "/root/testdata/sf0.001")
+    val session = GraftEngine.deployOnDir(SparkSession.active, manifest, "/root/testdata/sf0.001")
     defs.flatMap { case (n, (_, sql)) =>
       try Some(s"${n}_unparse" -> session.transformSql(sql, "duckdb"))
       catch { case e: Exception =>
@@ -539,13 +535,7 @@ object TpcH {
       yield s"${n}_translit_$d" -> fn).toMap
 
   def translitOracles: Map[String, String] = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val session = GraftEngine.deployOnDir(spark, manifest, "/root/testdata/sf0.001")
+    val session = GraftEngine.deployOnDir(SparkSession.active, manifest, "/root/testdata/sf0.001")
     (for ((n, (_, sql)) <- defs; d <- translitDialects
           if !translitSkip((n, d)))
       yield

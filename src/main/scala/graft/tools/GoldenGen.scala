@@ -2,9 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.SparkSession
-
-import graft.GraftEngine
+import graft.{GraftEngine, SparkProfile}
 import graft.queries.{Semantic, TpcH}
 
 /** Golden-text generator for the unparse layer: renders the m21–m25 semantic
@@ -33,13 +31,7 @@ object GoldenGen {
 
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("src/test/resources/goldens")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkProfile.session("graft-goldengen")
     val sem = GraftEngine.deployOnDir(spark, Semantic.manifest, "/root/testdata/sf0.001")
     var n = 0
     def write(dialect: String, name: String, text: String): Unit = {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry
@@ -31,16 +31,8 @@ object GraphErScaleSmoke {
     // dedup-decade protocol), so the claim under test is per-PARTITION
     // flatness, the quantity that decides executor memory on a real cluster
     val parts = sys.env.getOrElse("SPARK_GRAFT_SCALE_PARTITIONS", "32").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", parts.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkProfile.session("graft-gescalesmoke")
+    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
     val meter = new SmokeMeter
     spark.sparkContext.addSparkListener(meter)
     val work = java.nio.file.Files.createTempDirectory("graft_gescale_").toString

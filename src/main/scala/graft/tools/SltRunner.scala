@@ -433,14 +433,7 @@ object SltRunner {
 
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse(DefaultRoot)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-slt")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkProfile.session("graft-slt")
     val (outcomes, skips) = runAll(spark, root)
     val byFile = outcomes.groupBy(_.file).toSeq.sortBy(_._1)
     byFile.foreach { case (f, os) =>

@@ -2,16 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (Spark startup dominates test time). */
+/** One shared local session for all suites (Spark startup dominates test time).
+  * It runs the shipped profile at a fixed 4 cores, so test partitioning is the
+  * same on any machine.
+  */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val s = SparkSession.builder().config(SparkProfile.settings(4)).getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

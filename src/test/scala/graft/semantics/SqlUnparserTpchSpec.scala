@@ -114,7 +114,15 @@ class SqlUnparserTpchSpec extends AnyFunSuite {
     // hash-compares against Spark running the source (tpch_qN_unparse entries);
     // this test pins the coverage so a dialect regression fails the build
     // instead of silently downgrading 22 entries to rows-only checks.
-    val generated = TpcH.unparseOracles
+    // The oracles plan on the caller's session and leave its confs alone.
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    val generated =
+      try {
+        val g = TpcH.unparseOracles
+        assert(spark.conf.get("spark.sql.shuffle.partitions") == "3")
+        g
+      } finally spark.conf.set("spark.sql.shuffle.partitions", partitions)
     val missing = TpcH.oracles.keySet.map(_ + "_unparse") -- generated.keySet
     assert(missing.isEmpty, s"duckdb unparse lost coverage for: $missing")
     generated.foreach { case (n, text) =>

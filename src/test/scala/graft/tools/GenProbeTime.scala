@@ -1,17 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch: time GenerateMdl's phases (round-14 m40 latency adjudication). */
 object GenProbeTime {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkProfile.session("graft-genprobetime")
     spark.sql("select count(*) from range(100)").collect()
     def t[A](what: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f

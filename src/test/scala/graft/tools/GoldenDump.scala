@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.GraftEngine
+import graft.{GraftEngine, SparkProfile}
 import graft.queries.Semantic
 
 /** Print the m21-m25 corpus rendered in a target dialect, for pinning as
@@ -15,13 +13,7 @@ object GoldenDump {
   def main(args: Array[String]): Unit = {
     val dialect = if (args.length > 0) args(0) else "trino"
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkProfile.session("graft-goldendump")
     val session = GraftEngine.deployOnDir(spark, Semantic.manifest, sfDir)
     for ((n, sql) <- Seq("m21" -> Semantic.m21Sql, "m22" -> Semantic.m22Sql,
         "m23" -> Semantic.m23Sql, "m24" -> Semantic.m24Sql,

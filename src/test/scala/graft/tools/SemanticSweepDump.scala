@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.GraftEngine
+import graft.{GraftEngine, SparkProfile}
 import graft.queries.Semantic
 import graft.semantics.SemanticUnparseGrammar
 
@@ -19,13 +17,7 @@ object SemanticSweepDump {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val outDir = if (args.length > 1) args(1) else "/tmp/semantic_sweep"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkProfile.session("graft-semanticsweep")
     new java.io.File(outDir).mkdirs()
 
     // golden-only trio: fidelity-lossy transliterated copies alongside the

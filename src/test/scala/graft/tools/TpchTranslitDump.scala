@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.GraftEngine
+import graft.{GraftEngine, SparkProfile}
 import graft.queries.TpcH
 import graft.semantics.Transliterate
 
@@ -16,13 +14,7 @@ object TpchTranslitDump {
   def main(args: Array[String]): Unit = {
     val outDir = if (args.length > 0) args(0) else "/tmp/tpch_translit"
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkProfile.session("graft-tpchtranslit")
     new java.io.File(outDir).mkdirs()
     val session = GraftEngine.deployOnDir(spark, TpcH.manifest, sfDir)
     val sources = TpcH.defs.map { case (n, (_, sql)) => (n, sql) }

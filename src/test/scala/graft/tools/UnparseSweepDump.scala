@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.semantics.{SqlUnparser, SqlUnparserPropertyGrammar}
 
 /** Dump the 40-seed property grammar as (spark result, duckdb / postgres /
@@ -15,13 +13,7 @@ object UnparseSweepDump {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val outDir = if (args.length > 1) args(1) else "/tmp/unparse_sweep"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkProfile.session("graft-unparsesweep")
     new java.io.File(outDir).mkdirs()
     Seq("orders", "customer", "nation").foreach { t =>
       spark.read.parquet(s"$sfDir/$t.parquet").createOrReplaceTempView(t)
