@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.graft.Bridge
 
 import graft.api.{QueryCache, ResultFormatter}
@@ -83,10 +84,7 @@ final class QueryTimeoutException(msg: String) extends RuntimeException(msg)
   * cleared the whole map, cold-starting every cached tenant/plan at once.
   */
 private[graft] final class LruCache[K, V](capacity: Int) {
-  private val m = new java.util.LinkedHashMap[K, V](capacity * 2, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
-      size > capacity
-  }
+  private val m = LruCache.accessOrderedMap[K, V](capacity)
   private var hitN = 0L
   private var missN = 0L
   def get(k: K): V = m.synchronized {
@@ -101,6 +99,14 @@ private[graft] final class LruCache[K, V](capacity: Int) {
     */
   def stats: (Long, Long) = m.synchronized((hitN, missN))
   def resetStats(): Unit = m.synchronized { hitN = 0L; missN = 0L }
+}
+
+private[graft] object LruCache {
+  /** Access-order map that drops its least-recently-used entry past `capacity`. */
+  def accessOrderedMap[K, V](capacity: Int): java.util.Map[K, V] =
+    new java.util.LinkedHashMap[K, V](capacity * 2, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = this.size > capacity
+    }
 }
 
 object GraftSession {
@@ -182,19 +188,18 @@ final class GraftSession(
   def query(sql: String, props: Map[String, String]): DataFrame =
     withProperties(props).query(sql)
 
-  /** Warm-path plan cache: raw SQL → its ANALYZED plan, plus the OPTIMIZED plan when
-    * the query is time-stable. Analysis (view expansion, resolution, access checks)
-    * and optimization are each deterministic for a fixed deployment + property set
-    * (both fixed per GraftSession), so re-running either warm is pure overhead — and
-    * together they are nearly all of warm planning latency. The optimized plan is
-    * withheld (None) exactly when caching it would change semantics: plans carrying
-    * time-dependent foldables (current_timestamp & co. — the optimizer freezes them
-    * per-optimization) or non-deterministic expressions (rand, uuid) re-optimize per
-    * call so every execution gets fresh values.
+  /** Warm-path plan cache. An entry is a function of its key `(sql, limit)` alone:
+    * the pruned ANALYZED plan and, when the query is time-stable, that plan
+    * optimized over its sources only (on first use). Analysis and optimization are
+    * each deterministic for a fixed deployment + property set, so re-running either
+    * warm is pure overhead. In-memory substitution is not part of an entry: `query`
+    * consults the CacheManager each time a plan is used. Plans with time-dependent
+    * foldables (current_timestamp & co., which the optimizer freezes per run),
+    * non-deterministic expressions (rand, uuid) or streaming sources optimize per call.
     */
-  private final case class CachedPlan(
-      analyzed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      optimized: Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan])
+  private final class CachedPlan(val analyzed: LogicalPlan, val reusable: Boolean) {
+    lazy val optimized: LogicalPlan = Bridge.optimize(spark, analyzed)
+  }
 
   private val planCache = new LruCache[(String, Option[Int]), CachedPlan](256)
 
@@ -206,7 +211,7 @@ final class GraftSession(
     * to query-submission time — the set the optimizer's ComputeCurrentTime /
     * ReplaceExpressions freeze per optimization run.
     */
-  private def timeStable(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean = {
+  private def timeStable(plan: LogicalPlan): Boolean = {
     import org.apache.spark.sql.catalyst.expressions._
     var stable = true
     plan.transformAllExpressionsWithSubqueries {
@@ -219,21 +224,17 @@ final class GraftSession(
     stable
   }
 
-  /** Execute user SQL written against model/view names. `limit` clamps the result like
-    * the reference's pushdown_limit (wren-core-py/src/context.rs:271-320).
+  /** The plan-cache entry for `sql` clamped to `limit`, planned on a miss.
     *
     * Permission UX (the reference's two-phase PermissionAnalyze, mdl/mod.rs:497-592):
     * a CLAC-dropped column fails Spark analysis as "column not found"; when the
     * column *does* exist in the manifest, that error is converted into an explicit
     * access-denied message instead of a confusing resolution failure.
     */
-  def query(sql: String, limit: Option[Int] = None): DataFrame = {
+  private def plan(sql: String, limit: Option[Int]): CachedPlan = {
     val key = (sql, limit)
     val hit = planCache.get(key)
-    if (hit != null) return hit.optimized match {
-      case Some(opt) => Bridge.ofRowsPreOptimized(spark, hit.analyzed, opt)
-      case None => Bridge.ofRows(spark, hit.analyzed)
-    }
+    if (hit != null) return hit
     val df =
       try planner.runSql(sql)
       catch {
@@ -263,17 +264,23 @@ final class GraftSession(
     val limited = limit.map(df.limit).getOrElse(df)
     // A6 partial-model pruning: drop engine-generated to-one join sides the query
     // never references (see PartialModelPruner) — then cache the pruned plan.
-    val pruned = graft.planner.PartialModelPruner.prune(limited.queryExecution.analyzed)
-    val out = Bridge.ofRowsAnalyzed(spark, pruned)
-    // The one optimization of this plan: execution and the dialect dry-plan both
-    // read it from `out`, and warm hits reuse it. Time-sensitive plans cache
-    // analyzed-only and optimize per call.
-    val optimized =
-      if (timeStable(pruned))
-        scala.util.Try(out.queryExecution.optimizedPlan).toOption
-      else None
-    planCache.put(key, CachedPlan(pruned, optimized))
-    out
+    val pruned = Bridge.markAnalyzed(spark,
+      graft.planner.PartialModelPruner.prune(limited.queryExecution.analyzed))
+    val entry = new CachedPlan(pruned, timeStable(pruned) && !pruned.isStreaming)
+    planCache.put(key, entry)
+    entry
+  }
+
+  /** Execute user SQL written against model/view names. `limit` clamps the result like
+    * the reference's pushdown_limit (wren-core-py/src/context.rs:271-320). The cached
+    * source-only plan runs unless the CacheManager substitutes into the query; then
+    * Spark substitutes and optimizes, as for any query.
+    */
+  def query(sql: String, limit: Option[Int] = None): DataFrame = {
+    val p = plan(sql, limit)
+    if (p.reusable && !Bridge.substitutesCachedData(spark, p.analyzed))
+      Bridge.ofRowsPreOptimized(spark, p.analyzed, p.optimized)
+    else Bridge.ofRows(spark, p.analyzed)
   }
 
   /** The planned form of the SQL — the `/dry-plan` analogue. The reference returns
@@ -289,33 +296,23 @@ final class GraftSession(
     * `parquet.`path`` scans; `"duckdb"` emits DuckDB SQL over logical table
     * names; null/empty/`"plan"` return the Catalyst plan dump above; any other
     * name is rejected with IllegalArgumentException (HTTP 422), like the
-    * reference's unknown-dialect error.
+    * reference's unknown-dialect error. The text is unparsed from the source-only
+    * plan, so it rebuilds from the sources whatever the CacheManager holds.
     */
   def transformSql(sql: String, dialect: String): String =
     if (dialect == null || dialect.isEmpty || dialect == "plan") transformSql(sql)
     else {
       // an unknown dialect is rejected before any planning
       val target = graft.semantics.SqlUnparser.dialectFor(dialect)
-      val qe = query(sql).queryExecution
-      // The emitted text must rebuild from the SOURCES on whatever engine runs
-      // it: an InMemoryRelation swapped in because some job cached an
-      // overlapping scan is local session state, not part of the query's
-      // meaning. Only such a plan is optimized again, without that substitution.
-      val held = qe.optimizedPlan
-      val inMemory = held.collectWithSubqueries {
-        case m: org.apache.spark.sql.execution.columnar.InMemoryRelation => m
-      }.nonEmpty
-      val optimized = if (inMemory) spark.sessionState.optimizer.execute(qe.analyzed) else held
-      graft.semantics.SqlUnparser.unparse(optimized, qe.analyzed.output.map(_.name), target)
+      val p = plan(sql, None)
+      val optimized = if (p.reusable) p.optimized else Bridge.optimize(spark, p.analyzed)
+      graft.semantics.SqlUnparser.unparse(optimized, p.analyzed.output.map(_.name), target)
     }
 
   /** Plan without executing; throws on invalid SQL / access violations (the `/dry-run`
     * analogue, connector.py:110-123).
     */
-  def dryRun(sql: String): Unit = {
-    query(sql).queryExecution.assertAnalyzed()
-    ()
-  }
+  def dryRun(sql: String): Unit = { plan(sql, None); () }
 
   /** Strict-mode policy validation before planning (the reference SDK's
     * `validate_sql_policy`, wren/src/wren/policy.py:15-110): every table must be a

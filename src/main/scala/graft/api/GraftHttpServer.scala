@@ -2,7 +2,6 @@ package graft.api
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
@@ -48,8 +47,9 @@ import graft.planner.PathResolver
   * `app/mdl/rewriter.py:177-189`), exactly like the reference; `{ds}` is accepted
   * and ignored (a single Spark runtime serves every deployment here).
   *
-  * Deployments are cached per (manifest, properties) via the engine's own deploy
-  * cache semantics so repeated calls with the same manifest don't re-plan.
+  * Each manifest is deployed once, on its first request, and kept in a 64-entry
+  * LRU map; every other property set derives from that deployment through
+  * `GraftSession.withExactProperties`, so repeated calls do not re-deploy.
   */
 final class GraftHttpServer(
     spark: SparkSession, dataDir: String, port: Int = 0,
@@ -60,7 +60,8 @@ final class GraftHttpServer(
   // the JVM's first server is created; a value given at JVM start wins.
   sys.props.getOrElseUpdate("sun.net.httpserver.nodelay", "true")
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-  private val sessions = new ConcurrentHashMap[String, graft.GraftSession]
+  private val sessions: java.util.Map[String, graft.GraftSession] =
+    java.util.Collections.synchronizedMap(graft.LruCache.accessOrderedMap(64))
 
   /** Profile store behind the /v1/profile browser-form routes. */
   private lazy val profiles = new Profiles(profilesHome)
@@ -111,7 +112,9 @@ final class GraftHttpServer(
 
   def start(): Int = {
     server.createContext("/", (ex: HttpExchange) => handle(ex))
-    server.setExecutor(null) // single-threaded: Spark driver work serializes anyway
+    // one request at a time: the routes that mutate shared state still rely on
+    // it (ROADMAP item 4 orders the steps to a request pool)
+    server.setExecutor(null)
     server.start()
     server.getAddress.getPort
   }
@@ -200,8 +203,7 @@ final class GraftHttpServer(
           case e: RuntimeException if e.getCause == null && !e.isInstanceOf[IllegalArgumentException] =>
             throw new IllegalArgumentException(s"invalid manifest: ${e.getMessage}")
         }
-      if (sessions.size >= 64) sessions.clear() // crude bound: clears all (deployOnDir evicts LRU)
-      sessions.put(manifestStr, s)
+      sessions.put(manifestStr, s) // evicts the least recently used deployment
       s
     }
   }
@@ -250,13 +252,7 @@ final class GraftHttpServer(
       case ("GET", "config" :: Nil) =>
         respond(ex, 200, s"""{"diagnose":${GraftHttpServer.diagnose.get()}}""")
       case ("PATCH", "config" :: Nil) =>
-        val body =
-          try JsonMethods.parse(new String(ex.getRequestBody.readAllBytes(), UTF_8))
-          catch {
-            case e: com.fasterxml.jackson.core.JacksonException =>
-              throw new IllegalArgumentException(s"malformed JSON body: ${e.getOriginalMessage}")
-          }
-        body \ "diagnose" match {
+        parseBody(ex) \ "diagnose" match {
           case JBool(b) => GraftHttpServer.diagnose.set(b)
           case _ => // absent -> unchanged, like ConfigModel's optional field
         }
@@ -367,12 +363,7 @@ final class GraftHttpServer(
         respond(ex, 405, detail(s"method $m not allowed; use GET or POST"))
       case ("POST" | "GET", "v2" :: "analysis" :: which :: Nil)
           if which == "sql" || which == "sqls" =>
-        val body =
-          try JsonMethods.parse(new String(ex.getRequestBody.readAllBytes(), UTF_8))
-          catch {
-            case e: com.fasterxml.jackson.core.JacksonException =>
-              throw new IllegalArgumentException(s"malformed JSON body: ${e.getOriginalMessage}")
-          }
+        val body = parseBody(ex)
         val out =
           if (which == "sql") {
             val sql = jstr(body \ "sql")
@@ -388,12 +379,7 @@ final class GraftHttpServer(
       // Legacy v2 ds-less dry-plan (POST /v2/connector/dry-plan,
       // routers/v2/connector.py:336-354): plan the SQL with no datasource context.
       case ("POST", "v2" :: "connector" :: "dry-plan" :: Nil) =>
-        val body =
-          try JsonMethods.parse(new String(ex.getRequestBody.readAllBytes(), UTF_8))
-          catch {
-            case e: com.fasterxml.jackson.core.JacksonException =>
-              throw new IllegalArgumentException(s"malformed JSON body: ${e.getOriginalMessage}")
-          }
+        val body = parseBody(ex)
         val manifestStr = jstr(body \ "manifestStr")
           .getOrElse(throw new IllegalArgumentException("manifestStr is required"))
         val sql = jstr(body \ "sql")
@@ -405,12 +391,7 @@ final class GraftHttpServer(
       // (routers/v2/connector.py:66-384) — same DTO shape (sql/manifestStr body,
       // dryRun/cacheEnable/limit query params), same engine calls behind both.
       case ("POST", ("v2" | "v3") :: "connector" :: _ :: rest) =>
-        val body =
-          try JsonMethods.parse(new String(ex.getRequestBody.readAllBytes(), UTF_8))
-          catch {
-            case e: com.fasterxml.jackson.core.JacksonException =>
-              throw new IllegalArgumentException(s"malformed JSON body: ${e.getOriginalMessage}")
-          }
+        val body = parseBody(ex)
         val manifestStr = jstr(body \ "manifestStr")
           .getOrElse(throw new IllegalArgumentException("manifestStr is required"))
         val props = headerProperties(ex)

@@ -388,9 +388,11 @@ object Curation {
     // the index fingerprints feed THREE consumers — the sizing count, the Bloom
     // build, and the exact anti-join — and the batch fingerprints feed two
     // (probe-split branches). Snap both spill-safely so the fingerprint scan
-    // (regex + md5, the dominant per-row cost) runs once per side, not 3x/2x;
-    // the plans' RDDs are reclaimed by ContextCleaner once the caller's result
-    // is dropped (cf. Dedup.minHashNearDup).
+    // (regex + md5, the dominant per-row cost) runs once per side, not 3x/2x.
+    // Both snaps stay registered with the shared CacheManager until unpersist()
+    // or clearCache(), not until the caller drops the result; only a repeat over
+    // an identical input plan reuses them (cf. Dedup.minHashNearDup, ROADMAP
+    // item 5).
     val fps = existingFingerprints.select(col(fpCol).alias("__fp"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = if (expectedItems > 0) expectedItems else math.max(fps.count(), 1L)

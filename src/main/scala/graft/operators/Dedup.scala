@@ -365,10 +365,12 @@ object Dedup {
     * Signatures are the map-only native expression; verification joins the LSH
     * candidates against per-document hash SETS ([[shingleHashSets]] +
     * [[verifyJaccardSets]]) — the intersection is a map-side `array_intersect`, so
-    * nothing candidate×shingle-shaped ever shuffles. The sets cache is released
-    * when the returned plan's RDDs are garbage-collected (ContextCleaner); callers
-    * running many corpora through one session can force it earlier with
-    * `spark.catalog.clearCache()`.
+    * nothing candidate×shingle-shaped ever shuffles. The persisted sets are
+    * registered with the session's shared CacheManager, which keeps them until
+    * `unpersist()` or `spark.catalog.clearCache()`; dropping the result does not
+    * free them, and only a repeat over an identical input plan reuses the entry.
+    * Callers running many corpora through one session clear the cache themselves
+    * (ROADMAP item 5, operator intermediates).
     */
   def minHashNearDup(
       df: DataFrame, textCol: String, idCol: String,

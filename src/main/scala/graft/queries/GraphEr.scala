@@ -57,18 +57,8 @@ object GraphEr {
     * as id+500000 with its name's 4th character dropped (edit distance 1), the
     * d10 planted-copy pattern. Both engines build the identical record set.
     */
-  /** `reliable = true` swaps the eager localCheckpoint snap (executor-local
-    * blocks, lost on executor death) for checkpoint-dir-backed `checkpoint()`
-    * — the rankLoop escape hatch (GraphOps.scala), r15 verdict nit #3. The
-    * bench/gate entries keep the default: the snap is KBs and re-derivable;
-    * a 100 TB deployment sets a checkpoint dir and passes true.
-    */
   private[graft] def erRecords(
-      s: SparkSession, dir: String, guardSplit: Boolean = false,
-      reliable: Boolean = false): DataFrame = {
-    if (reliable)
-      require(s.sparkContext.getCheckpointDir.isDefined,
-        "erRecords(reliable = true) needs spark.sparkContext.setCheckpointDir")
+      s: SparkSession, dir: String, guardSplit: Boolean = false): DataFrame = {
     // The er3 dirty/catalog SPLIT assumes base doc_id < 500000; a gate fixture
     // grown past that would silently misclassify rows IN BOTH ENGINES (so the
     // oracle could not catch it) — er3 passes guardSplit = true and the guard
@@ -91,8 +81,7 @@ object GraphEr {
     // lower/regexp/split normalization — measured 4–10 full document scans
     // per er query at sf0.1 (guide §1.2 step 1: don't compute things twice).
     // The snapped frame is (id, 6-word name) — KBs per 1k docs, batch-sized.
-    val base = if (reliable) baseGuarded.checkpoint(true)
-      else baseGuarded.localCheckpoint(true)
+    val base = baseGuarded.localCheckpoint(true)
     val typos = base.filter(col("id") % 20 === 0 && length(col("name")) >= 8)
       .select((col("id") + 500000).alias("id"),
         concat(substring(col("name"), 1, 3), expr("substr(name, 5)")).alias("name"))

@@ -20,24 +20,43 @@ object Bridge {
   def rebind(df: DataFrame, spark: SparkSession): DataFrame =
     ofRows(spark, df.queryExecution.analyzed)
 
-  /** DataFrame over a plan whose names and types are already resolved but whose
-    * nodes were rebuilt after analysis (partial-model pruning): the analyzer's
-    * final check runs on it and the plan is marked analyzed, so the analyzer's
-    * rule batches do not run over it a second time.
+  /** `plan`, whose names and types are already resolved but whose nodes were
+    * rebuilt after analysis (partial-model pruning), checked by the analyzer's
+    * final check and marked analyzed, so the analyzer's rule batches do not run
+    * over it a second time when a DataFrame is built on it.
     */
-  def ofRowsAnalyzed(spark: SparkSession, plan: LogicalPlan): DataFrame = {
-    val cs = spark.asInstanceOf[ClassicSession]
-    cs.sessionState.analyzer.checkAnalysis(plan)
+  def markAnalyzed(spark: SparkSession, plan: LogicalPlan): LogicalPlan = {
+    spark.asInstanceOf[ClassicSession].sessionState.analyzer.checkAnalysis(plan)
     plan.setAnalyzed()
-    Dataset.ofRows(cs, plan)
+    plan
   }
+
+  /** `analyzed` optimized like a QueryExecution does (on a clone, `spark` active),
+    * but over its sources only: no CacheManager substitution.
+    */
+  def optimize(spark: SparkSession, analyzed: LogicalPlan): LogicalPlan = {
+    val cs = spark.asInstanceOf[ClassicSession]
+    cs.withActive {
+      val plan = cs.sessionState.optimizer.execute(analyzed.clone())
+      plan.setAnalyzed()
+      plan
+    }
+  }
+
+  /** True when the shared CacheManager would swap persisted data into `analyzed`. */
+  def substitutesCachedData(spark: SparkSession, analyzed: LogicalPlan): Boolean =
+    !(spark.asInstanceOf[ClassicSession].sharedState.cacheManager
+      .useCachedData(analyzed) eq analyzed)
 
   /** DataFrame over an ALREADY analyzed + optimized plan pair: the QueryExecution's
     * analysis and optimization phases are pinned to the supplied plans, so the warm
     * path pays neither (the optimizer alone is ~half of warm planning latency).
     * Only sound when the optimized plan is execution-invariant — the caller must
     * exclude plans with time-dependent foldables (current_timestamp & co., which
-    * the optimizer freezes per-optimization) and non-deterministic expressions.
+    * the optimizer freezes per-optimization) and non-deterministic expressions —
+    * and when the CacheManager substitutes nothing into `analyzedPlan`: a pinned
+    * plan would miss a substitution that applies now, or keep one that no longer
+    * does.
     * Physical planning still runs per call, so nothing stateful (AQE stages,
     * exchange reuse) leaks between executions.
     */

@@ -329,6 +329,57 @@ class HttpServerSpec extends AnyFunSuite {
     assert(pg.body().contains("JDBC"))
   }
 
+  test("a malformed JSON body answers 422 on every body-reading route") {
+    def patchConfig(body: String) = http.send(
+      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/config"))
+        .method("PATCH", HttpRequest.BodyPublishers.ofString(body)).build(),
+      HttpResponse.BodyHandlers.ofString())
+    val answers = Seq(
+      "PATCH /config" -> patchConfig("{oops"),
+      "/v2/analysis/sql" -> post("/v2/analysis/sql", "{oops"),
+      "/v2/connector/dry-plan" -> post("/v2/connector/dry-plan", "{oops"),
+      "/v3/connector/spark/query" -> post("/v3/connector/spark/query", "{oops"))
+    answers.foreach { case (route, r) =>
+      assert(r.statusCode() == 422 && r.body().contains("malformed JSON body"),
+        s"$route: ${r.statusCode()} ${r.body()}")
+    }
+  }
+
+  test("the 65th manifest evicts the least recently used deployment, not all of them") {
+    val lruServer = new GraftHttpServer(spark, TestSpark.sfDir, port = 0)
+    val lruPort = lruServer.start()
+    // the server's manifest -> deployment map (the field servebench reads too)
+    val sessions = classOf[GraftHttpServer].getDeclaredFields
+      .find(_.getName.endsWith("sessions")).map { f =>
+        f.setAccessible(true)
+        f.get(lruServer).asInstanceOf[java.util.Map[String, AnyRef]]
+      }.get
+    def manifest(i: Int): String =
+      s"""{"catalog":"lru$i","schema":"demo","models":[{"name":"w_region",
+         |"tableReference":"region","primaryKey":"r_regionkey",
+         |"columns":[{"name":"r_regionkey","type":"int"}]}]}""".stripMargin
+    def deploy(i: Int): Unit = {
+      val r = http.send(
+        HttpRequest.newBuilder(URI.create(
+          s"http://127.0.0.1:$lruPort/v3/connector/spark/metadata/schemas"))
+          .POST(HttpRequest.BodyPublishers.ofString(
+            s"""{"manifestStr":${quoted(manifest(i))}}""")).build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() == 200 && r.body().contains(s"lru$i"), r.body())
+    }
+    try {
+      deploy(0)
+      val first = sessions.get(manifest(0))
+      (1 until 64).foreach(deploy)
+      deploy(0) // manifest 0 is now the most recently used; manifest 1 the least
+      deploy(64)
+      assert(sessions.size == 64)
+      assert(sessions.get(manifest(0)) eq first, "manifest 0 was re-deployed")
+      assert(!sessions.containsKey(manifest(1)),
+        "the least recently used manifest was not evicted")
+    } finally lruServer.stop()
+  }
+
   private def quoted(s: String): String =
     org.json4s.jackson.JsonMethods.compact(org.json4s.JString(s))
 }

@@ -79,17 +79,7 @@ class SqlUnparserTpchSpec extends AnyFunSuite {
     } finally { sess.modelDF("nation").unpersist(); () }
   }
 
-  /** Total runs of each named analyzer/optimizer rule since the last
-    * `RuleExecutor.resetMetrics()`, read from Spark's global rule meter (the
-    * suites run one at a time in one JVM, so no other query moves it).
-    */
-  private def ruleRuns(rules: String*): Map[String, Long] = {
-    val dump = RuleExecutor.dumpTimeSpent().linesIterator.toSeq
-    rules.map { r =>
-      val line = dump.find(_.trim.startsWith(r + " "))
-      r -> line.map(_.trim.split("\\s+").last.toLong).getOrElse(0L)
-    }.toMap
-  }
+  private def ruleRuns(rules: String*): Map[String, Long] = graft.RuleMeter.runs(rules: _*)
 
   test("a dialect dry-plan analyzes and optimizes once on a miss, neither on a hit") {
     val finish = "org.apache.spark.sql.catalyst.optimizer.Optimizer$FinishAnalysis"
