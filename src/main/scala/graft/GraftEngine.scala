@@ -428,10 +428,6 @@ final class GraftSession(
       : Array[org.apache.spark.sql.Row] =
     withTimeout(timeoutMs)(query(sql, limit).collect())
 
-  /** Time-bounded v3 JSON response (the HTTP route's `timeout` parameter). */
-  def queryJsonWithTimeout(sql: String, limit: Int, timeoutMs: Long): String =
-    withTimeout(timeoutMs)(queryJson(sql, limit))
-
   /** Validation probes (A19). */
   def validateColumn(model: String, column: String): Validator.ValidationResult =
     Validator.columnIsValid(own, model, column)

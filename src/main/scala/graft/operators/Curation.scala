@@ -625,11 +625,7 @@ object Curation {
   def connectedComponents(
       pairs: DataFrame, maxIter: Int = 50, reliable: Boolean = false,
       localSolveMax: Long = 1000000L): DataFrame = {
-    if (reliable)
-      require(pairs.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "connectedComponents(reliable = true) needs spark.sparkContext.setCheckpointDir")
-    def snap(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
+    Snapshot.requireCheckpointDir(pairs, reliable, "connectedComponents")
     val Array(ca, cb) = pairs.columns.take(2)
     val deduped = pairs
       .select(col(ca).alias("u"), col(cb).alias("v"))
@@ -645,7 +641,7 @@ object Curation {
         return localComponents(pairs.sparkSession, probe, deduped.schema.head.dataType)
       }
     }
-    var edges = snap(deduped)
+    var edges = Snapshot.snap(deduped, reliable)
 
     // (count, hash-xor) fingerprint of the canonically-oriented edge set: iteration
     // stops when two consecutive rounds produce the same set. XOR is
@@ -688,7 +684,7 @@ object Curation {
     var converged = false
     var it = 0
     while (!converged && it < maxIter) {
-      edges = snap(smallStar(largeStar(edges)))
+      edges = Snapshot.snap(smallStar(largeStar(edges)), reliable)
       val cur = fingerprint(edges)
       converged = cur == prev
       prev = cur

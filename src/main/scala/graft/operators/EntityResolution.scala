@@ -206,30 +206,26 @@ object EntityResolution {
       blocking: String = "bigram",
       reliable: Boolean = false): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
-    if (reliable)
-      require(batch.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "incrementalLink(reliable = true) needs spark.sparkContext.setCheckpointDir")
+    Snapshot.requireCheckpointDir(batch, reliable, "incrementalLink")
     // `reliable` mirrors GraphOps.rankLoop's escape hatch: localCheckpoint
     // snaps are executor-local and unreplicated — fine for micro-batches (the
     // streaming caller additionally has a disk fallback), but a long cluster
     // batch can opt into checkpoint-dir-backed snaps instead.
-    def snap(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
     // links feeds BOTH returned frames (assignments union + the anti-join
     // deriving the unmatched set) and fresh feeds three subtrees — without a
     // materialization the block-join pipeline re-executes per consumer
     // (measured 10.0 s -> the checkpointed shape at sf0.1). localCheckpoint is
     // the CC hygiene: batch-sized artifacts, eager, lineage cut.
-    val links = snap(blockedFuzzyJoin(batch, catalog, nameCol, idCol,
+    val links = Snapshot.snap(blockedFuzzyJoin(batch, catalog, nameCol, idCol,
         maxDist, maxBlock, blocking)
       .withColumn("rn", row_number().over(
         Window.partitionBy("left_id").orderBy(col("dist"), col("right_id"))))
       .filter(col("rn") === 1)
-      .select(col("left_id").alias("id"), col("right_id").alias("entity_id")))
+      .select(col("left_id").alias("id"), col("right_id").alias("entity_id")), reliable)
     val unmatched = batch.join(
       links.select(col("id").alias(idCol)), Seq(idCol), "left_anti")
-    val fresh = snap(canonicalEntities(unmatched, nameCol, idCol,
-      maxDist, maxBlock, blocking))
+    val fresh = Snapshot.snap(canonicalEntities(unmatched, nameCol, idCol,
+      maxDist, maxBlock, blocking), reliable)
     val assignments = links.union(fresh.select(col("id"), col("entity_id")))
     val updatedCatalog = catalog
       .select(col(idCol), col(nameCol))

@@ -64,8 +64,6 @@ object GraphOps {
       scale: Long,
       dampingPct: Int,
       reliable: Boolean): DataFrame = {
-    def snap(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
     val base = scale * (100 - dampingPct) / 100
     // share = danglingMass div nReceivers, folded into the update as a
     // broadcast single-row join — NO per-iteration driver collect: each round
@@ -74,8 +72,8 @@ object GraphOps {
     val shareSql =
       if (nReceivers == 0) "0L" else s"(dm div ${nReceivers}L)"
     val explainIter = sys.env.contains("SPARK_GRAFT_RANK_EXPLAIN")
-    var rank = snap(nodes.select(col("id"), col("s"), col("outdeg"),
-      (col("s") * scale).cast("long").alias("rank")))
+    var rank = Snapshot.snap(nodes.select(col("id"), col("s"), col("outdeg"),
+      (col("s") * scale).cast("long").alias("rank")), reliable)
     for (it <- 1 to iterations) {
       // src rows with outdeg = 0 have no out-edges to match — the filter
       // drops them before the join without changing the result
@@ -109,7 +107,7 @@ object GraphOps {
           "rankLoop iteration-1 update plan (SPARK_GRAFT_RANK_EXPLAIN):\n" +
             updated.queryExecution.explainString(
               org.apache.spark.sql.execution.FormattedMode))
-      rank = snap(updated)
+      rank = Snapshot.snap(updated, reliable)
     }
     rank.select(col("id"), col("rank"))
   }
@@ -150,9 +148,7 @@ object GraphOps {
       reliable: Boolean, op: String): Unit = {
     require(iterations >= 0, "iterations must be >= 0")
     require(dampingPct >= 0 && dampingPct <= 100, "dampingPct must be in [0,100]")
-    if (reliable)
-      require(edges.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        s"$op(reliable = true) needs spark.sparkContext.setCheckpointDir")
+    Snapshot.requireCheckpointDir(edges, reliable, op)
   }
 
   /** Worst case: the whole mass (nReceivers·scale) concentrates in one node's

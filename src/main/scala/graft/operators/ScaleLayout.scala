@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
+import graft.util.CommitPointer
+
 /** Physical-layout utilities for the 100 TB path: skew-salted joins and bucketed
   * table layouts. AQE's skew-join splitting handles moderate skew at runtime; these
   * are for the cases the optimizer can't fix — a known ultra-hot key set (salting
@@ -92,61 +94,31 @@ object ScaleLayout {
   // ------------------------------------------------------- versioned index commit
   //
   // The index is the table's commit manifest: `_graft_index/v<N>/` holds one
-  // parquet row per live data file, and an immutable `_commit_v<N>` marker
-  // names the committed version (resolution = max marker). Readers resolve
-  // the live FILE LIST through the committed index, so a rewrite (optimize) can
-  // lay new files alongside the old generation and flip the pointer — a reader
-  // concurrent with maintenance sees the old or the new layout, never a missing
-  // table, and a crash before the pointer flip leaves the old version committed
-  // (the abandoned generation is unreferenced garbage for [[vacuum]]).
-  // Pre-versioning tables (index rows directly under `_graft_index`, no commit
-  // file) stay readable; their first optimize migrates them.
+  // parquet row per live data file, and [[graft.util.CommitPointer]]'s
+  // immutable markers name the committed version. Readers resolve the live
+  // FILE LIST through the committed index, so a rewrite (optimize) can lay new
+  // files alongside the old generation and commit a new marker — a reader
+  // concurrent with maintenance sees the old or the new layout, never a
+  // missing table, and a crash before the commit leaves the old version
+  // committed (the abandoned generation is unreferenced garbage for
+  // [[vacuum]]). Pre-versioning tables (index rows directly under
+  // `_graft_index`, no commit) stay readable; their first optimize migrates
+  // them.
 
   private def fsFor(spark: org.apache.spark.sql.SparkSession, path: String) =
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def commitPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_graft_commit")
-
-  private val markerRe = "_commit_v(\\d+)".r
-
-  /** The committed index version, if the table uses the versioned layout.
-    *
-    * Commits are IMMUTABLE marker files `_graft_index/_commit_v<N>` and the
-    * committed version is the largest N present. A single mutable pointer
-    * file replaced by rename is NOT atomic everywhere (Hadoop's local-FS
-    * rename-with-OVERWRITE deletes the destination first, and the
-    * concurrent-reader spec caught a reader in that pointerless instant);
-    * markers have no such window — the new one exists before any old one is
-    * removed, and max() ignores stragglers. A legacy single `_graft_commit`
-    * pointer file is still honored for tables written before this scheme.
+  /** The table's commit layout: the flat pre-versioning index dir is also the
+    * generation root, and `_graft_commit` is the legacy single-file pointer.
     */
+  private def index(path: String) = CommitPointer.Layout(
+    s"$path/_graft_index", s"$path/_graft_index", s"$path/_graft_commit")
+
+  /** The committed index version, if the table uses the versioned layout. */
   def committedVersion(
-      spark: org.apache.spark.sql.SparkSession, path: String): Option[Int] = {
-    val fs = fsFor(spark, path)
-    val idxRoot = new org.apache.hadoop.fs.Path(s"$path/_graft_index")
-    val markers =
-      if (!fs.exists(idxRoot)) Nil
-      else fs.listStatus(idxRoot).toSeq.map(_.getPath.getName).collect {
-        case markerRe(n) => n.toInt
-      }
-    if (markers.nonEmpty) Some(markers.max)
-    else {
-      val cp = commitPath(path)
-      if (!fs.exists(cp)) None
-      else {
-        val in = fs.open(cp)
-        val txt = try {
-          val out = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-          out.toString("UTF-8").trim
-        } finally in.close()
-        require(txt.matches("v\\d+"), s"corrupt commit pointer $cp: '$txt'")
-        Some(txt.drop(1).toInt)
-      }
-    }
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): Option[Int] =
+    CommitPointer.committedVersion(spark, index(path))
 
   /** The directory holding the COMMITTED index rows: `_graft_index/v<N>` for
     * versioned tables, the flat `_graft_index` for pre-versioning ones, None if
@@ -155,41 +127,26 @@ object ScaleLayout {
   def committedIndexDir(
       spark: org.apache.spark.sql.SparkSession, path: String): Option[String] =
     committedVersion(spark, path) match {
-      case Some(v) => Some(s"$path/_graft_index/v$v")
+      case Some(v) => Some(index(path).versionDir(v))
       case None =>
-        val fs = fsFor(spark, path)
-        val flat = new org.apache.hadoop.fs.Path(s"$path/_graft_index")
-        if (fs.exists(flat)) Some(flat.toString) else None
+        val flat = new org.apache.hadoop.fs.Path(index(path).flat)
+        if (fsFor(spark, path).exists(flat)) Some(flat.toString) else None
     }
 
-  /** Publish `version` as committed: atomically CREATE the immutable marker
-    * `_graft_index/_commit_v<version>`, then lazily drop older markers (and
-    * any legacy pointer file) — at every instant at least one committed
-    * marker exists and resolution takes the max.
+  /** Delete the table's index and commit state, so the next
+    * [[writeIndexed]] starts the version chain fresh.
     */
-  private def commitVersion(
-      spark: org.apache.spark.sql.SparkSession, path: String, version: Int): Unit = {
+  private[graft] def dropIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
     val fs = fsFor(spark, path)
-    fs.create(new org.apache.hadoop.fs.Path(
-      s"$path/_graft_index/_commit_v$version"), true).close()
-    // retain the PREVIOUS version's marker (drop only < version - 1): a
-    // stale object-store listing that misses the just-created marker must
-    // resolve the previous COMMITTED version, never fall through to the flat
-    // legacy dir. vacuum — gated on "no readers" — reclaims it with its dir.
-    fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/_graft_index")).foreach { st =>
-      st.getPath.getName match {
-        case markerRe(n) if n.toInt < version - 1 => fs.delete(st.getPath, false)
-        case _ =>
-      }
-    }
-    fs.delete(commitPath(path), false)
+    fs.delete(new org.apache.hadoop.fs.Path(index(path).root), true)
+    fs.delete(new org.apache.hadoop.fs.Path(index(path).pointer), false)
     ()
   }
 
   /** Write `df` as parquet plus a per-file min/max index of `statCols` (numeric
-    * columns), stored as parquet under `_graft_index/v1` with a `_graft_commit`
-    * pointer (underscore-prefixed, so plain `spark.read.parquet(path)` ignores
-    * both). The index is built with ONE distributed pass grouped by
+    * columns), stored as parquet under `_graft_index/v1` with a committed
+    * marker beside it (underscore-prefixed, so plain `spark.read.parquet(path)`
+    * ignores both). The index is built with ONE distributed pass grouped by
     * `input_file_name` — no driver-side state; its size is one row per data
     * file (a 100 TB table at 1 GB files is a 10^5-row index, itself
     * pruned-readable).
@@ -207,12 +164,10 @@ object ScaleLayout {
     df.write.mode(SaveMode.Overwrite).parquet(path)
     // Overwrite left any previous index/commit state behind `path`'s new data;
     // start the version chain fresh.
-    val fs = fsFor(spark, path)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/_graft_index"), true)
-    fs.delete(commitPath(path), false)
+    dropIndex(spark, path)
     buildIndexRows(spark.read.parquet(path), statCols, indexExtra)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/_graft_index/v1")
-    commitVersion(spark, path, 1)
+      .write.mode(SaveMode.Overwrite).parquet(index(path).versionDir(1))
+    CommitPointer.commit(spark, index(path), 1)
   }
 
   /** One index row per file of `src`: per-file min/max of every stat column
@@ -293,8 +248,8 @@ object ScaleLayout {
 
   /** Re-cluster an indexed table in place: read the committed snapshot, Z-order
     * on `cols`, write the NEW generation of data files alongside the old one,
-    * publish a new index version, and atomically flip the `_graft_commit`
-    * pointer (Delta/Iceberg `OPTIMIZE ZORDER BY` for plain parquet). Streaming
+    * publish a new index version, and atomically commit its marker
+    * (Delta/Iceberg `OPTIMIZE ZORDER BY` for plain parquet). Streaming
     * appends keep per-BATCH locality ([[graft.streaming.StreamingCorpusSink
     * .indexedSinkStream]]) but eras interleave across files as batches
     * accumulate; a periodic optimize restores global clustering so box
@@ -303,7 +258,7 @@ object ScaleLayout {
     * SNAPSHOT-CONSISTENT for index-resolving readers ([[readPruned]] /
     * [[readCommitted]]): old-generation files are never touched, so a reader
     * concurrent with optimize sees the old or the new layout — never a missing
-    * table, never a torn mix. A crash at ANY point before the pointer flip
+    * table, never a torn mix. A crash at ANY point before the commit
     * leaves the old version committed and the half-written generation as
     * unreferenced garbage, reclaimed by [[vacuum]]. Consequently optimize does
     * NOT delete the old generation itself — run [[vacuum]] once in-flight
@@ -312,7 +267,7 @@ object ScaleLayout {
     * vacuum; use the index-resolving readers on tables under maintenance.
     *
     * Single MAINTAINER (one optimize/vacuum at a time — concurrent appends to
-    * the pre-optimize version would be orphaned by the flip); any number of
+    * the pre-optimize version would be orphaned by the commit); any number of
     * concurrent readers. One shuffle of the table, same cost class as any
     * compaction.
     */
@@ -322,7 +277,7 @@ object ScaleLayout {
     optimizeZorderInternal(spark, path, cols, files, bits, crashBeforeCommit = false)
 
   /** Test seam: `crashBeforeCommit` stops after the new generation + index
-    * version are fully written but BEFORE the pointer flip — the exact state a
+    * version are fully written but BEFORE the commit — the exact state a
     * process crash leaves behind.
     */
   private[graft] def optimizeZorderInternal(
@@ -352,9 +307,9 @@ object ScaleLayout {
     // Overwrite the version dir: a crashed prior attempt at the same version
     // left only unreferenced rows there.
     buildIndexRows(spark.read.parquet(newFiles: _*), cols, Nil)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/_graft_index/v$nextV")
+      .write.mode(SaveMode.Overwrite).parquet(index(path).versionDir(nextV))
     if (crashBeforeCommit) return
-    commitVersion(spark, path, nextV)
+    CommitPointer.commit(spark, index(path), nextV)
   }
 
   /** Rewrite the committed index as a new compact version (data files
@@ -363,9 +318,9 @@ object ScaleLayout {
     * [[readPruned]]'s per-read collect pays per-file listing/footer overhead —
     * after months of batches, the index read costs O(batches), not O(files
     * worth of stats). Same commit discipline as [[optimizeZorder]]: the
-    * compacted rows land in `_graft_index/v<N+1>` and the pointer flips
-    * atomically, so concurrent readers resolve the old or the new index —
-    * both describing the SAME data files. Streaming protocol tags are
+    * compacted rows land in `_graft_index/v<N+1>` and its marker is committed
+    * atomically, so concurrent readers resolve the old or the new index — both
+    * describing the SAME data files. Streaming protocol tags are
     * STRIPPED (a compacted index row is committed by construction; untagged
     * rows are exactly what the exactly-once purge never deletes). Call it
     * between batches / from a maintenance schedule; single maintainer.
@@ -380,12 +335,12 @@ object ScaleLayout {
     dropTags.foldLeft(idx) { (d, c) =>
       d.withColumn(c, lit(null).cast(d.schema(c).dataType)) }
       .repartition(files)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/_graft_index/v$nextV")
-    commitVersion(spark, path, nextV)
+      .write.mode(SaveMode.Overwrite).parquet(index(path).versionDir(nextV))
+    CommitPointer.commit(spark, index(path), nextV)
     // A pre-versioning FLAT index lives at `_graft_index` itself, which now
     // CONTAINS the new version dir — delete only its flat files, never the
     // dir. A superseded VERSIONED generation is NOT deleted here: its marker
-    // is retained by commitVersion so a stale listing that misses the new
+    // is retained by the commit so a stale listing that misses the new
     // marker resolves the previous committed version, which must then still
     // be readable — vacuum (gated on "no readers") reclaims dir + marker.
     // Compare NORMALIZED paths: committedIndexDir returns Hadoop's Path
@@ -394,7 +349,7 @@ object ScaleLayout {
     // round's else branch recursively deleted _graft_index — new version,
     // markers and all).
     val fs = fsFor(spark, path)
-    val flatDir = new org.apache.hadoop.fs.Path(s"$path/_graft_index")
+    val flatDir = new org.apache.hadoop.fs.Path(index(path).flat)
     if (new org.apache.hadoop.fs.Path(idxDir) == flatDir)
       fs.listStatus(flatDir).foreach { st =>
         // keep the commit markers (and any _SUCCESS) — only flat index DATA goes
@@ -407,7 +362,7 @@ object ScaleLayout {
   /** Reclaim everything the committed version does not reference: data files
     * absent from the committed index (pre-optimize generations, crashed
     * half-writes) and index version dirs other than the committed one
-    * (including a pre-versioning flat index once a commit pointer exists).
+    * (including a pre-versioning flat index once a commit exists).
     * Run it AFTER readers of older snapshots have drained — a reader that
     * resolved the previous version's file list loses files under it (same
     * retention contract as Delta's VACUUM). Same single-MAINTAINER rule as
@@ -416,19 +371,12 @@ object ScaleLayout {
   def vacuum(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
     val v = committedVersion(spark, path).getOrElse(return)
     val fs = fsFor(spark, path)
-    val live = spark.read.parquet(s"$path/_graft_index/v$v")
+    val live = spark.read.parquet(index(path).versionDir(v))
       .select("file").collect().map(_.getString(0)).toSet
     (listDataFiles(spark, path) -- live).foreach { f =>
       fs.delete(new org.apache.hadoop.fs.Path(s"$path/$f"), false)
     }
-    val idxRoot = new org.apache.hadoop.fs.Path(s"$path/_graft_index")
-    fs.listStatus(idxRoot).foreach { st =>
-      val n = st.getPath.getName
-      if (n != s"v$v" && n != s"_commit_v$v") fs.delete(st.getPath, st.isDirectory)
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/_graft_commit.tmp"), false)
-    fs.delete(commitPath(path), false) // legacy pointer, superseded by markers
-    ()
+    CommitPointer.dropStaleVersions(spark, index(path))
   }
 
   /** Read the COMMITTED snapshot of an indexed table — the file list resolved

@@ -22,17 +22,6 @@ object Similarity {
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, x) => acc + x)
 
-  /** Codegen'd dot product via the native loop expression
-    * ([[graft.functions.DotProduct]]): same left-to-right double accumulation as
-    * `dot`, but ~20 lines of generated Java instead of an unrolled term per element
-    * (which cost seconds of janino compile per plan at dim=64).
-    */
-  def dotNative(a: Column, b: Column): Column = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    Bridge.column(graft.functions.DotProduct(
-      Bridge.toExpression(spark, a), Bridge.toExpression(spark, b)))
-  }
-
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))

@@ -48,29 +48,4 @@ object ManifestExtractor {
       r.models.forall(m => keepModels.contains(m.toLowerCase)))
     manifest.copy(models = models, relationships = rels, views = keepViews)
   }
-
-  /** Detect cycles in the calculated-field lineage DAG (models linked by relationships
-    * used in calc expressions) — the reference's is_dag check (plan.rs:322-326).
-    */
-  def assertAcyclic(manifest: Manifest): Unit = {
-    val adj: Map[String, Set[String]] = manifest.models.map { m =>
-      val targets = m.columns.flatMap(_.relationship)
-        .flatMap(manifest.relationship)
-        .map(_.other(m.name).toLowerCase).toSet
-      m.name.toLowerCase -> (targets - m.name.toLowerCase)
-    }.toMap
-    val state = mutable.Map[String, Int]().withDefaultValue(0) // 0=white 1=grey 2=black
-    def dfs(n: String, path: List[String]): Unit = {
-      state(n) match {
-        case 1 => throw new graft.planner.GraftException(
-          s"relationship cycle detected: ${(n :: path).reverse.mkString(" -> ")}")
-        case 2 =>
-        case _ =>
-          state(n) = 1
-          adj.getOrElse(n, Set.empty).foreach(dfs(_, n :: path))
-          state(n) = 2
-      }
-    }
-    adj.keys.foreach(dfs(_, Nil))
-  }
 }

@@ -22,9 +22,6 @@ import org.json4s._
   */
 object QueryAnalyzer {
 
-  def analyzeJson(spark: SparkSession, sql: String): String =
-    org.json4s.jackson.JsonMethods.compact(analyze(spark, sql))
-
   def analyze(spark: SparkSession, sql: String): JValue =
     queryAnalysis(spark.sessionState.sqlParser.parsePlan(sql))
 

@@ -1,6 +1,6 @@
 package graft.semantics
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith}
 
@@ -53,8 +53,4 @@ object Substitution {
         }
     }
   }
-
-  /** Substituted DataFrame ready to execute on the deployed session. */
-  def substituteDF(spark: SparkSession, manifest: Manifest, sql: String): DataFrame =
-    org.apache.spark.sql.graft.Bridge.ofRows(spark, substitute(spark, manifest, sql))
 }

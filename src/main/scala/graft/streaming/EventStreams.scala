@@ -177,23 +177,14 @@ object EventStreams {
       compactIndexAt: Int = 64)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Curation
-    val step = new ((Dataset[org.apache.spark.sql.Row], Long) => Unit) with Serializable {
-      private var recovered = false
-      private var ckptCache: Option[Option[String]] = None
-      private def ckpt(spark: org.apache.spark.sql.SparkSession): Option[String] = {
-        if (ckptCache.isEmpty)
-          ckptCache = Some(ExactlyOnce.checkpointId(spark, checkpointDir))
-        ckptCache.get
-      }
-
-      override def apply(batch: Dataset[org.apache.spark.sql.Row], batchId: Long): Unit = {
+    ExactlyOnce.start(docs, checkpointDir)(
+      (spark, ckpt, batchId) => {
+        ExactlyOnce.purge(spark, outDir, ckpt, batchId)
+        ExactlyOnce.purge(spark,
+          graft.util.CommitPointer.liveDir(spark, indexDir), ckpt, batchId)
+      },
+      (batch, ckpt, batchId) => {
         val spark = batch.sparkSession
-        if (!recovered) {
-          ExactlyOnce.purge(spark, outDir, ckpt(spark), batchId)
-          ExactlyOnce.purge(spark,
-            graft.util.CommitPointer.liveDir(spark, indexDir), ckpt(spark), batchId)
-          recovered = true
-        }
         // AFTER the purge (compacting first would launder a crashed attempt's
         // uncommitted rows into untagged permanence)
         val live = maintainIndexDir(spark, indexDir, compactIndexAt)
@@ -203,18 +194,13 @@ object EventStreams {
             Curation.emptyNearDupIndex(spark) }
         val (survivors, indexRows) = Curation.incrementalNearDedup(
           batch, index, textCol, idCol, n, k, bands, threshold)
-        ExactlyOnce.tag(survivors, ckpt(spark), batchId)
+        ExactlyOnce.tag(survivors, ckpt, batchId)
           .write.mode("append").parquet(outDir)
         // one index file per batch (tiny rows): repartition, not coalesce, so
         // the dedup computation upstream keeps its parallelism
-        ExactlyOnce.tag(indexRows.repartition(1), ckpt(spark), batchId)
+        ExactlyOnce.tag(indexRows.repartition(1), ckpt, batchId)
           .write.mode("append").parquet(live)
-      }
-    }
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch((b: Dataset[org.apache.spark.sql.Row], id: Long) => step(b, id))
-      .start()
+      })
   }
 
   /** Bound the accumulated-index FILE count for the near-dup streams — the
@@ -246,26 +232,17 @@ object EventStreams {
       maxHamming: Int = 3, compactIndexAt: Int = 64)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Dedup
-    val step = new ((Dataset[org.apache.spark.sql.Row], Long) => Unit) with Serializable {
-      private var recovered = false
-      private var ckptCache: Option[Option[String]] = None
-      private def ckpt(spark: org.apache.spark.sql.SparkSession): Option[String] = {
-        if (ckptCache.isEmpty)
-          ckptCache = Some(ExactlyOnce.checkpointId(spark, checkpointDir))
-        ckptCache.get
-      }
-
-      override def apply(batch: Dataset[org.apache.spark.sql.Row], batchId: Long): Unit = {
+    ExactlyOnce.start(media, checkpointDir)(
+      // see curateNearDupStream: replaying against an index holding the
+      // crashed attempt's own signatures would drop every replayed item as
+      // its own near-dup
+      (spark, ckpt, batchId) => {
+        ExactlyOnce.purge(spark, outDir, ckpt, batchId)
+        ExactlyOnce.purge(spark,
+          graft.util.CommitPointer.liveDir(spark, indexDir), ckpt, batchId)
+      },
+      (batch, ckpt, batchId) => {
         val spark = batch.sparkSession
-        if (!recovered) {
-          // ExactlyOnce protocol (see curateNearDupStream): replaying against
-          // an index holding the crashed attempt's own signatures would drop
-          // every replayed item as its own near-dup
-          ExactlyOnce.purge(spark, outDir, ckpt(spark), batchId)
-          ExactlyOnce.purge(spark,
-            graft.util.CommitPointer.liveDir(spark, indexDir), ckpt(spark), batchId)
-          recovered = true
-        }
         val live = maintainIndexDir(spark, indexDir, compactIndexAt)
         val index =
           try spark.read.parquet(live).drop("batch_id", "ckpt_id")
@@ -277,17 +254,12 @@ object EventStreams {
         try {
           ExactlyOnce.tag(
               batch.join(surviving.select(col("id").alias(idCol)), Seq(idCol), "left_semi"),
-              ckpt(spark), batchId)
+              ckpt, batchId)
             .write.mode("append").parquet(outDir)
-          ExactlyOnce.tag(surviving.repartition(1), ckpt(spark), batchId)
+          ExactlyOnce.tag(surviving.repartition(1), ckpt, batchId)
             .write.mode("append").parquet(live)
         } finally surviving.unpersist()
-      }
-    }
-    media.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch((b: Dataset[org.apache.spark.sql.Row], id: Long) => step(b, id))
-      .start()
+      })
   }
 
   /** Streaming corpus curation — the incremental-arrival form of the batch pipeline

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Crash-replay idempotence for `foreachBatch` parquet appends.
@@ -26,6 +27,33 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * loss, not duplication).
   */
 private[streaming] object ExactlyOnce {
+
+  /** Start `df` as a `foreachBatch` query under this protocol — the one
+    * lifecycle every exactly-once sink here shares. Per incarnation, the
+    * checkpoint id is read once (it is fixed for the query's lifetime; on
+    * object stores each read is a remote GET) and `recover(spark, ckptId,
+    * batchId)` runs before the incarnation's first batch writes — the point
+    * where a sink [[purge]]s its uncommitted leftovers. Every batch then runs
+    * `write(batch, ckptId, batchId)`, which tags what it appends with
+    * `(ckptId, batchId)`.
+    */
+  def start(df: DataFrame, checkpointDir: String)(
+      recover: (SparkSession, Option[String], Long) => Unit,
+      write: (DataFrame, Option[String], Long) => Unit): StreamingQuery = {
+    var ckpt: Option[Option[String]] = None // Some once this incarnation recovered
+    df.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        val id = ckpt.getOrElse {
+          val id = checkpointId(batch.sparkSession, checkpointDir)
+          recover(batch.sparkSession, id, batchId)
+          ckpt = Some(id)
+          id
+        }
+        write(batch, id, batchId)
+      }
+      .start()
+  }
 
   /** The tag columns appended to every protocol write. `batch_id`/`ckpt_id`
     * are RESERVED on protocol outputs: withColumn would silently overwrite a
@@ -52,7 +80,7 @@ private[streaming] object ExactlyOnce {
     * purge rule needs. None (missing/unreadable metadata) disables purging —
     * fail safe, never destructive.
     */
-  def checkpointId(spark: SparkSession, checkpointDir: String): Option[String] =
+  private def checkpointId(spark: SparkSession, checkpointDir: String): Option[String] =
     try {
       val p = new org.apache.hadoop.fs.Path(s"$checkpointDir/metadata")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

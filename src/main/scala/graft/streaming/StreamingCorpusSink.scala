@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.operators.ScaleLayout
 import graft.sinks.CorpusSink
 
 /** Streaming side of [[graft.sinks.CorpusSink]]: micro-batches of curated documents
@@ -57,33 +58,27 @@ object StreamingCorpusSink {
       textCol: String = "text", idCol: String = "doc_id",
       budget: Int = 2048, buckets: Int = 8)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val step = new ((Dataset[Row], Long) => Unit) with Serializable {
-      // bucket -> next free pack_ix; None until first batch recovers it
-      private var nextPack: Option[Map[Long, Long]] = None
-      // the checkpoint id is fixed for the query's lifetime — read it once, not
-      // per trigger (on object stores that is a remote GET per batch)
-      private var ckptCache: Option[Option[String]] = None
-      private def ckpt(spark: SparkSession): Option[String] = {
-        if (ckptCache.isEmpty)
-          ckptCache = Some(ExactlyOnce.checkpointId(spark, checkpointDir))
-        ckptCache.get
-      }
-
-      override def apply(batch: Dataset[Row], batchId: Long): Unit = {
-        val spark = batch.sparkSession
-        val offMap: Map[Long, Long] = nextPack.getOrElse {
-          // Restart recovery: drop manifest files left by an uncommitted run of
-          // THIS incarnation (ExactlyOnce protocol — checkpoint-scoped, so a
-          // fresh checkpoint continuing an existing corpus purges nothing),
-          // then derive offsets from the WHOLE surviving manifest: rows from
-          // prior incarnations and pre-protocol rows are committed by
-          // definition, which is exactly the continuation pattern.
-          ExactlyOnce.purge(spark, manifestDir, ckpt(spark), batchId)
+    // bucket -> next free pack_ix, recovered before the incarnation's first
+    // batch and carried forward in driver memory after each batch
+    var nextPack = Map.empty[Long, Long]
+    ExactlyOnce.start(docs, checkpointDir)(
+      // Restart recovery: drop manifest files left by an uncommitted run of
+      // THIS incarnation (ExactlyOnce protocol — checkpoint-scoped, so a
+      // fresh checkpoint continuing an existing corpus purges nothing), then
+      // derive offsets from the WHOLE surviving manifest: rows from prior
+      // incarnations and pre-protocol rows are committed by definition, which
+      // is exactly the continuation pattern.
+      (spark, ckpt, batchId) => {
+        ExactlyOnce.purge(spark, manifestDir, ckpt, batchId)
+        nextPack =
           try spark.read.parquet(manifestDir)
             .groupBy(col("bucket")).agg((max(col("pack_ix")) + 1).alias("off"))
             .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
           catch { case _: org.apache.spark.sql.AnalysisException => Map.empty }
-        }
+      },
+      (batch, ckpt, batchId) => {
+        val spark = batch.sparkSession
+        val offMap = nextPack
         // Empty offsets + existing data is legitimate in exactly one state: the
         // data is THIS incarnation's own uncommitted leftovers (batch-0 crash
         // window), which the deterministic dynamic overwrite below replaces.
@@ -101,7 +96,7 @@ object StreamingCorpusSink {
             // NULL on rows tagged by a prior incarnation only if compared to a
             // null literal — hence the explicit isNull arm, and the None case
             // short-circuits to "all foreign" rather than comparing to NULL.)
-            val foreign = ckpt(spark) match {
+            val foreign = ckpt match {
               case Some(id) =>
                 spark.read
                   .schema(org.apache.spark.sql.types.StructType(Seq(
@@ -119,8 +114,7 @@ object StreamingCorpusSink {
                 "restarted numbering would overwrite committed shards")
           }
         }
-        val fresh = CorpusSink.assignShards(
-          batch.toDF(), textCol, idCol, budget, buckets)
+        val fresh = CorpusSink.assignShards(batch, textCol, idCol, budget, buckets)
         val assigned = if (offMap.isEmpty) fresh else {
           val off = spark.createDataFrame(offMap.toSeq).toDF("bucket", "__off")
           fresh.join(broadcast(off), Seq("bucket"), "left")
@@ -137,12 +131,12 @@ object StreamingCorpusSink {
           // tags so the empty-offsets guard above can recognize its own
           // uncommitted leftovers.
           ExactlyOnce.tag(p.repartition(col("bucket"), col("pack_ix")),
-              ckpt(spark), batchId)
+              ckpt, batchId)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket", "pack_ix").parquet(dataDir)
           val manifestDf = ExactlyOnce.tag(CorpusSink.shardManifest(p, idCol),
-            ckpt(spark), batchId)
+            ckpt, batchId)
           // |shards-this-batch| rows: tiny — collect once to feed BOTH the manifest
           // append and the forward-carried offsets without a second packing job
           val manifest = manifestDf.collect()
@@ -152,16 +146,11 @@ object StreamingCorpusSink {
           val batchMax = manifest
             .groupBy(_.getAs[Long]("bucket"))
             .map { case (b, rows) => b -> (rows.map(_.getAs[Long]("pack_ix")).max + 1) }
-          nextPack = Some(offMap ++ batchMax.map { case (b, nx) =>
+          nextPack = offMap ++ batchMax.map { case (b, nx) =>
             b -> math.max(nx, offMap.getOrElse(b, 0L))
-          })
+          }
         } finally p.unpersist()
-      }
-    }
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch((b: Dataset[Row], id: Long) => step(b, id))
-      .start()
+      })
   }
 
   /** Streaming ingest into a min/max-indexed parquet table
@@ -190,64 +179,49 @@ object StreamingCorpusSink {
       rows: DataFrame, dataDir: String, checkpointDir: String,
       statCols: Seq[String], batchPartitions: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.ScaleLayout
-    val step = new ((Dataset[Row], Long) => Unit) with Serializable {
-      private var recovered = false
-      private var ckptCache: Option[Option[String]] = None
-      private def ckpt(spark: SparkSession): Option[String] = {
-        if (ckptCache.isEmpty)
-          ckptCache = Some(ExactlyOnce.checkpointId(spark, checkpointDir))
-        ckptCache.get
-      }
-
-      private def recover(
-          spark: org.apache.spark.sql.SparkSession, batchId: Long): Unit = {
-        val conf = spark.sparkContext.hadoopConfiguration
-        // The COMMITTED index version dir (versioned layout, or the flat legacy
-        // dir) — appendIndexed extends this same dir, so purge targets it too.
-        val idxDir = ScaleLayout.committedIndexDir(spark, dataDir).getOrElse(return)
-        val idxPath = new org.apache.hadoop.fs.Path(idxDir)
-        val fs = idxPath.getFileSystem(conf)
-        if (!fs.exists(idxPath)) return
-        // 1. purge index files from batches THIS incarnation never committed
-        // (checkpoint-scoped: a fresh checkpoint over an existing table purges
-        // nothing, so step 2 sees every committed file as live)
-        ExactlyOnce.purge(spark, idxDir, ckpt(spark), batchId)
-        // 2. delete data files the surviving index does not reference — the
-        // crash window between data append and index append
-        val live =
-          try spark.read.parquet(idxDir)
-            .select("file").collect().map(_.getString(0)).toSet
-          catch { case _: org.apache.spark.sql.AnalysisException => Set.empty[String] }
-        val dPath = new org.apache.hadoop.fs.Path(dataDir)
-        dPath.getFileSystem(conf).listStatus(dPath).foreach { st =>
-          val n = st.getPath.getName
-          if (n.endsWith(".parquet") && !n.startsWith("_") && !live.contains(n))
-            st.getPath.getFileSystem(conf).delete(st.getPath, false)
-        }
-        if (live.isEmpty) { // all batches purged: restart the table fresh
-          fs.delete(new org.apache.hadoop.fs.Path(s"$dataDir/_graft_index"), true)
-          fs.delete(new org.apache.hadoop.fs.Path(s"$dataDir/_graft_commit"), false)
-          ()
-        }
-      }
-
-      override def apply(batch: Dataset[Row], batchId: Long): Unit = {
+    ExactlyOnce.start(rows, checkpointDir)(
+      recoverIndexed(_, dataDir, _, _),
+      (batch, ckpt, batchId) => {
         val spark = batch.sparkSession
-        if (!recovered) { recover(spark, batchId); recovered = true }
         val ranged = if (batchPartitions > 0)
-          batch.toDF().repartitionByRange(batchPartitions, statCols.map(col): _*)
-        else batch.toDF()
+          batch.repartitionByRange(batchPartitions, statCols.map(col): _*)
+        else batch
         val sorted = ranged.sortWithinPartitions(statCols.map(col): _*)
-        val tag = ExactlyOnce.tagCols(ckpt(spark), batchId)
+        val tag = ExactlyOnce.tagCols(ckpt, batchId)
         if (ScaleLayout.committedIndexDir(spark, dataDir).isDefined)
           ScaleLayout.appendIndexed(sorted, dataDir, statCols, tag)
         else ScaleLayout.writeIndexed(sorted, dataDir, statCols, tag)
-      }
+      })
+  }
+
+  /** [[indexedSinkStream]]'s restart recovery, run before an incarnation's
+    * first batch writes.
+    */
+  private def recoverIndexed(
+      spark: SparkSession, dataDir: String, ckpt: Option[String], batchId: Long): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    // The COMMITTED index version dir (versioned layout, or the flat legacy
+    // dir) — appendIndexed extends this same dir, so purge targets it too.
+    val idxDir = ScaleLayout.committedIndexDir(spark, dataDir).getOrElse(return)
+    val idxPath = new org.apache.hadoop.fs.Path(idxDir)
+    if (!idxPath.getFileSystem(conf).exists(idxPath)) return
+    // 1. purge index files from batches THIS incarnation never committed
+    // (checkpoint-scoped: a fresh checkpoint over an existing table purges
+    // nothing, so step 2 sees every committed file as live)
+    ExactlyOnce.purge(spark, idxDir, ckpt, batchId)
+    // 2. delete data files the surviving index does not reference — the
+    // crash window between data append and index append
+    val live =
+      try spark.read.parquet(idxDir)
+        .select("file").collect().map(_.getString(0)).toSet
+      catch { case _: org.apache.spark.sql.AnalysisException => Set.empty[String] }
+    val dPath = new org.apache.hadoop.fs.Path(dataDir)
+    dPath.getFileSystem(conf).listStatus(dPath).foreach { st =>
+      val n = st.getPath.getName
+      if (n.endsWith(".parquet") && !n.startsWith("_") && !live.contains(n))
+        st.getPath.getFileSystem(conf).delete(st.getPath, false)
     }
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch((b: Dataset[Row], id: Long) => step(b, id))
-      .start()
+    // all batches purged: restart the table fresh
+    if (live.isEmpty) ScaleLayout.dropIndex(spark, dataDir)
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.EntityResolution
@@ -61,29 +61,22 @@ object StreamingEntityResolution {
       maxDist: Int = 2, maxBlock: Int = 10000, blocking: String = "bigram",
       compactAt: Int = 64)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val step = new ((Dataset[Row], Long) => Unit) with Serializable {
-      private var ckptCache: Option[Option[String]] = None
-      private var recovered = false
-      // the accumulated catalog, carried between triggers (entity-sized;
-      // localCheckpoint-snapped so lineage never chains across batches) —
-      // None until the incarnation's first batch recovers it from disk
-      private var catalogCache: Option[DataFrame] = None
-
-      override def apply(batch: Dataset[Row], batchId: Long): Unit = {
+    // the accumulated catalog, carried between triggers (entity-sized;
+    // localCheckpoint-snapped so lineage never chains across batches) — None
+    // until the incarnation's first batch reads it from disk
+    var catalogCache: Option[DataFrame] = None
+    ExactlyOnce.start(records, checkpointDir)(
+      // purge targets the LIVE generation — tagged per-batch appends only ever
+      // land there; compacted generations are untagged and would never match,
+      // so scanning them would be pure waste
+      (spark, ck, batchId) => {
+        ExactlyOnce.purge(spark,
+          graft.util.CommitPointer.liveDir(spark, assignDir), ck, batchId)
+        ExactlyOnce.purge(spark,
+          graft.util.CommitPointer.liveDir(spark, catalogDir), ck, batchId)
+      },
+      (batch, ck, batchId) => {
         val spark = batch.sparkSession
-        if (ckptCache.isEmpty)
-          ckptCache = Some(ExactlyOnce.checkpointId(spark, checkpointDir))
-        val ck = ckptCache.get
-        if (!recovered) {
-          // purge targets the LIVE generation — tagged per-batch appends only
-          // ever land there; compacted generations are untagged and would
-          // never match, so scanning them would be pure waste
-          ExactlyOnce.purge(spark,
-            graft.util.CommitPointer.liveDir(spark, assignDir), ck, batchId)
-          ExactlyOnce.purge(spark,
-            graft.util.CommitPointer.liveDir(spark, catalogDir), ck, batchId)
-          recovered = true
-        }
         // AFTER the purge (compacting first would launder a crashed attempt's
         // uncommitted rows into untagged permanence)
         val liveAssign = DirCompaction.maintain(spark, assignDir, compactAt)
@@ -155,12 +148,7 @@ object StreamingEntityResolution {
               runBatch(diskCatalog())
           }
         } finally in.unpersist()
-      }
-    }
-    records.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(step)
-      .start()
+      })
   }
 
   /** The accumulated catalog as a readable table — resolves the live

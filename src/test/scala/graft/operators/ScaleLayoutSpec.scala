@@ -344,6 +344,37 @@ class ScaleLayoutSpec extends AnyFunSuite {
     } finally graft.util.Fs.deleteTree(java.nio.file.Paths.get(tmp))
   }
 
+  test("a table whose only commit is a legacy _graft_commit pointer resolves " +
+      "its index through that pointer") {
+    val tmp = java.nio.file.Files.createTempDirectory("idxpointer").toString
+    try {
+      val df = (0L until 1000L).map(i => Tuple1(i)).toDF("v").repartitionByRange(4, col("v"))
+      ScaleLayout.writeIndexed(df, s"$tmp/t", Seq("v"))
+      // the pre-marker layout: no marker, a pointer file naming v1
+      new java.io.File(s"$tmp/t/_graft_index/_commit_v1").delete()
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$tmp/t/_graft_commit"), "v1\n")
+      assert(ScaleLayout.committedVersion(spark, s"$tmp/t").contains(1))
+      assert(ScaleLayout.committedIndexDir(spark, s"$tmp/t").contains(s"$tmp/t/_graft_index/v1"))
+      assert(ScaleLayout.readPruned(spark, s"$tmp/t", Map("v" -> (0.0, 249.0)))
+        .count() == 250L)
+    } finally graft.util.Fs.deleteTree(java.nio.file.Paths.get(tmp))
+  }
+
+  test("a corrupt _graft_commit pointer fails loudly and names the file") {
+    val tmp = java.nio.file.Files.createTempDirectory("idxcorrupt").toString
+    try {
+      val df = (0L until 100L).map(i => Tuple1(i)).toDF("v")
+      ScaleLayout.writeIndexed(df, s"$tmp/t", Seq("v"))
+      new java.io.File(s"$tmp/t/_graft_index/_commit_v1").delete()
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$tmp/t/_graft_commit"), "banana")
+      val e = intercept[IllegalArgumentException] {
+        ScaleLayout.committedIndexDir(spark, s"$tmp/t")
+      }
+      assert(e.getMessage.contains("corrupt commit pointer"), e.getMessage)
+      assert(e.getMessage.contains(s"$tmp/t/_graft_commit"), e.getMessage)
+    } finally graft.util.Fs.deleteTree(java.nio.file.Paths.get(tmp))
+  }
+
   test("compactIndex on a trailing-slash path still classifies the flat index " +
       "correctly (normalized Path comparison)") {
     val tmp = java.nio.file.Files.createTempDirectory("idxslash").toString
