@@ -3,6 +3,7 @@ package graft.api
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.graft.Bridge
 
 /** File-based query result cache (A17): the reference caches Arrow results on disk
   * keyed by (datasource, sql, connection info) with TTL
@@ -40,7 +41,7 @@ final class QueryCache(root: String, ttlMillis: Long = 10 * 60 * 1000,
     // would let a handle race the deletion
     if (Files.exists(marker) && !Files.exists(d.resolve(Evicted)) &&
       System.currentTimeMillis() - Files.getLastModifiedTime(marker).toMillis < ttlMillis)
-      Some(spark.read.parquet(d.toString))
+      Some(read(spark, d.toString))
     else None
   }
 
@@ -51,8 +52,12 @@ final class QueryCache(root: String, ttlMillis: Long = 10 * 60 * 1000,
     val d = dirFor(keyOf(manifestId, sql, props.toSeq.sorted.mkString(";")))
     df.write.mode(SaveMode.Overwrite).parquet(d.toString)
     sweep(keep = d)
-    df.sparkSession.read.parquet(d.toString)
+    read(df.sparkSession, d.toString)
   }
+
+  // an entry's schema comes from its footer on the driver: a hit starts no job
+  private def read(spark: SparkSession, dir: String): DataFrame =
+    spark.read.format("parquet").schema(Bridge.parquetSchema(spark, dir)).load(dir)
 
   /** Bound the cache by age AND count. Expired entries are deleted first; if the
     * directory still holds more than `maxEntries` live entries, the oldest (by

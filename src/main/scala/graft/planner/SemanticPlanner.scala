@@ -61,6 +61,10 @@ final case class CloudConnection(
   * shape `{url, format}` (ibis-server/tests/.../local_file/conftest.py:21-25).
   * `cloud` carries object-store credentials for `s3a://` urls (applied bucket-scoped
   * at construction, mirroring the reference's per-connector connection info).
+  *
+  * A parquet source's schema is read from its footer on the driver
+  * (`Bridge.parquetSchema`), so resolving one starts no Spark job. The CSV
+  * header read below still runs one job per CSV source; it is left as is.
   */
 final class PathResolver(
     url: String, format: String = "parquet",
@@ -96,15 +100,20 @@ final class PathResolver(
         // price of not declaring.
         spark.read.format("csv")
           .option("header", "true").option("inferSchema", "true").load(path)
+      case "parquet" =>
+        spark.read.format("parquet").schema(Bridge.parquetSchema(spark, path)).load(path)
       case _ =>
         spark.read.format(format).load(path)
     }
   }
 
+  /** Listed through the Hadoop FS API, so `file:` and `s3a://` urls list too. */
   override def physicalNames: Seq[String] = {
-    val dir = new java.io.File(url)
-    if (!dir.isDirectory) Nil
-    else dir.listFiles().toSeq.map(_.getName).filter(_.endsWith(s".$ext")).map(_.stripSuffix(s".$ext"))
+    val dir = new org.apache.hadoop.fs.Path(url)
+    val fs = dir.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dir) || !fs.getFileStatus(dir).isDirectory) Nil
+    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
+      .filter(_.endsWith(s".$ext")).map(_.stripSuffix(s".$ext"))
   }
 }
 

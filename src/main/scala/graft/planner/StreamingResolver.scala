@@ -1,6 +1,7 @@
 package graft.planner
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.Bridge
 
 import graft.mdl.TableReference
 
@@ -19,8 +20,9 @@ import graft.mdl.TableReference
   * fault-tolerance semantics).
   *
   * Scale/semantics notes:
-  *   - The schema comes from the existing parquet footers (one metadata read,
-  *     no data pass) — `readStream` requires an explicit schema by design.
+  *   - The schema comes from one existing parquet footer, read on the driver
+  *     (`Bridge.parquetSchema`: no Spark job, no data pass) — `readStream`
+  *     requires an explicit schema by design.
   *   - `maxFilesPerTrigger` bounds per-micro-batch work on large directories —
   *     the knob that keeps a catch-up run from loading the whole history into
   *     one batch.
@@ -45,7 +47,7 @@ final class StreamingPathResolver(
   override def resolve(spark: SparkSession, ref: TableReference): DataFrame =
     if (streamTables.contains(ref.table)) {
       val path = s"$url/${ref.table}.parquet"
-      val schema = spark.read.parquet(path).schema
+      val schema = Bridge.parquetSchema(spark, path)
       // FileStreamSource requires a directory (or glob) — a bare single-file
       // table becomes a single-alternative {name} glob so the stream's base
       // path is the parent directory, with zero data movement. Probed through

@@ -1,9 +1,18 @@
 package org.apache.spark.sql.graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession => ClassicSession}
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
+  ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
+import org.apache.spark.sql.types.StructType
 
 /** Narrow bridge to `private[sql]` internals: turn a hand-built logical plan into a
   * DataFrame on the session (used by model substitution, which rewrites parsed plans
@@ -94,6 +103,42 @@ object Bridge {
     */
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** The schema `spark.read.parquet(path)` infers, read on the driver from one
+    * footer instead of by a Spark job. The footer is the one Spark's inference
+    * reads when `mergeSchema` is off: `_common_metadata`, else `_metadata`, else
+    * the first data file of Spark's own listing (hidden `_`/`.` names skipped).
+    * It converts under the session's conf, so `nanosAsLong`, INT96 and
+    * binary-as-string read as Spark reads them; partition columns come from
+    * the listing's paths and follow the data columns. Spark's own inference runs
+    * where one footer cannot give its answer: a merged schema
+    * (`spark.sql.parquet.mergeSchema`), a streaming sink's output (listed from
+    * its log), a data column that is also a partition column, and a path with
+    * no data file (Spark raises its own error).
+    */
+  def parquetSchema(spark: SparkSession, path: String): StructType = {
+    val cs = spark.asInstanceOf[ClassicSession]
+    val conf = cs.sessionState.conf
+    val hadoopConf = cs.sessionState.newHadoopConf()
+    def inferred = cs.read.parquet(path).schema
+    if (conf.isParquetSchemaMergingEnabled ||
+      FileStreamSink.hasMetadata(Seq(path), hadoopConf, conf)) return inferred
+    val index = new InMemoryFileIndex(cs, Seq(new Path(path)), Map.empty, None)
+    val files = index.allFiles().sortBy(_.getPath.toString)
+    val summaries =
+      Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE, ParquetFileWriter.PARQUET_METADATA_FILE)
+    val chosen = summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+      .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+    chosen.fold(inferred) { f =>
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(f, hadoopConf), SKIP_ROW_GROUPS)
+      val schema = ParquetFileFormat.readSchemaFromFooter(
+        new Footer(f.getPath, footer), new ParquetToSparkSchemaConverter(conf))
+      val partitions = index.partitionSchema
+      if (schema.fieldNames.exists(n => partitions.fieldNames.exists(conf.resolver(_, n)))) inferred
+      else StructType(schema ++ partitions).asNullable // as HadoopFsRelation reads it
+    }
+  }
 
   /** Register a plan-time expression builder as a session temp function (the same
     * registry SQL temp functions land in, so `SHOW FUNCTIONS` / drops behave alike).

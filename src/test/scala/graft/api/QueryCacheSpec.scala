@@ -128,4 +128,19 @@ class QueryCacheSpec extends AnyFunSuite {
     assert(cache.createdAt("m", "SELECT 2 AS v", Map.empty).isDefined)
     cache.invalidateAll()
   }
+
+  test("a hit starts no Spark job and reads back the entry's schema and rows") {
+    val root = tmpRoot()
+    val cache = new QueryCache(root)
+    val src = spark.range(5).toDF("id").selectExpr("id", "cast(id AS string) AS s")
+    val written = cache.put(src, "m", "SELECT rows", Map.empty)
+    val (hit, jobs) = graft.JobMeter.jobs(spark)(cache.get(spark, "m", "SELECT rows", Map.empty))
+    assert(jobs == 0, s"a cache hit started $jobs Spark job(s)")
+    val stored = spark.read.parquet(Paths.get(root).toFile.listFiles().head.getPath)
+    for (df <- Seq(hit.get, written)) {
+      assert(df.schema == stored.schema)
+      assert(df.collect().toSet == src.collect().toSet)
+    }
+    cache.invalidateAll()
+  }
 }

@@ -56,6 +56,22 @@ class SourceFormatsSpec extends AnyFunSuite {
     }
   }
 
+  test("a refSql model deploys over a file: url (physical names listed through Hadoop)") {
+    val dir = new java.io.File(TestSpark.sfDir).getAbsolutePath
+    val resolver = new PathResolver("file://" + dir)
+    assert(resolver.physicalNames.contains("nation"))
+    val m = Manifest(catalog = "g", schema = "s", models = List(Model(
+      name = "m_europe",
+      refSql = Some("SELECT n_nationkey, n_name FROM nation WHERE n_regionkey = 3"),
+      columns = List(Column("n_nationkey", "int"), Column("n_name", "varchar")))))
+    val sess = GraftEngine.deploy(spark, m, resolver)
+    val want = spark.read.parquet(s"$dir/nation.parquet").where("n_regionkey = 3")
+      .collect().map(r => (r.getInt(0), r.getString(1))).toSet
+    assert(want.nonEmpty)
+    assert(sess.query("SELECT n_nationkey, n_name FROM m_europe").collect()
+      .map(r => (r.getInt(0), r.getString(1))).toSet == want)
+  }
+
   test("csv scans take the DECLARED schema — no inference pass over the file") {
     val src = spark.read.parquet(s"${TestSpark.sfDir}/nation.parquet")
     val tmp = Files.createTempDirectory("graft_csv_sch_").toString

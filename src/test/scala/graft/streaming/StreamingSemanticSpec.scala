@@ -49,6 +49,15 @@ class StreamingSemanticSpec extends AnyFunSuite {
     assert(streamed.forall(_._3 > 300000.0))
   }
 
+  test("resolving a stream table reads its schema without a Spark job") {
+    val resolver = new StreamingPathResolver(dir, Set("orders"))
+    val (df, jobs) = graft.JobMeter.jobs(spark)(
+      resolver.resolve(spark, TableReference(table = "orders")))
+    assert(jobs == 0, s"resolving the stream started $jobs Spark job(s)")
+    assert(df.isStreaming)
+    assert(df.schema == spark.read.parquet(s"$dir/orders.parquet").schema)
+  }
+
   test("per-query RLAC property binds into the streaming plan") {
     val loose = drainToRows(
       "SELECT o_orderkey, cust_segment, o_totalprice FROM s_orders",
