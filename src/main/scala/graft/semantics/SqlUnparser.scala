@@ -13,17 +13,18 @@ import org.apache.spark.sql.types._
   * The reference unparses its optimized DataFusion plan to backend SQL so a
   * remote warehouse executes the semantic-layer expansion; here the OPTIMIZED
   * Catalyst plan (models/views/calc fields already expanded, subqueries
-  * decorrelated) is rendered to executable SQL in a target dialect:
+  * decorrelated) is rendered to executable SQL in one of the [[dialects]].
   *
-  *   - `spark`  — self-contained Spark SQL over `parquet.`path`` scans; any bare
-  *     Spark session (no deploy, no temp views) can run the text. Expressions
-  *     the structural renderer doesn't know fall back to Catalyst's own
-  *     `Expression.sql`, so coverage is total for this dialect.
-  *   - `duckdb` — ANSI-flavored DuckDB SQL over bare table names (scan paths
-  *     reduced to `basename.parquet` → `basename`, the logical-name convention
-  *     the reference's unparser also emits); a curated expression subset, with
-  *     a clear `UnsupportedOperationException` beyond it (the reference errors
-  *     identically on constructs a dialect cannot express).
+  * Dialects take the reference's shape: DataFusion's `Dialect` trait has
+  * defaults and `wren_dialect.rs` overrides a handful. [[Dialect]] carries ANSI
+  * defaults (double-quoted identifiers, logical table names, the DuckDB/Trino
+  * type map, ANSI literals, EXISTS-rendered semi/anti joins), and each dialect
+  * object overrides only where its engine differs. `spark` replays on a bare
+  * Spark session over `parquet.`path`` scans and falls back to Catalyst's own
+  * `Expression.sql`, so its coverage is total. Every other dialect renders a
+  * curated subset and refuses beyond it with an `UnsupportedOperationException`
+  * whose message starts `"<name> dialect: "`; the reference errors the same
+  * way on constructs a dialect cannot express.
   *
   * Correct-by-construction naming: every subquery's output column is aliased to
   * the globally unique `c<exprId>`, and every reference renders that name — so
@@ -34,35 +35,35 @@ import org.apache.spark.sql.types._
   */
 object SqlUnparser {
 
-  def dialectFor(name: String): Dialect =
-    name.toLowerCase match {
-      // Databricks SQL is Spark SQL (the reference ships both as distinct
-      // sqlglot targets, data_source.py:86-87; one dialect serves both here)
-      case "spark" | "databricks" => SparkDialect
-      case "duckdb" => DuckDbDialect
-      case "postgres" | "postgresql" => PostgresDialect
-      // the reference routes Doris through its MySQLDialect (inner_dialect.rs:99)
-      case "mysql" | "doris" => MySqlDialect
-      case "bigquery" => BigQueryDialect
-      case "clickhouse" => ClickHouseDialect
-      case "snowflake" => SnowflakeDialect
-      case "mssql" | "sqlserver" => MsSqlDialect
-      case "oracle" => OracleDialect
-      // the reference writes Trino for canner (rewriter.py:93-94); Athena's
-      // engine is Trino-based and sqlglot's athena target is Trino-derived
-      case "trino" | "presto" | "athena" | "canner" => TrinoDialect
-      case "redshift" => RedshiftDialect
-      // the reference routes its file sources through DuckDB
-      // (ibis-server/app/mdl/rewriter.py:94-101), and datafusion SQL's ANSI
-      // surface matches the duckdb dialect's emitted subset
-      case "local_file" | "s3_file" | "minio_file" | "gcs_file" |
-           "datafusion" => DuckDbDialect
-      case other => throw new IllegalArgumentException(
-        s"unknown unparse dialect '$other' " +
-          "(spark|duckdb|postgres|mysql|bigquery|clickhouse|snowflake|mssql" +
-          "|oracle|trino|redshift + databricks/doris/athena/canner/" +
-          "local_file/s3_file/minio_file/gcs_file/datafusion aliases)")
-    }
+  /** Every dialect; [[dialectFor]] finds one by its [[Dialect.name]]. */
+  val dialects: Seq[Dialect] = Seq(SparkDialect, DuckDbDialect, PostgresDialect,
+    MySqlDialect, BigQueryDialect, ClickHouseDialect, SnowflakeDialect,
+    MsSqlDialect, OracleDialect, TrinoDialect, RedshiftDialect)
+
+  private val aliases: Map[String, Dialect] = Map(
+    // Databricks SQL is Spark SQL (the reference ships both as distinct
+    // sqlglot targets, data_source.py:86-87; one dialect serves both here)
+    "databricks" -> SparkDialect,
+    "postgresql" -> PostgresDialect,
+    // the reference routes Doris through its MySQLDialect (inner_dialect.rs:99)
+    "doris" -> MySqlDialect,
+    "sqlserver" -> MsSqlDialect,
+    // the reference writes Trino for canner (rewriter.py:93-94); Athena's
+    // engine is Trino-based and sqlglot's athena target is Trino-derived
+    "presto" -> TrinoDialect, "athena" -> TrinoDialect, "canner" -> TrinoDialect) ++
+    // the reference routes its file sources through DuckDB
+    // (ibis-server/app/mdl/rewriter.py:94-101), and datafusion SQL's ANSI
+    // surface matches the duckdb dialect's emitted subset
+    Seq("local_file", "s3_file", "minio_file", "gcs_file", "datafusion")
+      .map(_ -> DuckDbDialect)
+
+  def dialectFor(name: String): Dialect = {
+    val key = name.toLowerCase
+    dialects.find(_.name == key).orElse(aliases.get(key)).getOrElse(
+      throw new IllegalArgumentException(
+        s"unknown unparse dialect '$key' (${dialects.map(_.name).mkString("|")}" +
+          s" + ${aliases.keys.toSeq.sorted.mkString("/")} aliases)"))
+  }
 
   /** Render `plan` as executable SQL with final columns named `outputNames`
     * (positionally aligned with `plan.output`).
@@ -110,23 +111,93 @@ object SqlUnparser {
     ids.toSet
   }
 
+  /** A target engine's spelling. Every member has an ANSI default that most
+    * engines share; a dialect overrides only where its engine differs.
+    */
   sealed trait Dialect {
-    def quote(ident: String): String
-    def relation(rootPath: String): String
-    def typeName(dt: DataType): String
-    def literal(l: Literal): String
-    def joinKeyword(jt: JoinType): String
-    def values(rows: Seq[String], alias: String, cols: Seq[String]): String
+    /** The [[dialectFor]] name, and the prefix of every refusal. */
+    val name: String
+    def quote(ident: String): String = "\"" + ident.replace("\"", "\"\"") + "\""
+    /** A `basename.parquet` scan renders as its logical table name (the
+      * convention the reference's unparser also emits); a directory scan has
+      * no portable table function.
+      */
+    def relation(rootPath: String): String = {
+      val base = rootPath.stripSuffix("/").split('/').last
+      if (base.endsWith(".parquet")) quote(base.stripSuffix(".parquet"))
+      else throw new UnsupportedOperationException(
+        s"$name dialect: no parquet table function for directory scan $rootPath " +
+          "— register the table under its logical name")
+    }
+    def typeName(dt: DataType): String = dt match {
+      case StringType => "VARCHAR"
+      case IntegerType => "INTEGER"
+      case LongType => "BIGINT"
+      case ShortType => "SMALLINT"
+      case ByteType => "TINYINT"
+      case DoubleType => "DOUBLE"
+      case FloatType => "REAL"
+      case BooleanType => "BOOLEAN"
+      case DateType => "DATE"
+      case TimestampNTZType | _: TimestampType => "TIMESTAMP"
+      case d: DecimalType => s"DECIMAL(${d.precision},${d.scale})"
+      case other => throw new UnsupportedOperationException(
+        s"$name dialect: type ${other.sql}")
+    }
+    def literal(l: Literal): String = ansiLiteral(l)
+    def joinKeyword(jt: JoinType): String = jt match {
+      case Inner => "JOIN"
+      case Cross => "CROSS JOIN"
+      case LeftOuter => "LEFT JOIN"
+      case RightOuter => "RIGHT JOIN"
+      case FullOuter => "FULL JOIN"
+      case LeftSemi | LeftAnti => throw new UnsupportedOperationException(
+        s"$name dialect: semi/anti joins render as EXISTS (semiAntiAsExists)")
+      case other => throw new UnsupportedOperationException(
+        s"unparse: join type $other")
+    }
+    def values(rows: Seq[String], alias: String, cols: Seq[String]): String =
+      s"(VALUES ${rows.mkString(", ")}) AS ${quote(alias)}(${cols.map(quote).mkString(", ")})"
     /** Last-resort rendering for expressions outside the structural subset;
       * `rendered` maps any expression to dialect SQL (for argument recursion).
+      * A dialect's own cases end in `super.fallback`, whose tail is a
+      * [[fnName]] call or a loud refusal.
       */
-    def fallback(e: Expression, rendered: Expression => String): String
+    def fallback(e: Expression, rendered: Expression => String): String = e match {
+      // the Morton kernel has no builtin anywhere, and its bound-once
+      // expansion ([[mortonExpansion]]) needs outer references inside a
+      // derived table, which most engines' decorrelation rejects
+      case _: graft.functions.InterleaveBits => throw new UnsupportedOperationException(
+        s"$name dialect: zorder_key's bound-once expansion needs outer " +
+          "references inside a derived table — compute the Morton key engine-side")
+      // Spark folds `date + interval 'n' day` to date_add(date, n); engines
+      // without a 2-int-arg date_add add days with DATE + INTEGER, returning
+      // DATE — the same type Spark's date_add yields
+      case da: DateAdd => s"(${rendered(da.startDate)} + ${rendered(da.days)})"
+      case ds: DateSub => s"(${rendered(ds.startDate)} - ${rendered(ds.days)})"
+      // md5(text) yields lowercase hex text like Spark's once the
+      // Spark-inserted STRING→BINARY cast is stripped
+      case m: Md5 => s"md5(${rendered(md5Arg(m))})"
+      case _ => fnName(e.prettyName) match {
+        case Some(n) => s"$n(${e.children.map(rendered).mkString(", ")})"
+        case None => throw new UnsupportedOperationException(
+          s"$name dialect: unsupported expression ${e.prettyName} in ${e.sql}")
+      }
+    }
+    /** Function names the engine spells as Spark does; [[renamed]] maps the
+      * ones it spells differently.
+      */
+    protected def direct: Set[String] = Set.empty
+    protected def renamed: Map[String, String] = Map.empty
     /** Scalar function name mapping; None = not expressible. */
-    def fnName(prettyName: String): Option[String]
-    /** Engines without SEMI/ANTI JOIN syntax (Postgres) render those join
+    def fnName(prettyName: String): Option[String] = {
+      val p = prettyName.toLowerCase
+      if (direct(p)) Some(p) else renamed.get(p)
+    }
+    /** Engines without SEMI/ANTI JOIN syntax (most of them) render those join
       * types as correlated (NOT) EXISTS instead of a join keyword.
       */
-    def semiAntiAsExists: Boolean = false
+    def semiAntiAsExists: Boolean = true
     /** Rewrite a user-visible output column name the target cannot accept
       * verbatim (BigQuery's flexible-column-name restrictions).
       */
@@ -222,17 +293,21 @@ object SqlUnparser {
       * the renderer refuses loudly. Regex FLAVOR (Spark's Java syntax vs
       * RE2 on DuckDB/Trino/BigQuery/ClickHouse vs POSIX ARE on Postgres/
       * Oracle) is name-mapped, not translated — the reference's sqlglot
-      * posture; the common class/anchor/quantifier subset agrees.
+      * posture; the common class/anchor/quantifier subset agrees. Most
+      * engines' REGEXP_REPLACE replaces every match by default.
       */
     def regexpMatch(s: String, p: String): Option[String] = None
-    def regexpReplaceAll(s: String, p: String, r: String): Option[String] = None
+    def regexpReplaceAll(s: String, p: String, r: String): Option[String] =
+      Some(s"REGEXP_REPLACE($s, $p, $r)")
     def regexpExtract(s: String, p: String, idx: Int): Option[String] = None
     /** split_part(s, delim, n): 1-based literal-delimiter field access with
       * Spark's ''-on-overflow (Spark lowers it to element_at over an internal
-      * split). None = no engine spelling with those semantics; negative
-      * (from-the-end) indexes always refuse.
+      * split), which the engines' native split_part shares. None = no engine
+      * spelling with those semantics; negative (from-the-end) indexes always
+      * refuse.
       */
-    def splitPart(s: String, delim: String, n: Int): Option[String] = None
+    def splitPart(s: String, delim: String, n: Int): Option[String] =
+      Some(s"split_part($s, $delim, $n)")
     /** Bitwise machinery (grouping() lowers to `shiftright(gid, n) & 1` over
       * the Expand-emitted grouping id): infix on the Postgres family, named
       * functions on Trino/Snowflake/ClickHouse, arithmetic identities on
@@ -246,27 +321,60 @@ object SqlUnparser {
     /** Aggregate result-type fidelity (the reference's unparser renders
       * type-aware, `wren-core/core/src/mdl/dialect/wren_dialect.rs:141-235`).
       * Spark types integral SUM as BIGINT and AVG/the stat family as DOUBLE;
-      * engines that widen (DuckDB's HUGEINT, Postgres/MySQL/Oracle NUMERIC)
-      * return a different type for the same call, so an executed result stops
-      * matching Spark's schema even when every value agrees. Some(dt) wraps
-      * the rendered call in `CAST(.. AS dt)` — a no-op on engines that already
-      * agree, a type repair on those that widen.
+      * engines that widen return a different type for the same call, so an
+      * executed result stops matching Spark's schema even when every value
+      * agrees. Some(dt) wraps the rendered call in `CAST(.. AS dt)`.
+      *
+      * The default is the drift pattern the ANSI engines share: integral SUM
+      * widens (DuckDB HUGEINT — the driver-caught tpch_q12 drift, 254 → 254.0
+      * through pandas; Postgres sum(bigint)→NUMERIC; MySQL DECIMAL;
+      * Snowflake/Oracle NUMBER), decimal SUM/AVG widen to the engine's
+      * maximum precision (DuckDB/Trino/Redshift (38,s), GoogleSQL's fixed
+      * (38,9)), REAL sums stay REAL where Spark widens float→double, and
+      * integer AVG / stddev return exact NUMERIC on some engines where Spark
+      * says DOUBLE. Casting back to Spark's result type is a no-op wherever
+      * the engine already agrees (Trino and Redshift sum integrals as BIGINT;
+      * the cast keeps DuckDB's execution of their texts type-exact), so the
+      * default prefers a redundant cast over tracking each engine's full
+      * typing matrix.
       */
-    def aggResultCast(fn: AggregateFunction): Option[DataType] = None
+    def aggResultCast(fn: AggregateFunction): Option[DataType] =
+      fn match {
+        case s: Sum => s.dataType match {
+          case dt if isIntegral(dt) => Some(LongType)
+          case d: DecimalType => Some(d)
+          case DoubleType if s.child.dataType == FloatType => Some(DoubleType)
+          case _ => None
+        }
+        case a: Average => a.dataType match {
+          case d: DecimalType => Some(d)
+          case DoubleType if a.child.dataType != DoubleType => Some(DoubleType)
+          case _ => None
+        }
+        case f if statDoubleFns(f.prettyName.toLowerCase) &&
+          f.dataType == DoubleType &&
+          f.children.headOption.exists(_.dataType != DoubleType) =>
+          Some(DoubleType)
+        case _ => None
+      }
     /** Ranking window functions (`row_number`/`rank`/`dense_rank`/`ntile`)
-      * are INT in Spark but BIGINT on most ANSI engines; engines with a
-      * 32-bit integer type cast the whole `fn OVER (spec)` back. None =
-      * either the engine agrees or it has no 32-bit type to cast to
-      * (BigQuery INT64, Snowflake/Oracle NUMBER, MySQL's CAST sublanguage).
+      * are INT in Spark but BIGINT (ClickHouse: UInt64) on most ANSI engines,
+      * so the whole `fn OVER (spec)` casts back. None = either the engine
+      * agrees or it has no 32-bit type to cast to (BigQuery INT64,
+      * Snowflake/Oracle NUMBER, MySQL's CAST sublanguage).
       */
-    def rankResultCast: Option[DataType] = None
+    def rankResultCast: Option[DataType] = Some(IntegerType)
     /** Cast applied to the aggregate's ARGUMENT, for engines whose native
-      * typing loses the VALUE, not just the type: SQL Server's int-typed SUM
-      * overflows and its int AVG truncates; MySQL/Snowflake/Redshift integer
-      * AVG rounds at a fixed fractional scale. Casting the child to Spark's
-      * accumulation type makes the engine compute what Spark computes.
+      * typing loses the VALUE, not just the type: integer AVG rounds at a
+      * fixed fractional scale (MySQL DECIMAL(·,4), Snowflake NUMBER) or
+      * truncates to an integer (Redshift, SQL Server). Averaging the
+      * DOUBLE-cast child makes the engine compute Spark's double result.
       */
-    def aggChildCast(fn: AggregateFunction): Option[DataType] = None
+    def aggChildCast(fn: AggregateFunction): Option[DataType] =
+      fn match {
+        case a: Average if isIntegral(a.child.dataType) => Some(DoubleType)
+        case _ => None
+      }
     /** FROM-positioned series table function for Generate(explode(sequence)):
       * `generate_series(start, stop, step)` placed in the FROM clause and
       * column-aliased (Postgres, DuckDB — the identical spelling is what
@@ -296,9 +404,7 @@ object SqlUnparser {
       * the default refuses loudly like any other unsupported literal.
       */
     def intervalLiteral(months: Long, micros: Long): String =
-      throw new UnsupportedOperationException(
-        s"${getClass.getSimpleName.stripSuffix("Dialect$").toLowerCase} " +
-          "dialect: INTERVAL literal")
+      throw new UnsupportedOperationException(s"$name dialect: INTERVAL literal")
     protected def isIntegral(dt: DataType): Boolean = dt match {
       case ByteType | ShortType | IntegerType | LongType => true
       case _ => false
@@ -321,38 +427,10 @@ object SqlUnparser {
       */
     protected val statDoubleFns: Set[String] = Set(
       "stddev", "stddev_samp", "stddev_pop", "var_samp", "var_pop", "variance")
-    /** The drift pattern shared by the ANSI engines: integral SUM widens
-      * (DuckDB HUGEINT, Postgres sum(bigint)→NUMERIC, Snowflake/Oracle
-      * NUMBER), decimal SUM/AVG widen to the engine's maximum precision, REAL
-      * sums stay REAL where Spark widens float→double, and integer AVG /
-      * stddev return exact NUMERIC on some engines where Spark says DOUBLE.
-      * Casting back to Spark's result type is a no-op wherever the engine
-      * already agrees, so the shared pattern prefers a redundant cast over
-      * tracking each engine's full typing matrix.
+    /** Whether date-field accessors (year/month/day) render as ANSI
+      * `extract(field FROM x)`; Spark keeps its own `year(x)` accessors.
       */
-    protected def ansiAggResultCast(fn: AggregateFunction): Option[DataType] =
-      fn match {
-        case s: Sum => s.dataType match {
-          case dt if isIntegral(dt) => Some(LongType)
-          case d: DecimalType => Some(d)
-          case DoubleType if s.child.dataType == FloatType => Some(DoubleType)
-          case _ => None
-        }
-        case a: Average => a.dataType match {
-          case d: DecimalType => Some(d)
-          case DoubleType if a.child.dataType != DoubleType => Some(DoubleType)
-          case _ => None
-        }
-        case f if statDoubleFns(f.prettyName.toLowerCase) &&
-          f.dataType == DoubleType &&
-          f.children.headOption.exists(_.dataType != DoubleType) =>
-          Some(DoubleType)
-        case _ => None
-      }
-    /** Dialects preferring ANSI `extract(field FROM x)` over Spark's
-      * `year(x)`-style accessors.
-      */
-    def preferExtract: Boolean = false
+    def preferExtract: Boolean = true
     /** Rendering for date-field accessors (year/month/day); None = generic
       * fallback. ClickHouse overrides with its native toYear/toMonth family
       * (the reference's ClickHouseDialect mapping, inner_dialect.rs:470-540).
@@ -367,8 +445,9 @@ object SqlUnparser {
       val n = if (nullsFirst) "NULLS FIRST" else "NULLS LAST"
       Seq(s"$child $dir $n")
     }
-    /** Ordered string aggregation; Postgres spells it `string_agg(x, d ORDER
-      * BY ...)` where DuckDB accepts the ANSI `listagg(...) WITHIN GROUP`.
+    /** Ordered string aggregation: the ANSI `listagg(...) WITHIN GROUP`
+      * (Snowflake, Redshift); DuckDB and Postgres spell it
+      * `string_agg(x, d ORDER BY ...)`.
       */
     def listAggSql(distinct: String, child: String, delim: String,
         order: Seq[String]): String = {
@@ -377,9 +456,6 @@ object SqlUnparser {
       s"listagg($distinct$child, $delim)$within"
     }
 
-    /** ANSI-flavored literal rendering shared by the executable-SQL dialects
-      * (identical text modulo [[typeName]] spellings in casts).
-      */
     /** [[ansiLiteral]] with backslash doubling in string values, for engines
       * whose string parser treats backslash as an escape introducer (MySQL,
       * GoogleSQL, ClickHouse, Snowflake): a raw backslash would corrupt the
@@ -391,6 +467,9 @@ object SqlUnparser {
       case _ => ansiLiteral(l)
     }
 
+    /** ANSI literal rendering shared by the executable-SQL dialects
+      * (identical text modulo [[typeName]] spellings in casts).
+      */
     protected def ansiLiteral(l: Literal): String = (l.value, l.dataType) match {
       case (null, NullType) => "NULL"
       case (null, dt) => s"CAST(NULL AS ${typeName(dt)})"
@@ -419,11 +498,11 @@ object SqlUnparser {
       case (v, dt) if dt == IntegerType || dt == LongType || dt == ShortType ||
         dt == ByteType => v.toString
       case (v, dt) => throw new UnsupportedOperationException(
-        s"${getClass.getSimpleName.stripSuffix("$").toLowerCase}: literal $v: ${dt.sql}")
+        s"$name dialect: literal $v: ${dt.sql}")
     }
 
     /** Spark wraps md5's argument in a STRING→BINARY cast; engines whose MD5
-      * takes text directly (BigQuery, ClickHouse, Snowflake) strip it.
+      * takes text directly strip it.
       */
     protected def md5Arg(m: Md5): Expression = m.child match {
       case c: Cast if c.dataType == BinaryType &&
@@ -431,8 +510,9 @@ object SqlUnparser {
       case other => other
     }
 
-    /** UNION-ALL rendering for inline VALUES, for engines without a VALUES
-      * table constructor (BigQuery, ClickHouse).
+    /** UNION-ALL rendering for inline VALUES, for engines without a usable
+      * VALUES table constructor (MySQL, BigQuery, ClickHouse, Oracle,
+      * Redshift).
       */
     protected def unionAllValues(rows: Seq[String], alias: String,
         cols: Seq[String]): String = {
@@ -484,13 +564,18 @@ object SqlUnparser {
     }
   }
 
+  /** Spark SQL over `parquet.`path`` scans: any bare Spark session (no
+    * deploy, no temp views) can run the text. It keeps Spark's own spellings
+    * throughout, so it opts out of every cross-engine repair.
+    */
   object SparkDialect extends Dialect {
+    val name = "spark"
     // backslash is already this engine's LIKE escape — no clause needed
     override def likeBackslashIsDefaultEscape: Boolean = true
-    def quote(ident: String): String = "`" + ident.replace("`", "``") + "`"
-    def relation(rootPath: String): String = s"parquet.${quote(rootPath)}"
-    def typeName(dt: DataType): String = dt.sql
-    def literal(l: Literal): String = l.dataType match {
+    override def quote(ident: String): String = "`" + ident.replace("`", "``") + "`"
+    override def relation(rootPath: String): String = s"parquet.${quote(rootPath)}"
+    override def typeName(dt: DataType): String = dt.sql
+    override def literal(l: Literal): String = l.dataType match {
       // Literal.sql prints internal ArrayData (UnsafeArrayData@…) for array
       // values the optimizer constant-folded (e.g. sequence(...)); rebuild the
       // array(...) constructor element-wise.
@@ -507,20 +592,15 @@ object SqlUnparser {
     override def sequenceFn(start: String, stop: String, step: Option[String],
         et: DataType): Option[String] =
       Some(s"sequence($start, $stop${step.map(", " + _).getOrElse("")})")
-    def joinKeyword(jt: JoinType): String = jt match {
-      case Inner => "JOIN"
-      case Cross => "CROSS JOIN"
-      case LeftOuter => "LEFT JOIN"
-      case RightOuter => "RIGHT JOIN"
-      case FullOuter => "FULL JOIN"
+    override def semiAntiAsExists: Boolean = false
+    override def joinKeyword(jt: JoinType): String = jt match {
       case LeftSemi => "LEFT SEMI JOIN"
       case LeftAnti => "LEFT ANTI JOIN"
-      case other => throw new UnsupportedOperationException(
-        s"unparse: join type $other")
+      case _ => super.joinKeyword(jt)
     }
-    def values(rows: Seq[String], alias: String, cols: Seq[String]): String =
+    override def values(rows: Seq[String], alias: String, cols: Seq[String]): String =
       s"VALUES ${rows.mkString(", ")} AS ${quote(alias)}(${cols.map(quote).mkString(", ")})"
-    def fallback(e: Expression, rendered: Expression => String): String = {
+    override def fallback(e: Expression, rendered: Expression => String): String = {
       // `.sql` prints internal forms no parser accepts (lambdafunction(...),
       // struct(...) with re-derived field names, stringsplitsql). When the
       // subtree contains one, compose `prettyName(args)` and recurse so the
@@ -536,13 +616,21 @@ object SqlUnparser {
         s"${e.prettyName}(${e.children.map(rendered).mkString(", ")})"
       else e.sql
     }
-    def fnName(prettyName: String): Option[String] = Some(prettyName)
+    override def fnName(prettyName: String): Option[String] = Some(prettyName)
+    override def preferExtract: Boolean = false
+    override def regexpReplaceAll(s: String, p: String, r: String): Option[String] = None
+    override def splitPart(s: String, delim: String, n: Int): Option[String] = None
+    override def aggResultCast(fn: AggregateFunction): Option[DataType] = None
+    override def rankResultCast: Option[DataType] = None
+    override def aggChildCast(fn: AggregateFunction): Option[DataType] = None
   }
 
+  /** DuckDB: the ANSI defaults plus native SEMI/ANTI JOIN keywords,
+    * `read_parquet` for directory scans, the RE2 regex family,
+    * generate_series/unnest row expansion and the Morton expansion.
+    */
   object DuckDbDialect extends Dialect {
-    // native 1-based split_part with Spark's ''-on-overflow
-    override def splitPart(s: String, delim: String, n: Int): Option[String] =
-      Some(s"split_part($s, $delim, $n)")
+    val name = "duckdb"
     // RE2 regex family; regexp_extract is ''-on-miss like Spark, replace
     // needs the explicit 'g' for every-match semantics
     override def regexpMatch(s: String, p: String): Option[String] =
@@ -551,38 +639,16 @@ object SqlUnparser {
       Some(s"regexp_replace($s, $p, $r, 'g')")
     override def regexpExtract(s: String, p: String, idx: Int): Option[String] =
       Some(s"regexp_extract($s, $p, $idx)")
-    def quote(ident: String): String = "\"" + ident.replace("\"", "\"\"") + "\""
-    def relation(rootPath: String): String = {
-      val base = rootPath.stripSuffix("/").split('/').last
-      if (base.endsWith(".parquet")) quote(base.stripSuffix(".parquet"))
+    // a directory scan reads through the parquet table function
+    override def relation(rootPath: String): String =
+      if (rootPath.stripSuffix("/").split('/').last.endsWith(".parquet"))
+        super.relation(rootPath)
       else s"read_parquet('${rootPath.replace("'", "''")}/**/*.parquet')"
-    }
-    def typeName(dt: DataType): String = dt match {
-      case StringType => "VARCHAR"
-      case IntegerType => "INTEGER"
-      case LongType => "BIGINT"
-      case ShortType => "SMALLINT"
-      case ByteType => "TINYINT"
-      case DoubleType => "DOUBLE"
-      case FloatType => "REAL"
-      case BooleanType => "BOOLEAN"
-      case DateType => "DATE"
-      case TimestampNTZType => "TIMESTAMP"
-      case _: TimestampType => "TIMESTAMP"
-      case d: DecimalType => s"DECIMAL(${d.precision},${d.scale})"
-      case other => throw new UnsupportedOperationException(
-        s"duckdb dialect: type ${other.sql}")
-    }
-    def literal(l: Literal): String = ansiLiteral(l)
-    override def preferExtract: Boolean = true
     // `//` truncates toward zero like Spark's div (checked: -7 // 2 = -3) and
     // is exact over the full int64 range (no double rounding)
     override def integralDivide(l: String, r: String): String = s"($l // $r)"
-    // DuckDB widens integral SUM to HUGEINT (the driver-caught tpch_q12
-    // drift: 254 → 254.0 through pandas) and decimal SUM to DECIMAL(38,s);
-    // the shared repair casts back to Spark's result type
-    override def aggResultCast(fn: AggregateFunction): Option[DataType] =
-      ansiAggResultCast(fn)
+    // integer AVG is already DOUBLE; no argument cast needed
+    override def aggChildCast(fn: AggregateFunction): Option[DataType] = None
     // DuckDB's listagg is a plain string_agg alias — it does NOT parse the
     // ANSI WITHIN GROUP clause (checked on 1.0.0); ordering goes inline
     override def listAggSql(distinct: String, child: String, delim: String,
@@ -590,35 +656,28 @@ object SqlUnparser {
       val ord = if (order.isEmpty) "" else s" ORDER BY ${order.mkString(", ")}"
       s"string_agg($distinct$child, $delim$ord)"
     }
-    // DuckDB ranks in BIGINT where Spark's row_number/rank family is INT
-    override def rankResultCast: Option[DataType] = Some(IntegerType)
     // date-spine machinery: generate_series is both a FROM-positioned table
     // function and (scalar context) LIST-valued, and intervals take the
     // quoted-unit-string form
     override def seriesFrom(start: String, stop: String, step: Option[String]): Option[String] =
       Some(s"generate_series($start, $stop${step.map(", " + _).getOrElse("")})")
     override def sequenceFn(start: String, stop: String, step: Option[String],
-        et: DataType): Option[String] =
-      Some(s"generate_series($start, $stop${step.map(", " + _).getOrElse("")})")
+        et: DataType): Option[String] = seriesFrom(start, stop, step)
     override def explodeCall(arr: String): Option[String] = Some(s"unnest($arr)")
     override def intervalLiteral(months: Long, micros: Long): String =
       if (micros == 0) s"INTERVAL '$months months'"
       else if (months == 0) s"INTERVAL '$micros microseconds'"
       else s"(INTERVAL '$months months' + INTERVAL '$micros microseconds')"
-    def joinKeyword(jt: JoinType): String = jt match {
-      case Inner => "JOIN"
-      case Cross => "CROSS JOIN"
-      case LeftOuter => "LEFT JOIN"
-      case RightOuter => "RIGHT JOIN"
-      case FullOuter => "FULL JOIN"
+    override def semiAntiAsExists: Boolean = false
+    override def joinKeyword(jt: JoinType): String = jt match {
       case LeftSemi => "SEMI JOIN"
       case LeftAnti => "ANTI JOIN"
-      case other => throw new UnsupportedOperationException(
-        s"unparse: join type $other")
+      case _ => super.joinKeyword(jt)
     }
-    def values(rows: Seq[String], alias: String, cols: Seq[String]): String =
+    // no AS between the VALUES table and its column-aliased name
+    override def values(rows: Seq[String], alias: String, cols: Seq[String]): String =
       s"(VALUES ${rows.mkString(", ")}) ${quote(alias)}(${cols.map(quote).mkString(", ")})"
-    def fallback(e: Expression, rendered: Expression => String): String = e match {
+    override def fallback(e: Expression, rendered: Expression => String): String = e match {
       // the Morton kernel has no DuckDB builtin: expand to explicit shift/mask
       // arithmetic (mask first, so arithmetic >> on the masked non-negative
       // value matches the kernel's logical shift bit-for-bit). Each child is
@@ -627,23 +686,17 @@ object SqlUnparser {
       // would grow the text multiplicatively and re-evaluate it per term on
       // engines without common-subexpression elimination.
       case z: graft.functions.InterleaveBits => mortonExpansion(z, rendered)
-      // Spark folds `date + interval 'n' day` to date_add(date, n); DuckDB (like
-      // Postgres) has no 2-int-arg date_add but adds days with DATE + INTEGER,
-      // returning DATE — the same type Spark's date_add yields.
-      case da: DateAdd => s"(${rendered(da.startDate)} + ${rendered(da.days)})"
-      case ds: DateSub => s"(${rendered(ds.startDate)} - ${rendered(ds.days)})"
-      case _ => fnName(e.prettyName) match {
-        case Some(n) => s"$n(${e.children.map(rendered).mkString(", ")})"
-        case None => throw new UnsupportedOperationException(
-          s"duckdb dialect: unsupported expression ${e.prettyName} in ${e.sql}")
-      }
+      // md5 keeps its argument: the Spark-inserted STRING→BINARY cast has no
+      // type here, so md5 over text refuses and md5 over a blob renders
+      case m: Md5 => s"md5(${rendered(m.child)})"
+      case _ => super.fallback(e, rendered)
     }
-    private val direct = Set("upper", "lower", "length", "concat", "abs",
-      "round", "floor", "ceil", "ceiling", "trim", "ltrim", "rtrim", "replace",
-      "lpad", "rpad", "reverse", "greatest", "least", "nullif", "sqrt", "ln",
-      "exp", "sign",
+    override protected val direct: Set[String] = Set("upper", "lower", "length",
+      "concat", "abs", "round", "floor", "ceil", "ceiling", "trim", "ltrim", "rtrim",
+      "replace", "lpad", "rpad", "reverse", "greatest", "least", "nullif", "sqrt",
+      "ln", "exp", "sign",
       // same name + semantics in both engines (DuckDB scalar function docs)
-      "date_trunc", "md5", "concat_ws", "left", "right", "repeat", "contains",
+      "date_trunc", "concat_ws", "left", "right", "repeat", "contains",
       "pow", "power", "mod",
       // statistical aggregates: identical names + ANSI semantics in DuckDB
       "stddev_samp", "stddev_pop", "var_samp", "var_pop", "corr",
@@ -652,13 +705,10 @@ object SqlUnparser {
       // or initcap there yet)
       "log10", "log2", "log", "degrees", "radians", "cot", "cbrt",
       "translate", "levenshtein")
-    private val renamed = Map("substring" -> "substr", "instr" -> "strpos",
+    override protected val renamed: Map[String, String] = Map(
+      "substring" -> "substr", "instr" -> "strpos",
       "startswith" -> "starts_with", "endswith" -> "ends_with",
       "day" -> "day", "dayofmonth" -> "day")
-    def fnName(prettyName: String): Option[String] = {
-      val p = prettyName.toLowerCase
-      if (direct(p)) Some(p) else renamed.get(p)
-    }
   }
 
   /** Postgres dialect: the reference's per-backend posture
@@ -667,115 +717,64 @@ object SqlUnparser {
     * `ibis-server/app/mdl/rewriter.py:51-63` does the same server-side).
     * Differences from DuckDB carried here: `DOUBLE PRECISION`/`NUMERIC` type
     * spellings, no SEMI/ANTI JOIN syntax (rendered as correlated (NOT)
-    * EXISTS), `string_agg(x, d ORDER BY ...)` for ordered string aggregation,
-    * and no `ends_with`/`contains` builtins (rendered structurally over
-    * `right`/`length`/`strpos`). No Postgres server exists in this sandbox, so
-    * this dialect is proven by pinned-text goldens + generation-coverage gates
-    * (`SqlUnparserPostgresSpec`) — the reference's own snapshot-test posture
-    * for its 20 dialects (`wren-core/core/src/mdl/mod.rs:648+`).
+    * EXISTS), and no `ends_with`/`contains` builtins (rendered structurally
+    * over `right`/`length`/`strpos`). No Postgres server exists in this
+    * sandbox, so this dialect is proven by pinned-text goldens +
+    * generation-coverage gates (`SqlUnparserPostgresSpec`) — the reference's
+    * own snapshot-test posture for its 20 dialects
+    * (`wren-core/core/src/mdl/mod.rs:648+`).
     */
   object PostgresDialect extends Dialect {
-    // native 1-based split_part with Spark's ''-on-overflow
-    override def splitPart(s: String, delim: String, n: Int): Option[String] =
-      Some(s"split_part($s, $delim, $n)")
+    val name = "postgres"
     // `~` is Postgres's partial-match operator (DuckDB's same-spelled
     // operator is FULL-match — the sweep records these texts as
     // valid-but-not-DuckDB-executable); regexp_match returns a 1-based
     // group array, so index 0 (whole match) is unreachable and refuses
     override def regexpMatch(s: String, p: String): Option[String] =
       Some(s"($s ~ $p)")
-    override def regexpReplaceAll(s: String, p: String, r: String): Option[String] =
-      Some(s"regexp_replace($s, $p, $r, 'g')")
     override def regexpExtract(s: String, p: String, idx: Int): Option[String] =
       if (idx < 1) None
       else Some(s"(CASE WHEN ($s IS NULL) OR ($p IS NULL) THEN NULL " +
         s"ELSE coalesce((regexp_match($s, $p))[$idx], '') END)")
-    def quote(ident: String): String = "\"" + ident.replace("\"", "\"\"") + "\""
-    def relation(rootPath: String): String = {
-      val base = rootPath.stripSuffix("/").split('/').last
-      if (base.endsWith(".parquet")) quote(base.stripSuffix(".parquet"))
-      else throw new UnsupportedOperationException(
-        s"postgres dialect: no parquet table function for directory scan $rootPath " +
-          "— register the table (foreign table / COPY) under its logical name")
-    }
-    def typeName(dt: DataType): String = dt match {
-      case StringType => "VARCHAR"
-      case IntegerType => "INTEGER"
-      case LongType => "BIGINT"
-      case ShortType => "SMALLINT"
+    // regexp_replace 'g', generate_series in the FROM clause (the Postgres
+    // set-returning form), unnest, quoted-unit intervals and
+    // string_agg(x, d ORDER BY ...): Postgres spells these exactly as DuckDB
+    // does, which keeps the Postgres texts inside DuckDB's executed corpus
+    override def regexpReplaceAll(s: String, p: String, r: String): Option[String] =
+      DuckDbDialect.regexpReplaceAll(s, p, r)
+    override def seriesFrom(start: String, stop: String, step: Option[String]): Option[String] =
+      DuckDbDialect.seriesFrom(start, stop, step)
+    override def explodeCall(arr: String): Option[String] = DuckDbDialect.explodeCall(arr)
+    override def intervalLiteral(months: Long, micros: Long): String =
+      DuckDbDialect.intervalLiteral(months, micros)
+    override def listAggSql(distinct: String, child: String, delim: String,
+        order: Seq[String]): String = DuckDbDialect.listAggSql(distinct, child, delim, order)
+    override def typeName(dt: DataType): String = dt match {
       case ByteType => "SMALLINT" // no TINYINT in Postgres
       case DoubleType => "DOUBLE PRECISION"
-      case FloatType => "REAL"
-      case BooleanType => "BOOLEAN"
-      case DateType => "DATE"
-      case TimestampNTZType => "TIMESTAMP"
-      case _: TimestampType => "TIMESTAMP"
       case d: DecimalType => s"NUMERIC(${d.precision},${d.scale})"
-      case other => throw new UnsupportedOperationException(
-        s"postgres dialect: type ${other.sql}")
+      case _ => super.typeName(dt)
     }
-    def literal(l: Literal): String = ansiLiteral(l)
-    override def preferExtract: Boolean = true
-    override def semiAntiAsExists: Boolean = true
     // div(numeric, numeric) is Postgres's truncating integer quotient
     // (arbitrary precision — no 2^53 double hazard on ns-epoch longs)
     override def integralDivide(l: String, r: String): String =
       s"CAST(div($l, $r) AS BIGINT)"
-    // Postgres §9.21: sum(bigint)→NUMERIC, sum(real)→REAL, avg/stddev of
-    // exact types→NUMERIC — all drift from Spark's BIGINT/DOUBLE results
-    override def aggResultCast(fn: AggregateFunction): Option[DataType] =
-      ansiAggResultCast(fn)
-    override def rankResultCast: Option[DataType] = Some(IntegerType)
-    // generate_series in the FROM clause is the Postgres set-returning form;
-    // the identical spelling parses in DuckDB (table function), which keeps
-    // the Postgres texts inside the DuckDB-EXECUTED corpus
-    override def seriesFrom(start: String, stop: String, step: Option[String]): Option[String] =
-      Some(s"generate_series($start, $stop${step.map(", " + _).getOrElse("")})")
-    override def explodeCall(arr: String): Option[String] = Some(s"unnest($arr)")
-    override def intervalLiteral(months: Long, micros: Long): String =
-      if (micros == 0) s"INTERVAL '$months months'"
-      else if (months == 0) s"INTERVAL '$micros microseconds'"
-      else s"(INTERVAL '$months months' + INTERVAL '$micros microseconds')"
-    def joinKeyword(jt: JoinType): String = jt match {
-      case Inner => "JOIN"
-      case Cross => "CROSS JOIN"
-      case LeftOuter => "LEFT JOIN"
-      case RightOuter => "RIGHT JOIN"
-      case FullOuter => "FULL JOIN"
-      case LeftSemi | LeftAnti => throw new UnsupportedOperationException(
-        "postgres dialect: semi/anti joins render as EXISTS (semiAntiAsExists)")
-      case other => throw new UnsupportedOperationException(
-        s"unparse: join type $other")
-    }
-    def values(rows: Seq[String], alias: String, cols: Seq[String]): String =
-      s"(VALUES ${rows.mkString(", ")}) AS ${quote(alias)}(${cols.map(quote).mkString(", ")})"
-    override def listAggSql(distinct: String, child: String, delim: String,
-        order: Seq[String]): String = {
-      val ord = if (order.isEmpty) "" else s" ORDER BY ${order.mkString(", ")}"
-      s"string_agg($distinct$child, $delim$ord)"
-    }
-    def fallback(e: Expression, rendered: Expression => String): String = e match {
+    // avg of an exact type is exact NUMERIC (§9.21), so no value is lost;
+    // aggResultCast restores Spark's DOUBLE
+    override def aggChildCast(fn: AggregateFunction): Option[DataType] = None
+    override def fallback(e: Expression, rendered: Expression => String): String = e match {
       case z: graft.functions.InterleaveBits => mortonExpansion(z, rendered)
-      case da: DateAdd => s"(${rendered(da.startDate)} + ${rendered(da.days)})"
-      case ds: DateSub => s"(${rendered(ds.startDate)} - ${rendered(ds.days)})"
-      // Postgres md5(text) yields hex text like Spark's (the Spark-inserted
-      // STRING→BINARY cast is stripped — bytea md5 would need decode())
-      case m: Md5 => s"md5(${rendered(md5Arg(m))})"
       // no ends_with/contains builtins: structural renderings with the same
       // three-valued null semantics (any null operand propagates to NULL)
       case ew: EndsWith =>
         s"(right(${rendered(ew.left)}, length(${rendered(ew.right)})) = ${rendered(ew.right)})"
       case ct: Contains =>
         s"(strpos(${rendered(ct.left)}, ${rendered(ct.right)}) > 0)"
-      case _ => fnName(e.prettyName) match {
-        case Some(n) => s"$n(${e.children.map(rendered).mkString(", ")})"
-        case None => throw new UnsupportedOperationException(
-          s"postgres dialect: unsupported expression ${e.prettyName} in ${e.sql}")
-      }
+      case _ => super.fallback(e, rendered)
     }
-    private val direct = Set("upper", "lower", "length", "concat", "abs",
-      "round", "floor", "ceil", "ceiling", "trim", "btrim", "ltrim", "rtrim",
-      "replace", "lpad", "rpad", "reverse", "greatest", "least", "nullif",
+    override protected val direct: Set[String] = Set("upper", "lower", "length",
+      "concat", "abs", "round", "floor", "ceil", "ceiling", "trim", "btrim", "ltrim",
+      "rtrim", "replace", "lpad", "rpad", "reverse", "greatest", "least", "nullif",
       "sqrt", "ln", "exp", "sign", "initcap",
       "date_trunc", "concat_ws", "left", "right", "repeat",
       "pow", "power", "mod",
@@ -787,12 +786,8 @@ object SqlUnparser {
       // numeric-only in Postgres and stays refused)
       "log10", "degrees", "radians", "cot", "cbrt", "sinh", "cosh", "tanh",
       "translate")
-    private val renamed = Map("substring" -> "substr", "instr" -> "strpos",
-      "startswith" -> "starts_with")
-    def fnName(prettyName: String): Option[String] = {
-      val p = prettyName.toLowerCase
-      if (direct(p)) Some(p) else renamed.get(p)
-    }
+    override protected val renamed: Map[String, String] = Map(
+      "substring" -> "substr", "instr" -> "strpos", "startswith" -> "starts_with")
   }
 
   /** MySQL dialect — the reference's MySQLDialect posture
@@ -811,69 +806,38 @@ object SqlUnparser {
     * sibling tests), the reference's snapshot-test posture.
     */
   object MySqlDialect extends Dialect {
+    val name = "mysql"
     // REGEXP is MySQL's partial-match operator; 8.0 REGEXP_REPLACE is
     // global by default; REGEXP_SUBSTR has no group access — extract refuses
     override def regexpMatch(s: String, p: String): Option[String] =
       Some(s"($s REGEXP $p)")
-    override def regexpReplaceAll(s: String, p: String, r: String): Option[String] =
-      Some(s"REGEXP_REPLACE($s, $p, $r)")
-    def quote(ident: String): String = "`" + ident.replace("`", "``") + "`"
-    def relation(rootPath: String): String = {
-      val base = rootPath.stripSuffix("/").split('/').last
-      if (base.endsWith(".parquet")) quote(base.stripSuffix(".parquet"))
-      else throw new UnsupportedOperationException(
-        s"mysql dialect: no parquet table function for directory scan $rootPath " +
-          "— register the table under its logical name")
-    }
+    override def splitPart(s: String, delim: String, n: Int): Option[String] = None
+    override def quote(ident: String): String = "`" + ident.replace("`", "``") + "`"
     // MySQL CAST target types are their own sublanguage (SIGNED/CHAR/...),
     // not column types
-    def typeName(dt: DataType): String = dt match {
+    override def typeName(dt: DataType): String = dt match {
       case StringType => "CHAR"
       case IntegerType | LongType | ShortType | ByteType | BooleanType => "SIGNED"
-      case DoubleType => "DOUBLE"
       case FloatType => "FLOAT"
-      case DateType => "DATE"
-      case TimestampNTZType => "DATETIME"
-      case _: TimestampType => "DATETIME"
-      case d: DecimalType => s"DECIMAL(${d.precision},${d.scale})"
-      case other => throw new UnsupportedOperationException(
-        s"mysql dialect: type ${other.sql}")
+      case TimestampNTZType | _: TimestampType => "DATETIME"
+      case _ => super.typeName(dt)
     }
-    def literal(l: Literal): String = backslashLiteral(l)
-    override def preferExtract: Boolean = true
-    override def semiAntiAsExists: Boolean = true
+    override def literal(l: Literal): String = backslashLiteral(l)
     // `DIV` truncates toward zero over exact integers (MySQL reference manual)
     override def integralDivide(l: String, r: String): String = s"($l DIV $r)"
     // MySQL spells null-safe equality <=> (no IS NOT DISTINCT FROM)
     override def nullSafeEq(l: String, r: String): String = s"($l <=> $r)"
-    // MySQL types integral SUM as DECIMAL; CAST AS SIGNED restores BIGINT
-    override def aggResultCast(fn: AggregateFunction): Option[DataType] =
-      ansiAggResultCast(fn)
-    // MySQL's integer AVG returns DECIMAL at a fixed 4-digit scale — rounded
-    // VALUES, not just a drifted type; averaging the double-cast child makes
-    // the engine compute Spark's double result (CAST AS DOUBLE, 8.0.17+)
-    override def aggChildCast(fn: AggregateFunction): Option[DataType] =
-      fn match {
-        case a: Average if isIntegral(a.child.dataType) => Some(DoubleType)
-        case _ => None
-      }
-    def joinKeyword(jt: JoinType): String = jt match {
-      case Inner => "JOIN"
-      case Cross => "CROSS JOIN"
-      case LeftOuter => "LEFT JOIN"
-      case RightOuter => "RIGHT JOIN"
+    override def rankResultCast: Option[DataType] = None
+    override def joinKeyword(jt: JoinType): String = jt match {
       case FullOuter => throw new UnsupportedOperationException(
-        "mysql dialect: MySQL has no FULL JOIN — rewrite as LEFT JOIN UNION " +
+        s"$name dialect: MySQL has no FULL JOIN — rewrite as LEFT JOIN UNION " +
           "ALL anti-filtered RIGHT JOIN upstream")
-      case LeftSemi | LeftAnti => throw new UnsupportedOperationException(
-        "mysql dialect: semi/anti joins render as EXISTS (semiAntiAsExists)")
-      case other => throw new UnsupportedOperationException(
-        s"unparse: join type $other")
+      case _ => super.joinKeyword(jt)
     }
     // MySQL's VALUES table constructor requires ROW() constructors and has no
     // derived-table column list `AS t(c1, c2)` — render UNION ALL of aliased
     // SELECTs instead (same path BigQuery/ClickHouse take)
-    def values(rows: Seq[String], alias: String, cols: Seq[String]): String =
+    override def values(rows: Seq[String], alias: String, cols: Seq[String]): String =
       unionAllValues(rows, alias, cols)
     override def sortItem(child: String, dir: String, nullsFirst: Boolean): Seq[String] = {
       val native = (dir == "ASC" && nullsFirst) || (dir == "DESC" && !nullsFirst)
@@ -887,15 +851,14 @@ object SqlUnparser {
       val ord = if (order.isEmpty) "" else s" ORDER BY ${order.mkString(", ")}"
       s"GROUP_CONCAT($distinct$child$ord SEPARATOR $delim)"
     }
-    def fallback(e: Expression, rendered: Expression => String): String = e match {
-      case _: graft.functions.InterleaveBits => throw new UnsupportedOperationException(
-        "mysql dialect: zorder_key's bound-once expansion needs outer references " +
-          "inside a derived table, which MySQL's scoping rules reject — " +
-          "compute the Morton key engine-side")
+    override def fallback(e: Expression, rendered: Expression => String): String = e match {
       case da: DateAdd =>
         s"(${rendered(da.startDate)} + INTERVAL ${rendered(da.days)} DAY)"
       case ds: DateSub =>
         s"(${rendered(ds.startDate)} - INTERVAL ${rendered(ds.days)} DAY)"
+      // md5 keeps its argument: the Spark-inserted STRING→BINARY cast has no
+      // CAST target here, so md5 over text refuses
+      case m: Md5 => s"md5(${rendered(m.child)})"
       case sw: StartsWith =>
         s"(left(${rendered(sw.left)}, char_length(${rendered(sw.right)})) = ${rendered(sw.right)})"
       case ew: EndsWith =>
@@ -915,36 +878,28 @@ object SqlUnparser {
             case "minute" => "%Y-%m-%d %H:%i:00"
             case "second" => "%Y-%m-%d %H:%i:%s"
             case other => throw new UnsupportedOperationException(
-              s"mysql dialect: date_trunc unit '$other' has no DATE_FORMAT model")
+              s"$name dialect: date_trunc unit '$other' has no DATE_FORMAT model")
           }
           s"CAST(DATE_FORMAT(${rendered(tt.timestamp)}, '$fmt') AS DATETIME)"
         case _ => throw new UnsupportedOperationException(
-          "mysql dialect: date_trunc needs a literal unit to render as DATE_FORMAT")
+          s"$name dialect: date_trunc needs a literal unit to render as DATE_FORMAT")
       }
-      case _ => fnName(e.prettyName) match {
-        case Some(n) => s"$n(${e.children.map(rendered).mkString(", ")})"
-        case None => throw new UnsupportedOperationException(
-          s"mysql dialect: unsupported expression ${e.prettyName} in ${e.sql}")
-      }
+      case _ => super.fallback(e, rendered)
     }
-    private val direct = Set("upper", "lower", "concat", "abs",
-      "round", "floor", "ceil", "ceiling", "trim", "ltrim", "rtrim", "replace",
+    override protected val direct: Set[String] = Set("upper", "lower", "concat",
+      "abs", "round", "floor", "ceil", "ceiling", "trim", "ltrim", "rtrim", "replace",
       "lpad", "rpad", "reverse", "greatest", "least", "nullif", "sqrt", "ln",
-      "exp", "sign", "md5", "concat_ws", "left", "right", "repeat", "instr",
+      "exp", "sign", "concat_ws", "left", "right", "repeat", "instr",
       "pow", "power", "mod",
       // MySQL 8 statistical aggregates (no corr/covar in MySQL)
       "stddev_samp", "stddev_pop", "var_samp", "var_pop",
       // math family: LOG(B,X) is base-first like Spark's 2-arg log
       "log10", "log2", "log", "degrees", "radians", "cot")
-    private val renamed = Map(
+    override protected val renamed: Map[String, String] = Map(
       "substring" -> "substr",
       // MySQL length() counts BYTES; char_length matches Spark's semantics
       "length" -> "char_length",
       "btrim" -> "trim")
-    def fnName(prettyName: String): Option[String] = {
-      val p = prettyName.toLowerCase
-      if (direct(p)) Some(p) else renamed.get(p)
-    }
   }
 
   /** BigQuery dialect — the reference ships a DEDICATED BigQueryDialect
@@ -965,19 +920,19 @@ object SqlUnparser {
     * snapshot posture.
     */
   object BigQueryDialect extends Dialect {
+    val name = "bigquery"
     // RE2 family: REGEXP_CONTAINS is the partial-match predicate,
     // REGEXP_REPLACE is global; REGEXP_EXTRACT's group selection is
     // pattern-driven, not index-driven — extract refuses
     override def regexpMatch(s: String, p: String): Option[String] =
       Some(s"REGEXP_CONTAINS($s, $p)")
-    override def regexpReplaceAll(s: String, p: String, r: String): Option[String] =
-      Some(s"REGEXP_REPLACE($s, $p, $r)")
+    override def splitPart(s: String, delim: String, n: Int): Option[String] = None
     // backslash is already this engine's LIKE escape — no clause needed
     override def likeBackslashIsDefaultEscape: Boolean = true
     // no ESCAPE clause in this grammar; backslash is already the
     // engine's LIKE escape, so only a CUSTOM escape must refuse
     override def likeEscapeClause(esc: Char): Option[String] = None
-    def quote(ident: String): String = "`" + ident.replace("`", "``") + "`"
+    override def quote(ident: String): String = "`" + ident.replace("`", "``") + "`"
     // GoogleSQL expands arrays with a FROM-positioned UNNEST whose alias IS
     // the element column (no wrapping table alias); its series builders are
     // ELEMENT-TYPED — GENERATE_ARRAY / GENERATE_DATE_ARRAY /
@@ -1005,9 +960,9 @@ object SqlUnparser {
           .collectFirst { case (u, f) if micros % f == 0 =>
             s"INTERVAL ${micros / f} $u" }
           .getOrElse(throw new UnsupportedOperationException(
-            "bigquery dialect: sub-second INTERVAL literal"))
+            s"$name dialect: sub-second INTERVAL literal"))
       } else throw new UnsupportedOperationException(
-        "bigquery dialect: mixed year-month + day-time INTERVAL literal")
+        s"$name dialect: mixed year-month + day-time INTERVAL literal")
     // the reference's flexible-column-name encoding (inner_dialect.rs:157-178)
     private val aliasSpecial: Set[Char] = Set(
       '!', '"', '$', '(', ')', '*', ',', '.', '/', ';', '?', '@', '[', '\\',
@@ -1015,69 +970,41 @@ object SqlUnparser {
     override def outputAlias(name: String): String =
       if (!name.exists(aliasSpecial)) name
       else name.flatMap(c => if (aliasSpecial(c)) s"_${c.toInt}" else c.toString)
-    def relation(rootPath: String): String = {
-      val base = rootPath.stripSuffix("/").split('/').last
-      if (base.endsWith(".parquet")) quote(base.stripSuffix(".parquet"))
-      else throw new UnsupportedOperationException(
-        s"bigquery dialect: no parquet table function for directory scan $rootPath " +
-          "— register an external table under the logical name")
-    }
-    def typeName(dt: DataType): String = dt match {
+    override def typeName(dt: DataType): String = dt match {
       case StringType => "STRING"
       case IntegerType | LongType | ShortType | ByteType => "INT64"
       case DoubleType | FloatType => "FLOAT64"
       case BooleanType => "BOOL"
-      case DateType => "DATE"
       case TimestampNTZType => "DATETIME"
-      case _: TimestampType => "TIMESTAMP"
       case d: DecimalType =>
         if (d.scale <= 9 && d.precision <= 38) s"NUMERIC(${d.precision},${d.scale})"
         else s"BIGNUMERIC(${d.precision},${d.scale})"
-      case other => throw new UnsupportedOperationException(
-        s"bigquery dialect: type ${other.sql}")
+      case _ => super.typeName(dt)
     }
     // GoogleSQL's quote escape is \' — it does NOT treat '' inside a
     // single-quoted string as an escaped quote (backslashLiteral inherits
     // ansiLiteral's '' doubling, which misparses there), so quote AND
     // backslash both escape with the backslash introducer
-    def literal(l: Literal): String = (l.value, l.dataType) match {
+    override def literal(l: Literal): String = (l.value, l.dataType) match {
       case (v: org.apache.spark.unsafe.types.UTF8String, StringType) =>
         "'" + v.toString.replace("\\", "\\\\").replace("'", "\\'") + "'"
       case _ => backslashLiteral(l)
     }
-    override def preferExtract: Boolean = true
-    override def semiAntiAsExists: Boolean = true
     override def integralDivide(l: String, r: String): String = s"DIV($l, $r)"
     // GoogleSQL has no `%` operator — remainder is the MOD function
     override def remainder(l: String, r: String): String = s"MOD($l, $r)"
-    // GoogleSQL sums NUMERIC at fixed (38,9) and averages it to NUMERIC —
-    // both drift from Spark's widened decimal result; INT64 sum/avg agree
-    override def aggResultCast(fn: AggregateFunction): Option[DataType] =
-      ansiAggResultCast(fn)
-    def joinKeyword(jt: JoinType): String = jt match {
-      case Inner => "JOIN"
-      case Cross => "CROSS JOIN"
-      case LeftOuter => "LEFT JOIN"
-      case RightOuter => "RIGHT JOIN"
-      case FullOuter => "FULL JOIN"
-      case LeftSemi | LeftAnti => throw new UnsupportedOperationException(
-        "bigquery dialect: semi/anti joins render as EXISTS (semiAntiAsExists)")
-      case other => throw new UnsupportedOperationException(
-        s"unparse: join type $other")
-    }
+    // INT64 is the only integer type, and INT64 avg is already FLOAT64
+    override def rankResultCast: Option[DataType] = None
+    override def aggChildCast(fn: AggregateFunction): Option[DataType] = None
     // no VALUES table constructor in BigQuery: a UNION ALL of aliased SELECTs
-    def values(rows: Seq[String], alias: String, cols: Seq[String]): String =
+    override def values(rows: Seq[String], alias: String, cols: Seq[String]): String =
       unionAllValues(rows, alias, cols)
     override def listAggSql(distinct: String, child: String, delim: String,
         order: Seq[String]): String = {
       val ord = if (order.isEmpty) "" else s" ORDER BY ${order.mkString(", ")}"
       s"STRING_AGG($distinct$child, $delim$ord)"
     }
-    def fallback(e: Expression, rendered: Expression => String): String = e match {
-      case _: graft.functions.InterleaveBits => throw new UnsupportedOperationException(
-        "bigquery dialect: zorder_key's bound-once expansion needs outer " +
-          "references inside a derived table, outside BigQuery's decorrelation " +
-          "— compute the Morton key engine-side")
+    override def fallback(e: Expression, rendered: Expression => String): String = e match {
       case da: DateAdd =>
         s"DATE_ADD(${rendered(da.startDate)}, INTERVAL ${rendered(da.days)} DAY)"
       case ds: DateSub =>
@@ -1091,7 +1018,7 @@ object SqlUnparser {
               "second")(f.toString.toLowerCase) =>
           s"TIMESTAMP_TRUNC(${rendered(t.timestamp)}, ${f.toString.toUpperCase})"
         case other => throw new UnsupportedOperationException(
-          s"bigquery dialect: date_trunc with unit $other")
+          s"$name dialect: date_trunc with unit $other")
       }
       case ct: Contains =>
         s"(STRPOS(${rendered(ct.left)}, ${rendered(ct.right)}) > 0)"
@@ -1099,30 +1026,22 @@ object SqlUnparser {
       // only the metachar-free unlimited form translates
       case sp: StringSplit if literalDelim(sp).isDefined =>
         s"SPLIT(${rendered(sp.str)}, '${literalDelim(sp).get}')"
-      case _ => fnName(e.prettyName) match {
-        case Some(n) => s"$n(${e.children.map(rendered).mkString(", ")})"
-        case None => throw new UnsupportedOperationException(
-          s"bigquery dialect: unsupported expression ${e.prettyName} in ${e.sql}")
-      }
+      case _ => super.fallback(e, rendered)
     }
-    private val direct = Set("upper", "lower", "length", "concat", "abs",
-      "round", "floor", "trim", "ltrim", "rtrim", "replace",
+    override protected val direct: Set[String] = Set("upper", "lower", "length",
+      "concat", "abs", "round", "floor", "trim", "ltrim", "rtrim", "replace",
       "lpad", "rpad", "reverse", "greatest", "least", "nullif", "sqrt", "ln",
       "exp", "sign", "left", "right", "repeat", "mod",
       "starts_with", "ends_with", "initcap", "translate", "cot",
       "stddev_samp", "stddev_pop", "var_samp", "var_pop", "corr",
       "covar_samp", "covar_pop")
-    private val renamed = Map(
+    override protected val renamed: Map[String, String] = Map(
       "levenshtein" -> "EDIT_DISTANCE",
       "substring" -> "substr", "instr" -> "strpos",
       "startswith" -> "starts_with", "endswith" -> "ends_with",
       "ceil" -> "ceil", "ceiling" -> "ceil",
       "pow" -> "pow", "power" -> "pow",
       "btrim" -> "trim")
-    def fnName(prettyName: String): Option[String] = {
-      val p = prettyName.toLowerCase
-      if (direct(p)) Some(p) else renamed.get(p)
-    }
   }
 
   /** ClickHouse dialect — the reference's ClickHouseDialect maps standard
@@ -1136,10 +1055,14 @@ object SqlUnparser {
     * would diverge from Spark on non-ASCII), `replaceAll`, `position`,
     * `lower(hex(MD5(x)))`, `CAST(NULL AS Nullable(T))` null literals, and
     * UNION-ALL-rendered inline VALUES. Ordered string aggregation and the
-    * Morton expansion fail loudly. No ClickHouse in this sandbox: pinned
-    * goldens + generation gates + the property sweep.
+    * Morton expansion fail loudly. Identifiers keep the ANSI double quotes:
+    * ClickHouse accepts them as well as backticks under default settings,
+    * and the ANSI spelling keeps the subset free of ClickHouse-only
+    * functions executable by the DuckDB sweep. No ClickHouse in this
+    * sandbox: pinned goldens + generation gates + the property sweep.
     */
   object ClickHouseDialect extends Dialect {
+    val name = "clickhouse"
     // match() is the RE2 partial-match predicate; replaceRegexpAll is the
     // every-occurrence form; extract()'s group choice is positional-first,
     // not indexed — extract refuses
@@ -1147,25 +1070,13 @@ object SqlUnparser {
       Some(s"match($s, $p)")
     override def regexpReplaceAll(s: String, p: String, r: String): Option[String] =
       Some(s"replaceRegexpAll($s, $p, $r)")
+    override def splitPart(s: String, delim: String, n: Int): Option[String] = None
     // backslash is already this engine's LIKE escape — no clause needed
     override def likeBackslashIsDefaultEscape: Boolean = true
     // no ESCAPE clause in this grammar; backslash is already the
     // engine's LIKE escape, so only a CUSTOM escape must refuse
     override def likeEscapeClause(esc: Char): Option[String] = None
-    // ClickHouse accepts BOTH backticks and ANSI double quotes for
-    // identifiers under default settings; the double-quote spelling keeps
-    // the texts inside the ANSI surface, so the subset free of
-    // ClickHouse-only functions is executable by the DuckDB sweep (the
-    // backtick form parked EVERY text outside any second parser's grammar)
-    def quote(ident: String): String = "\"" + ident.replace("\"", "\"\"") + "\""
-    def relation(rootPath: String): String = {
-      val base = rootPath.stripSuffix("/").split('/').last
-      if (base.endsWith(".parquet")) quote(base.stripSuffix(".parquet"))
-      else throw new UnsupportedOperationException(
-        s"clickhouse dialect: no parquet table function for directory scan $rootPath " +
-          "— register a table under the logical name (or use the file() engine)")
-    }
-    def typeName(dt: DataType): String = dt match {
+    override def typeName(dt: DataType): String = dt match {
       case StringType => "String"
       case IntegerType => "Int32"
       case LongType => "Int64"
@@ -1177,17 +1088,15 @@ object SqlUnparser {
       case DateType => "Date32"
       // ClickHouse DateTime64 is wall-clock (no tz attribute unless one is
       // spelled) — the faithful landing for BOTH Spark timestamp flavors
-      case TimestampNTZType => "DateTime64(6)"
-      case _: TimestampType => "DateTime64(6)"
+      case TimestampNTZType | _: TimestampType => "DateTime64(6)"
       case d: DecimalType => s"Decimal(${d.precision},${d.scale})"
-      case other => throw new UnsupportedOperationException(
-        s"clickhouse dialect: type ${other.sql}")
+      case _ => super.typeName(dt)
     }
     // ClickHouse types are non-nullable by default (a bare CAST(NULL AS T)
     // fails — the target must be Nullable(T)), and the ANSI DATE '...' /
     // TIMESTAMP '...' literal introducers are not part of its grammar — use
     // the native toDate32/toDateTime64 constructors instead.
-    def literal(l: Literal): String = (l.value, l.dataType) match {
+    override def literal(l: Literal): String = (l.value, l.dataType) match {
       case (null, NullType) => "NULL"
       case (null, dt) => s"CAST(NULL AS Nullable(${typeName(dt)}))"
       case (v: Int, DateType) =>
@@ -1227,38 +1136,28 @@ object SqlUnparser {
     override def aggResultCast(fn: AggregateFunction): Option[DataType] =
       fn match {
         case _: Count => Some(LongType)
-        case other => ansiAggResultCast(other)
+        case other => super.aggResultCast(other)
       }
-    // ClickHouse row_number/rank are UInt64; Spark's are INT
-    override def rankResultCast: Option[DataType] = Some(IntegerType)
+    // integer avg is already Float64
+    override def aggChildCast(fn: AggregateFunction): Option[DataType] = None
     // arrayJoin is ClickHouse's SELECT-positioned row expander; no
     // timestamp-stepped series builder, so explode(sequence(...)) refuses
     override def explodeCall(arr: String): Option[String] = Some(s"arrayJoin($arr)")
-    def joinKeyword(jt: JoinType): String = jt match {
-      case Inner => "JOIN"
-      case Cross => "CROSS JOIN"
-      case LeftOuter => "LEFT JOIN"
-      case RightOuter => "RIGHT JOIN"
-      case FullOuter => "FULL JOIN"
-      // native semi/anti join kinds — ClickHouse JOIN docs
+    // native semi/anti join kinds — ClickHouse JOIN docs
+    override def semiAntiAsExists: Boolean = false
+    override def joinKeyword(jt: JoinType): String = jt match {
       case LeftSemi => "LEFT SEMI JOIN"
       case LeftAnti => "LEFT ANTI JOIN"
-      case other => throw new UnsupportedOperationException(
-        s"unparse: join type $other")
+      case _ => super.joinKeyword(jt)
     }
-    def values(rows: Seq[String], alias: String, cols: Seq[String]): String =
+    override def values(rows: Seq[String], alias: String, cols: Seq[String]): String =
       unionAllValues(rows, alias, cols)
     override def listAggSql(distinct: String, child: String, delim: String,
         order: Seq[String]): String =
       throw new UnsupportedOperationException(
-        "clickhouse dialect: ordered string aggregation (listagg) — ClickHouse's " +
+        s"$name dialect: ordered string aggregation (listagg) — ClickHouse's " +
           "groupArray carries no deterministic ORDER BY; aggregate engine-side")
-    def fallback(e: Expression, rendered: Expression => String): String = e match {
-      case _: graft.functions.InterleaveBits => throw new UnsupportedOperationException(
-        "clickhouse dialect: zorder_key's bound-once expansion needs outer " +
-          "references inside a derived table — compute the Morton key engine-side")
-      case da: DateAdd => s"(${rendered(da.startDate)} + ${rendered(da.days)})"
-      case ds: DateSub => s"(${rendered(ds.startDate)} - ${rendered(ds.days)})"
+    override def fallback(e: Expression, rendered: Expression => String): String = e match {
       // Spark dayofweek is 1-7 Sunday-first; toDayOfWeek is 1-7 Monday-first —
       // the reference's modulo adjustment, shifted to Spark's 1-based frame
       case dw: DayOfWeek => s"((toDayOfWeek(${rendered(dw.child)}) % 7) + 1)"
@@ -1270,19 +1169,15 @@ object SqlUnparser {
       // literal delimiter; only the metachar-free unlimited split translates
       case sp: StringSplit if literalDelim(sp).isDefined =>
         s"splitByString('${literalDelim(sp).get}', ${rendered(sp.str)})"
-      case _ => fnName(e.prettyName) match {
-        case Some(n) => s"$n(${e.children.map(rendered).mkString(", ")})"
-        case None => throw new UnsupportedOperationException(
-          s"clickhouse dialect: unsupported expression ${e.prettyName} in ${e.sql}")
-      }
+      case _ => super.fallback(e, rendered)
     }
-    private val direct = Set("upper", "lower", "concat", "abs", "round",
-      "floor", "ceil", "sqrt", "exp", "sign", "greatest", "least",
+    override protected val direct: Set[String] = Set("upper", "lower", "concat",
+      "abs", "round", "floor", "ceil", "sqrt", "exp", "sign", "greatest", "least",
       "trim", "ltrim", "rtrim", "lpad", "rpad", "repeat", "left", "right",
       "concat_ws", "date_trunc", "ln", "corr",
       "log10", "log2", "degrees", "radians", "sinh", "cosh", "tanh",
       "translate")
-    private val renamed = Map(
+    override protected val renamed: Map[String, String] = Map(
       "levenshtein" -> "editDistance",
       "ceiling" -> "ceil",
       "length" -> "lengthUTF8",   // byte-wise `length` diverges on non-ASCII
@@ -1298,10 +1193,6 @@ object SqlUnparser {
       "var_samp" -> "varSamp", "var_pop" -> "varPop",
       "covar_samp" -> "covarSamp", "covar_pop" -> "covarPop",
       "median" -> "median")
-    def fnName(prettyName: String): Option[String] = {
-      val p = prettyName.toLowerCase
-      if (direct(p)) Some(p) else renamed.get(p)
-    }
   }
 
   /** Snowflake dialect (`inner_dialect.rs:421-427` — the reference treats it
@@ -1318,115 +1209,60 @@ object SqlUnparser {
     * in this sandbox: pinned goldens + generation gates + the sweep.
     */
   object SnowflakeDialect extends Dialect {
-    // native 1-based split_part with Spark's ''-on-overflow
-    override def splitPart(s: String, delim: String, n: Int): Option[String] =
-      Some(s"split_part($s, $delim, $n)")
+    val name = "snowflake"
     // Snowflake's REGEXP_LIKE / REGEXP operator are FULL-match (unlike
     // Oracle's partial REGEXP_LIKE) — the partial-match predicate is
     // position-based; NULL inputs propagate through the comparison
     override def regexpMatch(s: String, p: String): Option[String] =
       Some(s"(REGEXP_INSTR($s, $p) > 0)")
-    override def regexpReplaceAll(s: String, p: String, r: String): Option[String] =
-      Some(s"REGEXP_REPLACE($s, $p, $r)")
-    def quote(ident: String): String = "\"" + ident.replace("\"", "\"\"") + "\""
-    def relation(rootPath: String): String = {
-      val base = rootPath.stripSuffix("/").split('/').last
-      if (base.endsWith(".parquet")) quote(base.stripSuffix(".parquet"))
-      else throw new UnsupportedOperationException(
-        s"snowflake dialect: no parquet table function for directory scan $rootPath " +
-          "— register an external table under the logical name")
-    }
-    def typeName(dt: DataType): String = dt match {
-      case StringType => "VARCHAR"
+    override def typeName(dt: DataType): String = dt match {
       case IntegerType | LongType | ShortType | ByteType => "NUMBER(38,0)"
       case DoubleType | FloatType => "FLOAT"
-      case BooleanType => "BOOLEAN"
-      case DateType => "DATE"
       case TimestampNTZType => "TIMESTAMP_NTZ"
       case _: TimestampType => "TIMESTAMP_NTZ" // session-TZ-free rendering
       case d: DecimalType => s"NUMBER(${d.precision},${d.scale})"
-      case other => throw new UnsupportedOperationException(
-        s"snowflake dialect: type ${other.sql}")
+      case _ => super.typeName(dt)
     }
-    def literal(l: Literal): String = backslashLiteral(l)
-    override def preferExtract: Boolean = true
-    override def semiAntiAsExists: Boolean = true
+    override def literal(l: Literal): String = backslashLiteral(l)
     // Snowflake / on NUMBER is exact decimal division; TRUNC is toward zero,
     // matching Spark's div over the full int64 range
     override def integralDivide(l: String, r: String): String =
       s"CAST(TRUNC($l / $r) AS BIGINT)"
-    // Snowflake types integral SUM as NUMBER(38,0) (≡ its BIGINT — cast is
-    // documentation-grade) and rounds integer AVG at NUMBER scale — averaging
-    // the FLOAT-cast child computes Spark's double values
-    override def aggResultCast(fn: AggregateFunction): Option[DataType] =
-      ansiAggResultCast(fn)
+    // NUMBER is the only integer type
+    override def rankResultCast: Option[DataType] = None
     // Snowflake bit machinery is function-spelled (BITAND/BITSHIFTRIGHT)
     override def shiftRight(l: String, r: String): String = s"BITSHIFTRIGHT($l, $r)"
     override def shiftLeft(l: String, r: String): String = s"BITSHIFTLEFT($l, $r)"
     override def bitAnd(l: String, r: String): String = s"BITAND($l, $r)"
     override def bitOr(l: String, r: String): String = s"BITOR($l, $r)"
-    override def aggChildCast(fn: AggregateFunction): Option[DataType] =
-      fn match {
-        case a: Average if isIntegral(a.child.dataType) => Some(DoubleType)
-        case _ => None
-      }
-    def joinKeyword(jt: JoinType): String = jt match {
-      case Inner => "JOIN"
-      case Cross => "CROSS JOIN"
-      case LeftOuter => "LEFT JOIN"
-      case RightOuter => "RIGHT JOIN"
-      case FullOuter => "FULL JOIN"
-      case LeftSemi | LeftAnti => throw new UnsupportedOperationException(
-        "snowflake dialect: semi/anti joins render as EXISTS (semiAntiAsExists)")
-      case other => throw new UnsupportedOperationException(
-        s"unparse: join type $other")
-    }
-    def values(rows: Seq[String], alias: String, cols: Seq[String]): String =
-      s"(VALUES ${rows.mkString(", ")}) AS ${quote(alias)}(${cols.map(quote).mkString(", ")})"
-    def fallback(e: Expression, rendered: Expression => String): String = e match {
-      case _: graft.functions.InterleaveBits => throw new UnsupportedOperationException(
-        "snowflake dialect: zorder_key's bound-once expansion needs outer " +
-          "references inside a derived table, outside Snowflake's documented " +
-          "decorrelation — compute the Morton key engine-side")
+    override def fallback(e: Expression, rendered: Expression => String): String = e match {
       case da: DateAdd =>
         s"DATEADD(day, ${rendered(da.days)}, ${rendered(da.startDate)})"
       case ds: DateSub =>
         s"DATEADD(day, -(${rendered(ds.days)}), ${rendered(ds.startDate)})"
-      // Snowflake MD5 takes VARCHAR and yields hex text like Spark's
-      case m: Md5 => s"md5(${rendered(md5Arg(m))})"
       // Snowflake POSITION(needle, haystack) takes the needle FIRST —
       // Spark's instr is (haystack, needle), so the generic child-order
       // fallback would search with the arguments swapped
       case si: StringInstr =>
         s"position(${rendered(si.substr)}, ${rendered(si.str)})"
-      case _ => fnName(e.prettyName) match {
-        case Some(n) => s"$n(${e.children.map(rendered).mkString(", ")})"
-        case None => throw new UnsupportedOperationException(
-          s"snowflake dialect: unsupported expression ${e.prettyName} in ${e.sql}")
-      }
+      case _ => super.fallback(e, rendered)
     }
-    private val direct = Set("upper", "lower", "length", "concat", "abs",
-      "round", "floor", "ceil", "trim", "ltrim", "rtrim", "replace",
+    override protected val direct: Set[String] = Set("upper", "lower", "length",
+      "concat", "abs", "round", "floor", "ceil", "trim", "ltrim", "rtrim", "replace",
       "lpad", "rpad", "reverse", "greatest", "least", "nullif", "sqrt", "ln",
-      "exp", "sign", "left", "right", "repeat", "mod",
-      // MD5 returns hex VARCHAR in Snowflake, same as Spark
-      "md5", "date_trunc", "concat_ws",
+      "exp", "sign", "left", "right", "repeat", "mod", "date_trunc", "concat_ws",
       "stddev_samp", "stddev_pop", "var_samp", "var_pop", "corr",
       "covar_samp", "covar_pop", "median",
       // LOG(base, expr) is base-first like Spark's 2-arg log
       "degrees", "radians", "cot", "sinh", "cosh", "tanh", "cbrt",
       "translate", "initcap", "log")
-    private val renamed = Map(
+    override protected val renamed: Map[String, String] = Map(
       "levenshtein" -> "EDITDISTANCE",
       "substring" -> "substr",
       "startswith" -> "STARTSWITH", "endswith" -> "ENDSWITH",
       "contains" -> "CONTAINS",
       "ceiling" -> "ceil", "pow" -> "pow", "power" -> "pow",
       "btrim" -> "trim")
-    def fnName(prettyName: String): Option[String] = {
-      val p = prettyName.toLowerCase
-      if (direct(p)) Some(p) else renamed.get(p)
-    }
   }
 
   /** SQL Server dialect (reference `MsSqlDialect`, `inner_dialect.rs:405-418`
@@ -1444,42 +1280,31 @@ object SqlUnparser {
     * spellings; `LEN` for length (documented T-SQL trailing-space caveat);
     * NVARCHAR(MAX)/DATETIME2(6)/BIT CAST targets (a bare `CAST(x AS VARCHAR)`
     * silently truncates to 30 chars — never emitted). lpad/rpad and the
-    * Morton expansion fail loudly. Snapshot posture (no SQL Server here).
+    * Morton expansion (T-SQL requires APPLY for lateral correlation) fail
+    * loudly. Snapshot posture (no SQL Server here).
     */
   object MsSqlDialect extends Dialect {
+    val name = "mssql"
     // T-SQL LIKE additionally treats [...] as a character class
     override def likePattern(p: String): String = p.replace("[", "[[]")
-    def quote(ident: String): String = "\"" + ident.replace("\"", "\"\"") + "\""
-    def relation(rootPath: String): String = {
-      val base = rootPath.stripSuffix("/").split('/').last
-      if (base.endsWith(".parquet")) quote(base.stripSuffix(".parquet"))
-      else throw new UnsupportedOperationException(
-        s"mssql dialect: no parquet table function for directory scan $rootPath " +
-          "— register the table under its logical name")
-    }
-    def typeName(dt: DataType): String = dt match {
+    // T-SQL has no regex functions and no split_part
+    override def regexpReplaceAll(s: String, p: String, r: String): Option[String] = None
+    override def splitPart(s: String, delim: String, n: Int): Option[String] = None
+    override def typeName(dt: DataType): String = dt match {
       case StringType => "NVARCHAR(MAX)"
       case IntegerType => "INT"
-      case LongType => "BIGINT"
-      case ShortType => "SMALLINT"
-      case ByteType => "TINYINT"
       // FLOAT(53) IS T-SQL's double (bare FLOAT defaults to it) — the
       // explicit precision keeps the text faithful on engines where bare
       // FLOAT is float32 (DuckDB reads float(p>=25) as float64, measured)
       case DoubleType => "FLOAT(53)"
-      case FloatType => "REAL"
       case BooleanType => "BIT"
-      case DateType => "DATE"
       // DATETIME2 carries no offset — T-SQL's wall-clock landing for both
       // Spark timestamp flavors (the tz-aware one is DATETIMEOFFSET, which
       // the corpus never projects; session tz is UTC so values coincide)
-      case TimestampNTZType => "DATETIME2(6)"
-      case _: TimestampType => "DATETIME2(6)"
-      case d: DecimalType => s"DECIMAL(${d.precision},${d.scale})"
-      case other => throw new UnsupportedOperationException(
-        s"mssql dialect: type ${other.sql}")
+      case TimestampNTZType | _: TimestampType => "DATETIME2(6)"
+      case _ => super.typeName(dt)
     }
-    def literal(l: Literal): String = l.dataType match {
+    override def literal(l: Literal): String = l.dataType match {
       // no TRUE/FALSE keywords in T-SQL, and no DATE/TIMESTAMP introducers —
       // typed literals go through explicit CASTs of their text form
       case BooleanType if l.value != null =>
@@ -1497,7 +1322,6 @@ object SqlUnparser {
     }
     override def dateField(field: String, child: String): Option[String] =
       Some(s"DATEPART($field, $child)")
-    override def semiAntiAsExists: Boolean = true
     // T-SQL booleans are predicates, never values: a comparison cannot be
     // selected, aggregated, or sorted. The trait's CASE WHEN 1/0 (INT, not
     // BIT) is the right value form — BIT would break min/max/sum, whose T-SQL
@@ -1515,21 +1339,15 @@ object SqlUnparser {
     override def aggResultCast(fn: AggregateFunction): Option[DataType] =
       fn match {
         case _: Count => Some(LongType)
-        case other => ansiAggResultCast(other)
+        case other => super.aggResultCast(other)
       }
     override def aggChildCast(fn: AggregateFunction): Option[DataType] =
       fn match {
         case s: Sum if isIntegral(s.child.dataType) &&
           s.child.dataType != LongType => Some(LongType)
-        case a: Average if isIntegral(a.child.dataType) => Some(DoubleType)
-        case a: Average => a.dataType match {
-          case d: DecimalType => Some(d)
-          case _ => None
-        }
-        case _ => None
+        case a: Average if a.dataType.isInstanceOf[DecimalType] => Some(a.dataType)
+        case other => super.aggChildCast(other)
       }
-    // T-SQL's ROW_NUMBER/RANK return bigint; Spark's are INT
-    override def rankResultCast: Option[DataType] = Some(IntegerType)
     // T-SQL has & and | but no shift operators; RIGHT_SHIFT/LEFT_SHIFT are
     // SQL Server 2022+ (the reference's sqlglot target emits the same)
     override def shiftRight(l: String, r: String): String = s"RIGHT_SHIFT($l, $r)"
@@ -1543,30 +1361,13 @@ object SqlUnparser {
       else Seq(s"(CASE WHEN $child IS NULL THEN 1 ELSE 0 END) " +
         s"${if (nullsFirst) "DESC" else "ASC"}", s"$child $dir")
     }
-    def joinKeyword(jt: JoinType): String = jt match {
-      case Inner => "JOIN"
-      case Cross => "CROSS JOIN"
-      case LeftOuter => "LEFT JOIN"
-      case RightOuter => "RIGHT JOIN"
-      case FullOuter => "FULL JOIN"
-      case LeftSemi | LeftAnti => throw new UnsupportedOperationException(
-        "mssql dialect: semi/anti joins render as EXISTS (semiAntiAsExists)")
-      case other => throw new UnsupportedOperationException(
-        s"unparse: join type $other")
-    }
-    def values(rows: Seq[String], alias: String, cols: Seq[String]): String =
-      s"(VALUES ${rows.mkString(", ")}) AS ${quote(alias)}(${cols.map(quote).mkString(", ")})"
     override def listAggSql(distinct: String, child: String, delim: String,
         order: Seq[String]): String = {
       val within =
         if (order.isEmpty) "" else s" WITHIN GROUP (ORDER BY ${order.mkString(", ")})"
       s"STRING_AGG($distinct$child, $delim)$within"
     }
-    def fallback(e: Expression, rendered: Expression => String): String = e match {
-      case _: graft.functions.InterleaveBits => throw new UnsupportedOperationException(
-        "mssql dialect: zorder_key's bound-once expansion needs outer references " +
-          "inside a derived table (T-SQL requires APPLY for lateral correlation) " +
-          "— compute the Morton key engine-side")
+    override def fallback(e: Expression, rendered: Expression => String): String = e match {
       case da: DateAdd =>
         s"DATEADD(day, ${rendered(da.days)}, ${rendered(da.startDate)})"
       case ds: DateSub =>
@@ -1578,7 +1379,7 @@ object SqlUnparser {
               "second")(f.toString.toLowerCase) =>
           s"DATETRUNC(${f.toString.toLowerCase}, ${rendered(t.timestamp)})"
         case other => throw new UnsupportedOperationException(
-          s"mssql dialect: date_trunc with unit $other")
+          s"$name dialect: date_trunc with unit $other")
       }
       // CHARINDEX takes (needle, haystack) — Spark's instr is (haystack, needle)
       case si: StringInstr =>
@@ -1591,18 +1392,14 @@ object SqlUnparser {
         s"(CHARINDEX(${rendered(ct.right)}, ${rendered(ct.left)}) > 0)"
       case m: Md5 =>
         s"LOWER(CONVERT(VARCHAR(32), HASHBYTES('MD5', ${rendered(md5Arg(m))}), 2))"
-      case _ => fnName(e.prettyName) match {
-        case Some(n) => s"$n(${e.children.map(rendered).mkString(", ")})"
-        case None => throw new UnsupportedOperationException(
-          s"mssql dialect: unsupported expression ${e.prettyName} in ${e.sql}")
-      }
+      case _ => super.fallback(e, rendered)
     }
-    private val direct = Set("upper", "lower", "concat", "abs", "round",
-      "floor", "sqrt", "exp", "sign", "trim", "ltrim", "rtrim", "replace",
-      "reverse", "greatest", "least", "nullif", "left", "right", "concat_ws",
+    override protected val direct: Set[String] = Set("upper", "lower", "concat",
+      "abs", "round", "floor", "sqrt", "exp", "sign", "trim", "ltrim", "rtrim",
+      "replace", "reverse", "greatest", "least", "nullif", "left", "right", "concat_ws",
       // 2-arg LOG is argument-REVERSED in T-SQL (LOG(x, base)) and refuses
       "log10", "degrees", "radians", "cot", "translate")
-    private val renamed = Map(
+    override protected val renamed: Map[String, String] = Map(
       // LEN ignores trailing spaces (documented T-SQL quirk)
       "length" -> "LEN",
       "ceil" -> "CEILING", "ceiling" -> "CEILING",
@@ -1611,10 +1408,6 @@ object SqlUnparser {
       "btrim" -> "trim",
       "stddev_samp" -> "STDEV", "stddev_pop" -> "STDEVP",
       "var_samp" -> "VAR", "var_pop" -> "VARP")
-    def fnName(prettyName: String): Option[String] = {
-      val p = prettyName.toLowerCase
-      if (direct(p)) Some(p) else renamed.get(p)
-    }
   }
 
   /** Oracle dialect (reference `OracleDialect`, `inner_dialect.rs:383-398` —
@@ -1624,11 +1417,13 @@ object SqlUnparser {
     * n-ary `concat` folds to the `||` operator (Oracle's CONCAT is strictly
     * binary); `CAST(TRUNC(l / r) AS NUMBER(19,0))` integer division over
     * exact NUMBER arithmetic; `LOWER(RAWTOHEX(STANDARD_HASH(x, 'MD5')))`;
-    * VARCHAR2/NUMBER/BINARY_DOUBLE CAST targets (BOOLEAN per 23ai). Inline
-    * VALUES render as UNION ALL over dual; reverse/concat_ws and the Morton
-    * expansion fail loudly. Snapshot posture (no Oracle here).
+    * VARCHAR2/NUMBER/BINARY_DOUBLE CAST targets (BOOLEAN per 23ai; earlier
+    * servers have no SQL boolean). Inline VALUES render as UNION ALL over
+    * dual; reverse/concat_ws and the Morton expansion (Oracle requires
+    * LATERAL) fail loudly. Snapshot posture (no Oracle here).
     */
   object OracleDialect extends Dialect {
+    val name = "oracle"
     // Oracle's REGEXP_LIKE is a partial-match CONDITION (predicate
     // position only — consistent with booleanAsValue=false);
     // REGEXP_REPLACE replaces every occurrence by default; REGEXP_SUBSTR's
@@ -1636,17 +1431,8 @@ object SqlUnparser {
     // Spark's ''-on-miss — extract refuses
     override def regexpMatch(s: String, p: String): Option[String] =
       Some(s"REGEXP_LIKE($s, $p)")
-    override def regexpReplaceAll(s: String, p: String, r: String): Option[String] =
-      Some(s"REGEXP_REPLACE($s, $p, $r)")
-    def quote(ident: String): String = "\"" + ident.replace("\"", "\"\"") + "\""
-    def relation(rootPath: String): String = {
-      val base = rootPath.stripSuffix("/").split('/').last
-      if (base.endsWith(".parquet")) quote(base.stripSuffix(".parquet"))
-      else throw new UnsupportedOperationException(
-        s"oracle dialect: no parquet table function for directory scan $rootPath " +
-          "— register the table (external table) under its logical name")
-    }
-    def typeName(dt: DataType): String = dt match {
+    override def splitPart(s: String, delim: String, n: Int): Option[String] = None
+    override def typeName(dt: DataType): String = dt match {
       case StringType => "VARCHAR2(4000)"
       case IntegerType => "NUMBER(10,0)"
       case LongType => "NUMBER(19,0)"
@@ -1654,23 +1440,16 @@ object SqlUnparser {
       case ByteType => "NUMBER(3,0)"
       case DoubleType => "BINARY_DOUBLE"
       case FloatType => "BINARY_FLOAT"
-      case BooleanType => "BOOLEAN" // 23ai; earlier servers have no SQL boolean
-      case DateType => "DATE"
-      case TimestampNTZType => "TIMESTAMP"
-      case _: TimestampType => "TIMESTAMP"
       case d: DecimalType => s"NUMBER(${d.precision},${d.scale})"
-      case other => throw new UnsupportedOperationException(
-        s"oracle dialect: type ${other.sql}")
+      case _ => super.typeName(dt)
     }
-    def literal(l: Literal): String = l.dataType match {
+    override def literal(l: Literal): String = l.dataType match {
       // pre-23ai Oracle has no TRUE/FALSE keywords; booleans travel as 0/1
       // (booleanAsValue=false keeps every boolean context numeric)
       case BooleanType if l.value != null =>
         if (l.value.asInstanceOf[Boolean]) "1" else "0"
       case _ => ansiLiteral(l)
     }
-    override def preferExtract: Boolean = true
-    override def semiAntiAsExists: Boolean = true
     // no SQL boolean before 23ai: predicates in value position become
     // CASE WHEN 1/0, value-shaped booleans in predicate position compare = 1
     override def booleanAsValue: Boolean = false
@@ -1681,13 +1460,17 @@ object SqlUnparser {
     override def integralDivide(l: String, r: String): String =
       s"CAST(TRUNC($l / $r) AS NUMBER(19,0))"
     // Oracle types every aggregate as NUMBER — count/sum/avg/stddev all
-    // need the CAST back to Spark's BIGINT/DOUBLE/decimal result
+    // need the CAST back to Spark's BIGINT/DOUBLE/decimal result, which also
+    // makes NUMBER's exact integer AVG need no argument cast; NUMBER is also
+    // its only integer type, so rankings stay uncast
     override def aggResultCast(fn: AggregateFunction): Option[DataType] =
       fn match {
         case _: Count => Some(LongType)
         case a: Average if a.dataType == DoubleType => Some(DoubleType)
-        case other => ansiAggResultCast(other)
+        case other => super.aggResultCast(other)
       }
+    override def aggChildCast(fn: AggregateFunction): Option[DataType] = None
+    override def rankResultCast: Option[DataType] = None
     // Oracle SQL has no shift operators and only BITAND: shifts render as
     // exact power-of-two arithmetic (counts are small literals over
     // non-negative grouping ids), OR via the inclusion-exclusion identity
@@ -1701,39 +1484,20 @@ object SqlUnparser {
     override def limitSuffix(n: Int, hasOrderBy: Boolean): String =
       s" FETCH FIRST $n ROWS ONLY"
     override def fromless(select: String): String = s"$select FROM dual"
-    def joinKeyword(jt: JoinType): String = jt match {
-      case Inner => "JOIN"
-      case Cross => "CROSS JOIN"
-      case LeftOuter => "LEFT JOIN"
-      case RightOuter => "RIGHT JOIN"
-      case FullOuter => "FULL JOIN"
-      case LeftSemi | LeftAnti => throw new UnsupportedOperationException(
-        "oracle dialect: semi/anti joins render as EXISTS (semiAntiAsExists)")
-      case other => throw new UnsupportedOperationException(
-        s"unparse: join type $other")
-    }
-    def values(rows: Seq[String], alias: String, cols: Seq[String]): String =
+    override def values(rows: Seq[String], alias: String, cols: Seq[String]): String =
       unionAllValues(rows, alias, cols) // pre-23 Oracle has no VALUES clause
-    def fallback(e: Expression, rendered: Expression => String): String = e match {
-      case _: graft.functions.InterleaveBits => throw new UnsupportedOperationException(
-        "oracle dialect: zorder_key's bound-once expansion needs outer references " +
-          "inside a derived table (Oracle requires LATERAL) — compute the " +
-          "Morton key engine-side")
-      case da: DateAdd => s"(${rendered(da.startDate)} + ${rendered(da.days)})"
-      case ds: DateSub => s"(${rendered(ds.startDate)} - ${rendered(ds.days)})"
+    override def fallback(e: Expression, rendered: Expression => String): String = e match {
       // TRUNC(ts, fmt) with Oracle's format-model spellings for the unit
-      case t: TruncTimestamp => t.format match {
-        case Literal(f, StringType) if f != null &&
-            Map("year" -> "YYYY", "quarter" -> "Q", "month" -> "MM",
-              "week" -> "IW", "day" -> "DD", "hour" -> "HH24",
-              "minute" -> "MI").contains(f.toString.toLowerCase) =>
-          val fmt = Map("year" -> "YYYY", "quarter" -> "Q", "month" -> "MM",
-            "week" -> "IW", "day" -> "DD", "hour" -> "HH24",
-            "minute" -> "MI")(f.toString.toLowerCase)
-          s"TRUNC(${rendered(t.timestamp)}, '$fmt')"
-        case other => throw new UnsupportedOperationException(
-          s"oracle dialect: date_trunc with unit $other")
-      }
+      case t: TruncTimestamp =>
+        val fmt = t.format match {
+          case Literal(f, StringType) if f != null =>
+            Map("year" -> "YYYY", "quarter" -> "Q", "month" -> "MM", "week" -> "IW",
+              "day" -> "DD", "hour" -> "HH24", "minute" -> "MI").get(f.toString.toLowerCase)
+          case _ => None
+        }
+        fmt.map(f => s"TRUNC(${rendered(t.timestamp)}, '$f')").getOrElse(
+          throw new UnsupportedOperationException(
+            s"$name dialect: date_trunc with unit ${t.format}"))
       // Oracle CONCAT is strictly binary; fold n-ary concat into ||
       case c: Concat if c.children.size >= 2 =>
         c.children.map(rendered).mkString("(", " || ", ")")
@@ -1745,28 +1509,20 @@ object SqlUnparser {
         s"(INSTR(${rendered(ct.left)}, ${rendered(ct.right)}) > 0)"
       case m: Md5 =>
         s"LOWER(RAWTOHEX(STANDARD_HASH(${rendered(md5Arg(m))}, 'MD5')))"
-      case _ => fnName(e.prettyName) match {
-        case Some(n) => s"$n(${e.children.map(rendered).mkString(", ")})"
-        case None => throw new UnsupportedOperationException(
-          s"oracle dialect: unsupported expression ${e.prettyName} in ${e.sql}")
-      }
+      case _ => super.fallback(e, rendered)
     }
-    private val direct = Set("upper", "lower", "length", "abs", "round",
-      "floor", "ceil", "sqrt", "exp", "ln", "sign", "trim", "ltrim", "rtrim",
-      "replace", "lpad", "rpad", "greatest", "least", "nullif", "instr",
+    override protected val direct: Set[String] = Set("upper", "lower", "length",
+      "abs", "round", "floor", "ceil", "sqrt", "exp", "ln", "sign", "trim", "ltrim",
+      "rtrim", "replace", "lpad", "rpad", "greatest", "least", "nullif", "instr",
       "stddev_samp", "stddev_pop", "var_samp", "var_pop", "corr",
       "covar_samp", "covar_pop", "median",
       // LOG(base, expr) is base-first like Spark's; no degrees/radians/cot/
       // cbrt/log10 in Oracle's function set
       "sinh", "cosh", "tanh", "translate", "initcap", "log")
-    private val renamed = Map(
+    override protected val renamed: Map[String, String] = Map(
       "substring" -> "SUBSTR", "ceiling" -> "ceil",
       "pow" -> "POWER", "power" -> "POWER", "mod" -> "MOD",
       "btrim" -> "trim")
-    def fnName(prettyName: String): Option[String] = {
-      val p = prettyName.toLowerCase
-      if (direct(p)) Some(p) else renamed.get(p)
-    }
   }
 
   /** Trino dialect — the reference's lingua franca: its ibis server PARSES
@@ -1790,6 +1546,7 @@ object SqlUnparser {
     * EXECUTED in DuckDB (shared ANSI core) by `tools/unparse_sweep.py`.
     */
   object TrinoDialect extends Dialect {
+    val name = "trino"
     // Trino's split_part is NULL-on-overflow where Spark is '' — the
     // guard keeps NULL inputs NULL
     override def splitPart(s: String, delim: String, n: Int): Option[String] =
@@ -1805,46 +1562,11 @@ object SqlUnparser {
     override def regexpExtract(s: String, p: String, idx: Int): Option[String] =
       Some(s"(CASE WHEN ($s IS NULL) OR ($p IS NULL) THEN NULL " +
         s"ELSE coalesce(regexp_extract($s, $p, $idx), '') END)")
-    def quote(ident: String): String = "\"" + ident.replace("\"", "\"\"") + "\""
-    def relation(rootPath: String): String = {
-      val base = rootPath.stripSuffix("/").split('/').last
-      if (base.endsWith(".parquet")) quote(base.stripSuffix(".parquet"))
-      else throw new UnsupportedOperationException(
-        s"trino dialect: no parquet table function for directory scan $rootPath " +
-          "— register the table (hive/iceberg catalog) under its logical name")
-    }
-    def typeName(dt: DataType): String = dt match {
-      case StringType => "VARCHAR"
-      case IntegerType => "INTEGER"
-      case LongType => "BIGINT"
-      case ShortType => "SMALLINT"
-      case ByteType => "TINYINT"
-      case DoubleType => "DOUBLE"
-      case FloatType => "REAL"
-      case BooleanType => "BOOLEAN"
-      case DateType => "DATE"
-      case TimestampNTZType => "TIMESTAMP"
-      case _: TimestampType => "TIMESTAMP"
-      case d: DecimalType => s"DECIMAL(${d.precision},${d.scale})"
-      case other => throw new UnsupportedOperationException(
-        s"trino dialect: type ${other.sql}")
-    }
-    def literal(l: Literal): String = ansiLiteral(l)
-    override def preferExtract: Boolean = true
-    override def semiAntiAsExists: Boolean = true
     // (l - l % r) / r: exact toward-zero quotient with no double detour —
     // bigint `/` would already truncate, but this form is also exact for
     // DECIMAL operands (the subtraction leaves an exactly divisible value)
     override def integralDivide(l: String, r: String): String =
       s"CAST((($l - ($l % $r)) / $r) AS BIGINT)"
-    // Trino sums decimals at (38,s) and its decimal AVG PRESERVES the input
-    // scale (rounded values vs Spark's s+4) — averaging the child pre-cast to
-    // Spark's result type makes Trino keep Spark's scale. Integral-SUM casts
-    // are no-ops on Trino (already BIGINT) and keep the sandbox's DuckDB
-    // execution of these texts type-exact (DuckDB sums integrals as HUGEINT)
-    override def aggResultCast(fn: AggregateFunction): Option[DataType] =
-      ansiAggResultCast(fn)
-    override def rankResultCast: Option[DataType] = Some(IntegerType)
     // Trino's series builder is the ARRAY-valued sequence(), expanded with a
     // FROM-positioned UNNEST; interval literals are single-unit quoted-value
     override def sequenceFn(start: String, stop: String, step: Option[String],
@@ -1862,9 +1584,9 @@ object SqlUnparser {
           .collectFirst { case (u, f) if micros % f == 0 =>
             s"INTERVAL '${micros / f}' $u" }
           .getOrElse(throw new UnsupportedOperationException(
-            "trino: sub-second INTERVAL literal"))
+            s"$name dialect: sub-second INTERVAL literal"))
       } else throw new UnsupportedOperationException(
-        "trino: mixed year-month + day-time INTERVAL literal")
+        s"$name dialect: mixed year-month + day-time INTERVAL literal")
     // Trino bit machinery is function-spelled (bitwise_and/bitwise_right_shift)
     override def shiftRight(l: String, r: String): String =
       s"bitwise_right_shift($l, $r)"
@@ -1872,38 +1594,21 @@ object SqlUnparser {
       s"bitwise_left_shift($l, $r)"
     override def bitAnd(l: String, r: String): String = s"bitwise_and($l, $r)"
     override def bitOr(l: String, r: String): String = s"bitwise_or($l, $r)"
+    // integer AVG is already DOUBLE, but decimal AVG PRESERVES the input
+    // scale (rounded values vs Spark's s+4) — averaging the child pre-cast
+    // to Spark's result type makes Trino keep Spark's scale
     override def aggChildCast(fn: AggregateFunction): Option[DataType] =
       fn match {
-        case a: Average => a.dataType match {
-          case d: DecimalType => Some(d)
-          case _ => None
-        }
+        case a: Average if a.dataType.isInstanceOf[DecimalType] => Some(a.dataType)
         case _ => None
       }
-    def joinKeyword(jt: JoinType): String = jt match {
-      case Inner => "JOIN"
-      case Cross => "CROSS JOIN"
-      case LeftOuter => "LEFT JOIN"
-      case RightOuter => "RIGHT JOIN"
-      case FullOuter => "FULL JOIN"
-      case LeftSemi | LeftAnti => throw new UnsupportedOperationException(
-        "trino dialect: semi/anti joins render as EXISTS (semiAntiAsExists)")
-      case other => throw new UnsupportedOperationException(
-        s"unparse: join type $other")
-    }
-    def values(rows: Seq[String], alias: String, cols: Seq[String]): String =
-      s"(VALUES ${rows.mkString(", ")}) AS ${quote(alias)}(${cols.map(quote).mkString(", ")})"
     // Trino's LISTAGG grammar REQUIRES WITHIN GROUP; the unordered form
     // renders as array_join(array_agg(x), d) instead of invalid SQL
     override def listAggSql(distinct: String, child: String, delim: String,
         order: Seq[String]): String =
       if (order.isEmpty) s"array_join(array_agg($distinct$child), $delim)"
       else s"listagg($distinct$child, $delim) WITHIN GROUP (ORDER BY ${order.mkString(", ")})"
-    def fallback(e: Expression, rendered: Expression => String): String = e match {
-      case _: graft.functions.InterleaveBits => throw new UnsupportedOperationException(
-        "trino dialect: zorder_key's bound-once expansion needs outer " +
-          "references inside a derived table, outside Trino's documented " +
-          "decorrelation support — compute the Morton key engine-side")
+    override def fallback(e: Expression, rendered: Expression => String): String = e match {
       case da: DateAdd =>
         s"date_add('day', ${rendered(da.days)}, ${rendered(da.startDate)})"
       case ds: DateSub =>
@@ -1919,16 +1624,12 @@ object SqlUnparser {
       // Trino's contains(array, elem) is ARRAY containment, not substring
       case ct: Contains =>
         s"(strpos(${rendered(ct.left)}, ${rendered(ct.right)}) > 0)"
-      case _ => fnName(e.prettyName) match {
-        case Some(n) => s"$n(${e.children.map(rendered).mkString(", ")})"
-        case None => throw new UnsupportedOperationException(
-          s"trino dialect: unsupported expression ${e.prettyName} in ${e.sql}")
-      }
+      case _ => super.fallback(e, rendered)
     }
-    private val direct = Set("upper", "lower", "length", "concat", "abs",
-      "round", "floor", "ceil", "ceiling", "trim", "ltrim", "rtrim", "replace",
-      "lpad", "rpad", "reverse", "greatest", "least", "nullif", "sqrt", "ln",
-      "exp", "sign", "date_trunc", "concat_ws", "pow", "power", "mod",
+    override protected val direct: Set[String] = Set("upper", "lower", "length",
+      "concat", "abs", "round", "floor", "ceil", "ceiling", "trim", "ltrim", "rtrim",
+      "replace", "lpad", "rpad", "reverse", "greatest", "least", "nullif", "sqrt",
+      "ln", "exp", "sign", "date_trunc", "concat_ws", "pow", "power", "mod",
       // ANSI statistical aggregates (Trino aggregate docs; no bare median —
       // Trino spells that approx_percentile, out of the curated subset)
       "stddev_samp", "stddev_pop", "var_samp", "var_pop", "corr",
@@ -1936,13 +1637,10 @@ object SqlUnparser {
       // math family (log(b,x) is base-first like Spark); no cot in Trino
       "log10", "log2", "log", "degrees", "radians", "sinh", "cosh", "tanh",
       "cbrt", "translate")
-    private val renamed = Map("substring" -> "substr", "instr" -> "strpos",
+    override protected val renamed: Map[String, String] = Map(
+      "substring" -> "substr", "instr" -> "strpos",
       "levenshtein" -> "levenshtein_distance",
       "startswith" -> "starts_with", "btrim" -> "trim")
-    def fnName(prettyName: String): Option[String] = {
-      val p = prettyName.toLowerCase
-      if (direct(p)) Some(p) else renamed.get(p)
-    }
   }
 
   /** Redshift dialect — the reference transpiles to sqlglot's `redshift`
@@ -1951,94 +1649,37 @@ object SqlUnparser {
     * are carried here: no `div()` function (integer `/` already truncates
     * toward zero in Redshift's PG-8 lineage; decimal operands go through
     * `TRUNC`), no `starts_with` builtin (structural `left`/`length`
-    * rendering), LISTAGG WITHIN GROUP instead of `string_agg(... ORDER BY)`,
-    * and NO VALUES table constructor (inline rows render as UNION ALL —
-    * Redshift only accepts VALUES in INSERT). The Morton expansion fails
-    * loudly: Redshift's correlated-subquery decorrelation rejects outer
-    * references inside derived tables. Snapshot posture (no server here);
-    * the grammar sweep's Redshift texts are DuckDB-executed like Postgres's.
+    * rendering), LISTAGG WITHIN GROUP instead of `string_agg(... ORDER BY)`
+    * (Redshift has no string_agg), and NO VALUES table constructor (inline
+    * rows render as UNION ALL — Redshift only accepts VALUES in INSERT). The
+    * Morton expansion fails loudly: Redshift's correlated-subquery
+    * decorrelation rejects outer references inside derived tables. Snapshot
+    * posture (no server here); the grammar sweep's Redshift texts are
+    * DuckDB-executed like Postgres's.
     */
   object RedshiftDialect extends Dialect {
-    // native 1-based split_part with Spark's ''-on-overflow
-    override def splitPart(s: String, delim: String, n: Int): Option[String] =
-      Some(s"split_part($s, $delim, $n)")
+    val name = "redshift"
     // Postgres-heritage `~` partial match; REGEXP_REPLACE replaces every
     // occurrence by default; REGEXP_SUBSTR cannot reach Spark's group/miss
     // semantics, so extract refuses
     override def regexpMatch(s: String, p: String): Option[String] =
       Some(s"($s ~ $p)")
-    override def regexpReplaceAll(s: String, p: String, r: String): Option[String] =
-      Some(s"REGEXP_REPLACE($s, $p, $r)")
-    def quote(ident: String): String = "\"" + ident.replace("\"", "\"\"") + "\""
-    def relation(rootPath: String): String = {
-      val base = rootPath.stripSuffix("/").split('/').last
-      if (base.endsWith(".parquet")) quote(base.stripSuffix(".parquet"))
-      else throw new UnsupportedOperationException(
-        s"redshift dialect: no parquet table function for directory scan $rootPath " +
-          "— register the table (Spectrum external table) under its logical name")
-    }
-    def typeName(dt: DataType): String = dt match {
+    override def typeName(dt: DataType): String = dt match {
       // Redshift's widest varchar is the explicit 65535 — it has no
       // SQL-Server-style VARCHAR(MAX) (caught by the DuckDB-executed sweep)
       case StringType => "VARCHAR(65535)"
-      case IntegerType => "INTEGER"
-      case LongType => "BIGINT"
-      case ShortType => "SMALLINT"
       case ByteType => "SMALLINT" // no TINYINT in Redshift
       case DoubleType => "DOUBLE PRECISION"
-      case FloatType => "REAL"
-      case BooleanType => "BOOLEAN"
-      case DateType => "DATE"
-      case TimestampNTZType => "TIMESTAMP"
-      case _: TimestampType => "TIMESTAMP"
       case d: DecimalType => s"NUMERIC(${d.precision},${d.scale})"
-      case other => throw new UnsupportedOperationException(
-        s"redshift dialect: type ${other.sql}")
+      case _ => super.typeName(dt)
     }
-    def literal(l: Literal): String = ansiLiteral(l)
-    override def preferExtract: Boolean = true
-    override def semiAntiAsExists: Boolean = true
     // no div() in Redshift; integer `/` truncates toward zero already and
     // TRUNC covers decimal operands (exact NUMERIC arithmetic, no doubles)
     override def integralDivide(l: String, r: String): String =
       s"CAST(TRUNC($l / $r) AS BIGINT)"
-    // Redshift sums decimals at (38,s); its integer AVG returns an INTEGER
-    // TYPE — truncated VALUES — so the child is averaged as DOUBLE PRECISION.
-    // Redshift's ranking functions return BIGINT; Spark's are INT
-    override def rankResultCast: Option[DataType] = Some(IntegerType)
-    // The integral-SUM cast is a no-op on Redshift (already BIGINT) and keeps
-    // the sandbox's DuckDB execution of these texts type-exact (HUGEINT sums)
-    override def aggResultCast(fn: AggregateFunction): Option[DataType] =
-      ansiAggResultCast(fn)
-    override def aggChildCast(fn: AggregateFunction): Option[DataType] =
-      fn match {
-        case a: Average if isIntegral(a.child.dataType) => Some(DoubleType)
-        case _ => None
-      }
-    def joinKeyword(jt: JoinType): String = jt match {
-      case Inner => "JOIN"
-      case Cross => "CROSS JOIN"
-      case LeftOuter => "LEFT JOIN"
-      case RightOuter => "RIGHT JOIN"
-      case FullOuter => "FULL JOIN"
-      case LeftSemi | LeftAnti => throw new UnsupportedOperationException(
-        "redshift dialect: semi/anti joins render as EXISTS (semiAntiAsExists)")
-      case other => throw new UnsupportedOperationException(
-        s"unparse: join type $other")
-    }
-    def values(rows: Seq[String], alias: String, cols: Seq[String]): String =
+    override def values(rows: Seq[String], alias: String, cols: Seq[String]): String =
       unionAllValues(rows, alias, cols) // Redshift: VALUES only in INSERT
-    // ANSI LISTAGG WITHIN GROUP (Redshift has no string_agg) = trait default
-    def fallback(e: Expression, rendered: Expression => String): String = e match {
-      case _: graft.functions.InterleaveBits => throw new UnsupportedOperationException(
-        "redshift dialect: zorder_key's bound-once expansion needs outer " +
-          "references inside a derived table, outside Redshift's documented " +
-          "correlated-subquery patterns — compute the Morton key engine-side")
-      case da: DateAdd => s"(${rendered(da.startDate)} + ${rendered(da.days)})"
-      case ds: DateSub => s"(${rendered(ds.startDate)} - ${rendered(ds.days)})"
-      // Redshift MD5 takes VARCHAR and yields hex text like Spark's (the
-      // Spark-inserted STRING→BINARY cast is stripped)
-      case m: Md5 => s"md5(${rendered(md5Arg(m))})"
+    override def fallback(e: Expression, rendered: Expression => String): String = e match {
       // no starts_with/ends_with/contains builtins (Postgres-family posture)
       case sw: StartsWith =>
         s"(left(${rendered(sw.left)}, length(${rendered(sw.right)})) = ${rendered(sw.right)})"
@@ -2049,14 +1690,10 @@ object SqlUnparser {
       // Redshift CONCAT is strictly binary; fold n-ary concat into ||
       case c: Concat if c.children.size >= 2 =>
         c.children.map(rendered).mkString("(", " || ", ")")
-      case _ => fnName(e.prettyName) match {
-        case Some(n) => s"$n(${e.children.map(rendered).mkString(", ")})"
-        case None => throw new UnsupportedOperationException(
-          s"redshift dialect: unsupported expression ${e.prettyName} in ${e.sql}")
-      }
+      case _ => super.fallback(e, rendered)
     }
-    private val direct = Set("upper", "lower", "length", "abs",
-      "round", "floor", "ceil", "ceiling", "trim", "btrim", "ltrim", "rtrim",
+    override protected val direct: Set[String] = Set("upper", "lower", "length",
+      "abs", "round", "floor", "ceil", "ceiling", "trim", "btrim", "ltrim", "rtrim",
       "replace", "lpad", "rpad", "reverse", "greatest", "least", "nullif",
       "sqrt", "ln", "exp", "sign", "initcap",
       "date_trunc", "left", "right", "repeat", "mod",
@@ -2065,14 +1702,11 @@ object SqlUnparser {
       "stddev_samp", "stddev_pop", "var_samp", "var_pop", "median",
       // math + string family (no hyperbolics in Redshift)
       "degrees", "radians", "cot", "cbrt", "translate")
-    private val renamed = Map("substring" -> "substr", "instr" -> "strpos",
+    override protected val renamed: Map[String, String] = Map(
+      "substring" -> "substr", "instr" -> "strpos",
       // Redshift's single-argument LOG is base-10
       "log10" -> "LOG",
       "pow" -> "POWER", "power" -> "POWER")
-    def fnName(prettyName: String): Option[String] = {
-      val p = prettyName.toLowerCase
-      if (direct(p)) Some(p) else renamed.get(p)
-    }
   }
 
   private final class Generator(dialect: Dialect, referenced: Set[ExprId]) {
@@ -2546,8 +2180,7 @@ object SqlUnparser {
         dialect.sequenceFn(re(s.start), re(s.stop), s.stepOpt.map(re),
             s.dataType match { case ArrayType(e, _) => e; case other => other })
           .getOrElse(throw new UnsupportedOperationException(
-            s"unparse: sequence(...) has no ${dialect.getClass.getSimpleName
-              .stripSuffix("$").toLowerCase} spelling"))
+            s"unparse: sequence(...) has no ${dialect.name} spelling"))
       case y: Year => extractOr(y, "year")
       case m: Month => extractOr(m, "month")
       case d: DayOfMonth => extractOr(d, "day")

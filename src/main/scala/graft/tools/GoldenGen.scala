@@ -15,9 +15,7 @@ import graft.queries.{Semantic, TpcH}
   * (insta snapshots, `wren-core/core/src/mdl/mod.rs:648+`).
   */
 object GoldenGen {
-  val dialects: Seq[String] = Seq("spark", "duckdb", "postgres", "mysql",
-    "bigquery", "clickhouse", "snowflake", "mssql", "oracle", "trino",
-    "redshift")
+  val dialects: Seq[String] = graft.semantics.SqlUnparser.dialects.map(_.name)
 
   val corpus: Seq[(String, String)] = Seq(
     "m21" -> Semantic.m21Sql, "m22" -> Semantic.m22Sql,
@@ -32,7 +30,6 @@ object GoldenGen {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("src/test/resources/goldens")
     val spark = SparkProfile.session("graft-goldengen")
-    val sem = GraftEngine.deployOnDir(spark, Semantic.manifest, "/root/testdata/sf0.001")
     var n = 0
     def write(dialect: String, name: String, text: String): Unit = {
       val p = Paths.get(outDir, dialect, s"$name.sql")
@@ -41,17 +38,20 @@ object GoldenGen {
         StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
       n += 1
     }
-    for (d <- dialects; (name, sql) <- corpus)
-      try write(d, name, sem.transformSql(sql, d))
-      catch { case e: Exception =>
+    // a loud refusal is reported and writes no pin; any other exception is a
+    // rendering bug and ends the run with a non-zero exit
+    def render(d: String, name: String, text: => String): Unit =
+      try write(d, name, text)
+      catch { case e: UnsupportedOperationException =>
         System.err.println(s"[golden-gen] $d/$name: ${e.getMessage}") }
-    val tpch = GraftEngine.deployOnDir(spark, TpcH.manifest, "/root/testdata/sf0.001")
-    for ((name, sql) <- TpcH.oracles.toSeq.sortBy(_._1);
-         d <- Seq("duckdb", "postgres", "trino", "redshift"))
-      try write(d, name, tpch.transformSql(sql, d))
-      catch { case e: Exception =>
-        System.err.println(s"[golden-gen] $d/$name: ${e.getMessage}") }
-    println(s"[golden-gen] wrote $n files under $outDir")
-    spark.stop()
+    try {
+      val sem = GraftEngine.deployOnDir(spark, Semantic.manifest, "/root/testdata/sf0.001")
+      for (d <- dialects; (name, sql) <- corpus) render(d, name, sem.transformSql(sql, d))
+      val tpch = GraftEngine.deployOnDir(spark, TpcH.manifest, "/root/testdata/sf0.001")
+      for ((name, sql) <- TpcH.oracles.toSeq.sortBy(_._1);
+           d <- Seq("duckdb", "postgres", "trino", "redshift"))
+        render(d, name, tpch.transformSql(sql, d))
+      println(s"[golden-gen] wrote $n files under $outDir")
+    } finally spark.stop()
   }
 }

@@ -13,20 +13,6 @@ import org.scalatest.Assertions._
   */
 object DialectLint {
 
-  def nameOf(d: SqlUnparser.Dialect): String = d match {
-    case SqlUnparser.SparkDialect      => "spark"
-    case SqlUnparser.DuckDbDialect     => "duckdb"
-    case SqlUnparser.PostgresDialect   => "postgres"
-    case SqlUnparser.MySqlDialect      => "mysql"
-    case SqlUnparser.BigQueryDialect   => "bigquery"
-    case SqlUnparser.ClickHouseDialect => "clickhouse"
-    case SqlUnparser.SnowflakeDialect  => "snowflake"
-    case SqlUnparser.MsSqlDialect      => "mssql"
-    case SqlUnparser.OracleDialect     => "oracle"
-    case SqlUnparser.TrinoDialect      => "trino"
-    case SqlUnparser.RedshiftDialect   => "redshift"
-  }
-
   /** Blank out single-quoted literals (with `''` escapes). GoogleSQL escapes
     * the quote as `\'` instead — its literals strip with the backslash rule,
     * and a stray `''`-doubled quote inside a GoogleSQL literal would leak

@@ -44,7 +44,7 @@ object SqlUnparserPropertyGrammar {
           spark.sessionState.optimizer.execute(df.queryExecution.analyzed)
         val text = SqlUnparser.unparse(optimized, df.columns.toIndexedSeq, dialect)
         assert(text.startsWith("SELECT"), s"seed=$seed\n$sql")
-        DialectLint.lint(DialectLint.nameOf(dialect), s"seed=$seed", text)
+        DialectLint.lint(dialect.name, s"seed=$seed", text)
       } catch {
         case _: UnsupportedOperationException => refused += 1
         case e: Exception =>

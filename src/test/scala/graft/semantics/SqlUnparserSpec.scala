@@ -220,6 +220,17 @@ class SqlUnparserSpec extends AnyFunSuite {
     assert(e.getMessage.contains("unsupported expression"), e.getMessage)
   }
 
+  test("every curated dialect refuses under its own name") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.BinaryType
+    for (d <- SqlUnparser.dialects if d != SqlUnparser.SparkDialect) {
+      val e = intercept[UnsupportedOperationException] {
+        d.literal(Literal(Array[Byte](1), BinaryType))
+      }
+      assert(e.getMessage.startsWith(s"${d.name} dialect:"), e.getMessage)
+    }
+  }
+
   test("unknown dialect is rejected; 'plan' falls back to the catalyst dump") {
     intercept[IllegalArgumentException] {
       session.transformSql("SELECT 1", "oracle9i")
