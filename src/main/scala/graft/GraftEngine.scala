@@ -79,34 +79,65 @@ object GraftEngine {
 /** A query exceeded its time budget and its Spark jobs were cancelled. */
 final class QueryTimeoutException(msg: String) extends RuntimeException(msg)
 
-/** Tiny synchronized LRU (access-order LinkedHashMap) for the engine's session/plan
+/** Tiny synchronized LRU (access-order LinkedHashMap) for the engine's session
   * caches: at capacity the least-recently-USED entry is evicted — the old bound
-  * cleared the whole map, cold-starting every cached tenant/plan at once.
+  * cleared the whole map, cold-starting every cached tenant at once.
   */
 private[graft] final class LruCache[K, V](capacity: Int) {
   private val m = LruCache.accessOrderedMap[K, V](capacity)
-  private var hitN = 0L
-  private var missN = 0L
-  def get(k: K): V = m.synchronized {
-    val v = m.get(k)
-    if (v == null) missN += 1 else hitN += 1
-    v
-  }
+  def get(k: K): V = m.synchronized(m.get(k))
   def put(k: K, v: V): Unit = m.synchronized { m.put(k, v); () }
   def size: Int = m.synchronized(m.size)
-  /** (hits, misses) since construction/reset — the plan-cache hit-rate
-    * evidence PlanProfile reports (round-14 planning-drift adjudication).
-    */
-  def stats: (Long, Long) = m.synchronized((hitN, missN))
-  def resetStats(): Unit = m.synchronized { hitN = 0L; missN = 0L }
 }
 
 private[graft] object LruCache {
-  /** Access-order map that drops its least-recently-used entry past `capacity`. */
-  def accessOrderedMap[K, V](capacity: Int): java.util.Map[K, V] =
+  /** Access-order map that drops its least-recently-used entry past `capacity`,
+    * handing the dropped key to `onEvict`.
+    */
+  def accessOrderedMap[K, V](capacity: Int, onEvict: K => Unit = (_: K) => ())
+      : java.util.Map[K, V] =
     new java.util.LinkedHashMap[K, V](capacity * 2, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = this.size > capacity
+      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
+        this.size > capacity && { onEvict(e.getKey); true }
     }
+}
+
+/** An LRU that keeps a value past its first use only when its key comes back —
+  * the admission rule of 2Q (Johnson & Shasha, VLDB 1994). A first-sight value
+  * waits in a `probation` LRU; a hit there promotes it into the `capacity` LRU.
+  * A key that probation evicts leaves its hash among the last `ghosts` evicted,
+  * and its next value goes straight into the `capacity` LRU, so a cycle longer
+  * than probation hits from its third pass on. A hash collision only admits a
+  * value early. One monitor guards all three; nothing is computed under it.
+  */
+private[graft] final class ProbationCache[K, V](capacity: Int, probation: Int, ghosts: Int) {
+  private val kept = LruCache.accessOrderedMap[K, V](capacity)
+  private val ghost = LruCache.accessOrderedMap[Int, java.lang.Boolean](ghosts)
+  private val trial =
+    LruCache.accessOrderedMap[K, V](probation, k => { ghost.put(k.hashCode, true); () })
+  private var hitN = 0L
+  private var missN = 0L
+
+  /** The value for `k`, or null; a probation hit promotes it. */
+  def get(k: K): V = synchronized {
+    var v = kept.get(k)
+    if (v == null) {
+      v = trial.remove(k)
+      if (v != null) kept.put(k, v)
+    }
+    if (v == null) missN += 1 else hitN += 1
+    v
+  }
+
+  def put(k: K, v: V): Unit = synchronized {
+    if (kept.containsKey(k) || ghost.remove(k.hashCode) != null) kept.put(k, v)
+    else trial.put(k, v)
+    ()
+  }
+
+  /** (hits, misses) since construction/reset: a probation hit is a hit. */
+  def stats: (Long, Long) = synchronized((hitN, missN))
+  def resetStats(): Unit = synchronized { hitN = 0L; missN = 0L }
 }
 
 object GraftSession {
@@ -196,14 +227,28 @@ final class GraftSession(
     * consults the CacheManager each time a plan is used. Plans with time-dependent
     * foldables (current_timestamp & co., which the optimizer freezes per run),
     * non-deterministic expressions (rand, uuid) or streaming sources optimize per call.
+    *
+    * An entry retains ~150 KB, so a plan is kept past its first use only when
+    * its SQL comes back ([[ProbationCache]]). A first-sight plan waits among the
+    * last 8 planned; a hit there promotes it into the 256-entry LRU and counts as
+    * a hit, so a validate-then-execute or dry-run-then-query pair hits as before.
+    * A plan pushed out of probation leaves its key's hash among the last 1024
+    * such; when that SQL comes back it is planned once more and kept, so a
+    * dashboard cycling more queries than probation holds hits from its third
+    * pass on. The trade: SQL not sent again within 8 plannings no longer stays
+    * pinned, and SQL that first comes back later than that is planned twice
+    * where a plain LRU planned it once.
     */
   private final class CachedPlan(val analyzed: LogicalPlan, val reusable: Boolean) {
     lazy val optimized: LogicalPlan = Bridge.optimize(spark, analyzed)
   }
 
-  private val planCache = new LruCache[(String, Option[Int]), CachedPlan](256)
+  private val planCache =
+    new ProbationCache[(String, Option[Int]), CachedPlan](256, probation = 8, ghosts = 1024)
 
-  /** (hits, misses) of the per-session plan cache — PlanProfile evidence. */
+  /** (hits, misses) of the per-session plan cache — PlanProfile evidence. A hit
+    * in probation is a hit; every planning is a miss.
+    */
   def planCacheStats: (Long, Long) = planCache.stats
   def resetPlanCacheStats(): Unit = planCache.resetStats()
 

@@ -41,7 +41,7 @@ final class QueryCache(root: String, ttlMillis: Long = 10 * 60 * 1000,
     // would let a handle race the deletion
     if (Files.exists(marker) && !Files.exists(d.resolve(Evicted)) &&
       System.currentTimeMillis() - Files.getLastModifiedTime(marker).toMillis < ttlMillis)
-      Some(read(spark, d.toString))
+      Some(Bridge.readParquet(spark, d.toString)) // schema from the footer: a hit starts no job
     else None
   }
 
@@ -52,12 +52,8 @@ final class QueryCache(root: String, ttlMillis: Long = 10 * 60 * 1000,
     val d = dirFor(keyOf(manifestId, sql, props.toSeq.sorted.mkString(";")))
     df.write.mode(SaveMode.Overwrite).parquet(d.toString)
     sweep(keep = d)
-    read(df.sparkSession, d.toString)
+    Bridge.readParquet(df.sparkSession, d.toString)
   }
-
-  // an entry's schema comes from its footer on the driver: a hit starts no job
-  private def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.format("parquet").schema(Bridge.parquetSchema(spark, dir)).load(dir)
 
   /** Bound the cache by age AND count. Expired entries are deleted first; if the
     * directory still holds more than `maxEntries` live entries, the oldest (by

@@ -101,7 +101,7 @@ final class PathResolver(
         spark.read.format("csv")
           .option("header", "true").option("inferSchema", "true").load(path)
       case "parquet" =>
-        spark.read.format("parquet").schema(Bridge.parquetSchema(spark, path)).load(path)
+        Bridge.readParquet(spark, path)
       case _ =>
         spark.read.format(format).load(path)
     }

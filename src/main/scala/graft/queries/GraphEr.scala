@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 import graft.operators.{Dedup, EntityResolution, GraphOps}
 
@@ -19,7 +20,7 @@ object GraphEr {
     Relational.normalizeEventTs(s.read.parquet(s"$dir/events.parquet"))
   }
   private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    Bridge.readParquet(s, s"$dir/documents.parquet")
 
   /** Interaction graph over events: within each (event_type, hour) activity
     * group, every participant links to the group's first user (min user_id) —

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 import graft.operators.{Curation, Dedup, EventOps, Multimodal, Similarity, TextAnalysis}
 
@@ -14,7 +15,7 @@ import graft.operators.{Curation, Dedup, EventOps, Multimodal, Similarity, TextA
 object Pipeline {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    Bridge.readParquet(s, s"$dir/documents.parquet")
 
   /** Collect a SMALL harness result into a local DataFrame and delete the temp
     * tree it was read from. The streaming harnesses (w2, mm8) write manifests /
@@ -32,7 +33,7 @@ object Pipeline {
     out
   }
   private def embs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
+    Bridge.readParquet(s, s"$dir/embeddings.parquet")
   private def events(s: SparkSession, dir: String): DataFrame = {
     // nanosAsLong is only consulted when the fixture carries NANOS columns (the
     // legacy shape); set it best-effort so that shape loads in foreign sessions,

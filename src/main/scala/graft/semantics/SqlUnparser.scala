@@ -495,6 +495,11 @@ object SqlUnparser {
       case (v: Decimal, _) => v.toBigDecimal.bigDecimal.toPlainString
       case (v: Double, DoubleType) if !v.isNaN && !v.isInfinite =>
         java.math.BigDecimal.valueOf(v).toPlainString
+      // the shortest decimal that reads back as this float, cast to the dialect's
+      // typeName(FloatType); that is a double type on BigQuery (FLOAT64) and
+      // Snowflake (FLOAT), where the value is the double nearest the decimal
+      case (v: Float, FloatType) if !v.isNaN && !v.isInfinite =>
+        s"CAST(${new java.math.BigDecimal(v.toString).toPlainString} AS ${typeName(FloatType)})"
       case (v, dt) if dt == IntegerType || dt == LongType || dt == ShortType ||
         dt == ByteType => v.toString
       case (v, dt) => throw new UnsupportedOperationException(
@@ -686,9 +691,6 @@ object SqlUnparser {
       // would grow the text multiplicatively and re-evaluate it per term on
       // engines without common-subexpression elimination.
       case z: graft.functions.InterleaveBits => mortonExpansion(z, rendered)
-      // md5 keeps its argument: the Spark-inserted STRING→BINARY cast has no
-      // type here, so md5 over text refuses and md5 over a blob renders
-      case m: Md5 => s"md5(${rendered(m.child)})"
       case _ => super.fallback(e, rendered)
     }
     override protected val direct: Set[String] = Set("upper", "lower", "length",
@@ -856,9 +858,6 @@ object SqlUnparser {
         s"(${rendered(da.startDate)} + INTERVAL ${rendered(da.days)} DAY)"
       case ds: DateSub =>
         s"(${rendered(ds.startDate)} - INTERVAL ${rendered(ds.days)} DAY)"
-      // md5 keeps its argument: the Spark-inserted STRING→BINARY cast has no
-      // CAST target here, so md5 over text refuses
-      case m: Md5 => s"md5(${rendered(m.child)})"
       case sw: StartsWith =>
         s"(left(${rendered(sw.left)}, char_length(${rendered(sw.right)})) = ${rendered(sw.right)})"
       case ew: EndsWith =>

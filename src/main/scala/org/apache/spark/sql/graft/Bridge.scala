@@ -140,6 +140,12 @@ object Bridge {
     }
   }
 
+  /** `spark.read.parquet(path)` under the schema [[parquetSchema]] reads from a
+    * footer, so building the DataFrame starts no schema-inference job.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.format("parquet").schema(parquetSchema(spark, path)).load(path)
+
   /** Register a plan-time expression builder as a session temp function (the same
     * registry SQL temp functions land in, so `SHOW FUNCTIONS` / drops behave alike).
     */

@@ -121,4 +121,13 @@ class ParquetSchemaSpec extends AnyFunSuite {
     assert(sess.query("SELECT count(*) FROM orders").head.getLong(0) ==
       spark.read.parquet(s"$dir/orders.parquet").count())
   }
+
+  test("building the d2_dedup_minhash and p1_curate DataFrames starts no Spark job") {
+    for (entry <- Seq("d2_dedup_minhash", "p1_curate")) {
+      val (df, jobs) =
+        JobMeter.jobs(spark)(graft.SparkEntry.queries(entry)(spark, TestSpark.sfDir))
+      assert(jobs == 0, s"building $entry started $jobs Spark job(s)")
+      assert(df.schema.nonEmpty)
+    }
+  }
 }

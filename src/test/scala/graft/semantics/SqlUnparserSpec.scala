@@ -1,9 +1,10 @@
 package graft.semantics
 
+import org.apache.spark.sql.types.FloatType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{GraftEngine, TestSpark}
-import graft.queries.Semantic
+import graft.queries.{Semantic, TpcH}
 
 /** Unparse laws. The Spark dialect is verified by ROUND-TRIP EXECUTION: the
   * emitted text must run on a bare session (no deploy, no temp views — scans
@@ -243,5 +244,21 @@ class SqlUnparserSpec extends AnyFunSuite {
     assert(session.planCacheStats == before)
     assert(session.transformSql("SELECT o_orderkey FROM m_orders LIMIT 1", "plan")
       .contains("GlobalLimit"))
+  }
+
+  private lazy val tpch = GraftEngine.deployOnDir(spark, TpcH.manifest, TestSpark.sfDir)
+
+  test("md5 over text renders on DuckDB and MySQL, without Spark's BINARY cast") {
+    for (d <- Seq("duckdb", "mysql")) {
+      val text = tpch.transformSql("SELECT md5(o_orderstatus) AS h FROM orders", d)
+      assert(text.contains("md5(") && !text.contains("CAST("), s"$d:\n$text")
+    }
+  }
+
+  test("a FLOAT literal renders as a cast decimal in every non-Spark dialect") {
+    for (d <- SqlUnparser.dialects if d != SqlUnparser.SparkDialect) {
+      val text = tpch.transformSql("SELECT cast(1.5 as float) AS f FROM orders", d.name)
+      assert(text.contains(s"CAST(1.5 AS ${d.typeName(FloatType)})"), s"${d.name}:\n$text")
+    }
   }
 }
