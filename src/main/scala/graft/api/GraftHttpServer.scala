@@ -90,10 +90,7 @@ final class GraftHttpServer(
   }
 
   private def memoryManifest(body: JValue): graft.mdl.Manifest = {
-    val manifestStr = (body \ "manifestStr") match {
-      case JString(s) if s.nonEmpty => s
-      case _ => throw new IllegalArgumentException("manifestStr is required")
-    }
+    val manifestStr = required(body, "manifestStr")
     if (manifestStr.trim.startsWith("{")) graft.mdl.ManifestJson.parse(manifestStr)
     else graft.mdl.ManifestJson.parseBase64(manifestStr)
   }
@@ -185,6 +182,10 @@ final class GraftHttpServer(
     case JString(s) if s.nonEmpty => Some(s)
     case _ => None
   }
+
+  /** A non-empty string field, or a 422 naming it. */
+  private def required(body: JValue, field: String): String =
+    jstr(body \ field).getOrElse(throw new IllegalArgumentException(s"$field is required"))
 
   /** One base deployment per manifest (built on first request, under that request's
     * header properties); every other property set derives via `withExactProperties`,
@@ -312,8 +313,7 @@ final class GraftHttpServer(
           "schema_items" -> JInt(schemaCount), "seed_queries" -> JInt(seedCount))))
       case ("POST", "v1" :: "memory" :: "context" :: Nil) =>
         val body = parseBody(ex)
-        val query = jstr(body \ "query")
-          .getOrElse(throw new IllegalArgumentException("query is required"))
+        val query = required(body, "query")
         val ctx = memoryStore.getContext(
           memoryManifest(body), query,
           limit = jint(body \ "limit").getOrElse(5),
@@ -330,15 +330,13 @@ final class GraftHttpServer(
         respond(ex, 200, JsonMethods.compact(out))
       case ("POST", "v1" :: "memory" :: "query" :: Nil) =>
         val body = parseBody(ex)
-        memoryStore.storeQuery(
-          jstr(body \ "nl").getOrElse(throw new IllegalArgumentException("nl is required")),
-          jstr(body \ "sql").getOrElse(throw new IllegalArgumentException("sql is required")),
+        memoryStore.storeQuery(required(body, "nl"), required(body, "sql"),
           datasource = jstr(body \ "datasource"), tags = jstr(body \ "tags"))
         respond(ex, 200, """{"stored":true}""")
       case ("POST", "v1" :: "memory" :: "recall" :: Nil) =>
         val body = parseBody(ex)
         val results = memoryStore.recallQueries(
-          jstr(body \ "query").getOrElse(throw new IllegalArgumentException("query is required")),
+          required(body, "query"),
           limit = jint(body \ "limit").getOrElse(3),
           datasource = jstr(body \ "datasource"))
         respond(ex, 200, JsonMethods.compact(JArray(results.toList.map(memRowJson))))
@@ -366,8 +364,7 @@ final class GraftHttpServer(
         val body = parseBody(ex)
         val out =
           if (which == "sql") {
-            val sql = jstr(body \ "sql")
-              .getOrElse(throw new IllegalArgumentException("sql is required"))
+            val sql = required(body, "sql")
             JArray(List(graft.semantics.QueryAnalyzer.analyze(spark, sql)))
           } else body \ "sqls" match {
             case JArray(sqls) => JArray(sqls.map(s => JArray(List(
@@ -380,10 +377,8 @@ final class GraftHttpServer(
       // routers/v2/connector.py:336-354): plan the SQL with no datasource context.
       case ("POST", "v2" :: "connector" :: "dry-plan" :: Nil) =>
         val body = parseBody(ex)
-        val manifestStr = jstr(body \ "manifestStr")
-          .getOrElse(throw new IllegalArgumentException("manifestStr is required"))
-        val sql = jstr(body \ "sql")
-          .getOrElse(throw new IllegalArgumentException("sql is required"))
+        val manifestStr = required(body, "manifestStr")
+        val sql = required(body, "sql")
         respond(ex, 200, session(manifestStr, headerProperties(ex)).transformSql(sql),
           "text/plain")
 
@@ -392,13 +387,11 @@ final class GraftHttpServer(
       // dryRun/cacheEnable/limit query params), same engine calls behind both.
       case ("POST", ("v2" | "v3") :: "connector" :: _ :: rest) =>
         val body = parseBody(ex)
-        val manifestStr = jstr(body \ "manifestStr")
-          .getOrElse(throw new IllegalArgumentException("manifestStr is required"))
+        val manifestStr = required(body, "manifestStr")
         val props = headerProperties(ex)
         rest match {
           case "query" :: Nil =>
-            val sql = jstr(body \ "sql")
-              .getOrElse(throw new IllegalArgumentException("sql is required"))
+            val sql = required(body, "sql")
             val params = queryParams(ex)
             val sess = session(manifestStr, props)
             if (params.get("dryRun").exists(_.equalsIgnoreCase("true"))) {
@@ -431,8 +424,7 @@ final class GraftHttpServer(
             }
 
           case "dry-plan" :: Nil =>
-            val sql = jstr(body \ "sql")
-              .getOrElse(throw new IllegalArgumentException("sql is required"))
+            val sql = required(body, "sql")
             // optional dialect: spark|duckdb|postgres|mysql|bigquery|clickhouse|
             // snowflake|mssql|oracle|trino|redshift (plus the aliases
             // SqlUnparser.dialectFor accepts) → unparsed SQL text (the
@@ -445,8 +437,7 @@ final class GraftHttpServer(
             // The reference answers with rewritten SQL text (connector.py:482-540);
             // this route returns the substituted plan's RESULT in the v3 response
             // shape (dialect SQL text for a model query comes from /dry-plan).
-            val sql = jstr(body \ "sql")
-              .getOrElse(throw new IllegalArgumentException("sql is required"))
+            val sql = required(body, "sql")
             val df = session(manifestStr, props).querySubstituted(sql)
             respond(ex, 200, ResultFormatter.toJsonResponse(df))
 
@@ -455,13 +446,10 @@ final class GraftHttpServer(
             val ps = body \ "parameters"
             val results = rule match {
               case "column_is_valid" =>
-                Seq(sess.validateColumn(
-                  jstr(ps \ "modelName").getOrElse(throw new IllegalArgumentException("modelName is required")),
-                  jstr(ps \ "columnName").getOrElse(throw new IllegalArgumentException("columnName is required"))))
+                Seq(sess.validateColumn(required(ps, "modelName"), required(ps, "columnName")))
               case "relationship_is_valid" => sess.validateRelationships()
               case "rlac_condition_syntax_is_valid" =>
-                Seq(sess.validateRlacSyntax(
-                  jstr(ps \ "condition").getOrElse(throw new IllegalArgumentException("condition is required"))))
+                Seq(sess.validateRlacSyntax(required(ps, "condition")))
               case "cube_hierarchy_is_valid" => sess.validateCubeHierarchies()
               case other => throw new IllegalArgumentException(s"unknown validation rule $other")
             }

@@ -36,7 +36,8 @@ object ResultFormatter {
     case _ => false
   }
 
-  private def jsonString(s: String): String =
+  /** A JSON string literal: quote, backslash and every control character escaped. */
+  private[graft] def jsonString(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"

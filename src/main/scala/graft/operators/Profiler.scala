@@ -25,11 +25,13 @@ import org.apache.spark.sql.types.NumericType
   * Expand that replicated every input row k+1 times into a multi-key
   * SortAggregate — q28 measured 8.2 s warm at sf0.1 (single-split scan → one
   * task sorting 3M rows) and, at a 10x corpus, 103 MB shuffled vs the split
-  * shape's 70 MB with a 2.5x smaller peak stage (tools.ProfileShapes). Each
+  * shape's 70 MB with a 2.5x smaller peak stage (OPTIMIZATION_r16.md §8). Each
   * column is scanned twice (stats + distinct), but columnar pruning keeps that
   * to the column's own bytes — the exchange, not the scan, is what dies at
   * 100 TB (guide §2.3). Because `exactDistinct` reads `df` in two subtrees, it
-  * assumes a stable batch source: persist `df` first when it is not a file scan.
+  * assumes a stable batch source: on a non-deterministic or changing source the
+  * row/null counts and the distinct count can come from different snapshots,
+  * so persist `df` first when it is not a file scan.
   */
 object Profiler {
 

@@ -403,8 +403,8 @@ object TpcH {
     // EXISTS + NOT-EXISTS double self-join: lineitem⨝orders is scanned ONCE
     // into per-(order, supplier) lateness rows, and the two correlated
     // subqueries collapse into one per-order supplier-count aggregate.
-    // Equivalence (Q21Shapes hash-verified at 1×/10×/30×): for a late l1 row,
-    // EXISTS(other supplier in the order) ⟺ the order has >= 2 distinct
+    // Equivalence (hash-verified at 1×/10×/30×, OPTIMIZATION_r16.md §3): for
+    // a late l1 row, EXISTS(other supplier in the order) ⟺ the order has >= 2 distinct
     // suppliers, and NOT EXISTS(other LATE supplier) ⟺ the order's distinct
     // late-supplier set is exactly {l1.l_suppkey} ⟺ nlate = 1 (l1 itself is
     // late); l2/l3 ranged over the same o_orderkey, necessarily l1's F-status
@@ -414,7 +414,7 @@ object TpcH {
     // DISTINCT aggregate, so no Expand row doubling AND a deterministic
     // unparse (Spark's multi-distinct rewrite orders its Expand projections
     // by expression id, which drifts across sessions and broke the golden
-    // pin). Scale A/B of this exact text vs the EXISTS form (Q21Shapes,
+    // pin). Scale A/B of this exact text vs the EXISTS form (OPTIMIZATION_r16.md §3,
     // medians across two probe runs on a noisy box; shuffle bytes are
     // deterministic): 1× 1.06 vs 1.10–1.25 s, 10× 4.29 vs 4.87–15.89 s
     // (shuffle 102 vs 489 MB), 30× 4.61–7.67 vs 6.26–20.92 s (1165 vs

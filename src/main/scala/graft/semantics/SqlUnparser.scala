@@ -364,6 +364,14 @@ object SqlUnparser {
       * Snowflake/Oracle NUMBER, MySQL's CAST sublanguage).
       */
     def rankResultCast: Option[DataType] = Some(IntegerType)
+    /** `lag`/`lead` (`fn`) over rendered arguments; `default` is None for a
+      * NULL default. IGNORE NULLS has no portable spelling, so it refuses.
+      */
+    def offsetWindowFn(fn: String, input: String, offset: String,
+        default: Option[String], ignoreNulls: Boolean): String =
+      if (ignoreNulls) throw new UnsupportedOperationException(
+        s"$name dialect: $fn(...) IGNORE NULLS")
+      else s"$fn(${(Seq(input, offset) ++ default).mkString(", ")})"
     /** Cast applied to the aggregate's ARGUMENT, for engines whose native
       * typing loses the VALUE, not just the type: integer AVG rounds at a
       * fixed fractional scale (MySQL DECIMAL(·,4), Snowflake NUMBER) or
@@ -627,6 +635,10 @@ object SqlUnparser {
     override def splitPart(s: String, delim: String, n: Int): Option[String] = None
     override def aggResultCast(fn: AggregateFunction): Option[DataType] = None
     override def rankResultCast: Option[DataType] = None
+    override def offsetWindowFn(fn: String, input: String, offset: String,
+        default: Option[String], ignoreNulls: Boolean): String =
+      super.offsetWindowFn(fn, input, offset, default, ignoreNulls = false) +
+        (if (ignoreNulls) " IGNORE NULLS" else "")
     override def aggChildCast(fn: AggregateFunction): Option[DataType] = None
   }
 
@@ -1070,6 +1082,11 @@ object SqlUnparser {
     override def regexpReplaceAll(s: String, p: String, r: String): Option[String] =
       Some(s"replaceRegexpAll($s, $p, $r)")
     override def splitPart(s: String, delim: String, n: Int): Option[String] = None
+    // lagInFrame/leadInFrame read within the frame, not the partition
+    override def offsetWindowFn(fn: String, input: String, offset: String,
+        default: Option[String], ignoreNulls: Boolean): String =
+      throw new UnsupportedOperationException(
+        s"$name dialect: $fn exists only as the frame-bound ${fn}InFrame")
     // backslash is already this engine's LIKE escape — no clause needed
     override def likeBackslashIsDefaultEscape: Boolean = true
     // no ESCAPE clause in this grammar; backslash is already the
@@ -1678,6 +1695,11 @@ object SqlUnparser {
       s"CAST(TRUNC($l / $r) AS BIGINT)"
     override def values(rows: Seq[String], alias: String, cols: Seq[String]): String =
       unionAllValues(rows, alias, cols) // Redshift: VALUES only in INSERT
+    override def offsetWindowFn(fn: String, input: String, offset: String,
+        default: Option[String], ignoreNulls: Boolean): String =
+      if (default.nonEmpty) throw new UnsupportedOperationException(
+        s"$name dialect: ${fn.toUpperCase} takes no default value")
+      else super.offsetWindowFn(fn, input, offset, default, ignoreNulls)
     override def fallback(e: Expression, rendered: Expression => String): String = e match {
       // no starts_with/ends_with/contains builtins (Postgres-family posture)
       case sw: StartsWith =>
@@ -2251,6 +2273,13 @@ object SqlUnparser {
       case _: RowNumber => "row_number()"
       case _: Rank => "rank()"
       case _: DenseRank => "dense_rank()"
+      case n: NTile => s"ntile(${rv(n.buckets)})"
+      case o: FrameLessOffsetWindowFunction =>
+        // Lag keeps the user's offset in inputOffset; its `offset` is negated
+        val offset = o match { case l: Lag => l.inputOffset; case _ => o.offset }
+        val default = Some(o.default).filterNot(d => d.foldable && d.eval() == null)
+        dialect.offsetWindowFn(o.prettyName, rv(o.input), rv(offset), default.map(rv),
+          o.ignoreNulls)
       case ae: AggregateExpression => reAgg(ae, applyResultCast = false)
       case other => dialect.fallback(renameRefs(other), rv)
     }

@@ -33,8 +33,7 @@ object GraphErScaleSmoke {
     val parts = sys.env.getOrElse("SPARK_GRAFT_SCALE_PARTITIONS", "32").toInt
     val spark = graft.SparkProfile.session("graft-gescalesmoke")
     spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    val meter = new SmokeMeter
-    spark.sparkContext.addSparkListener(meter)
+    val meter = SmokeMeter.register(spark)
     val work = java.nio.file.Files.createTempDirectory("graft_gescale_").toString
 
     val ev = spark.read.parquet(s"$sfDir/events.parquet")
@@ -68,19 +67,8 @@ object GraphErScaleSmoke {
       x10.withColumn("text", when(pmod(col("doc_id"), lit(3)) === 0,
         concat(lit("inc "), col("text"))).otherwise(col("text"))))
 
-    def runQ(name: String, dir: String): (Double, Long, Long, Long) = {
-      var best = Double.MaxValue; var rows = 0L; var shuffle = 0L; var peak = 0L
-      for (_ <- 0 until runs) {
-        spark.catalog.clearCache()
-        meter.reset()
-        val t0 = System.nanoTime()
-        rows = SparkEntry.queries(name)(spark, dir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
-        if (dt < best) { best = dt; shuffle = meter.total.get; peak = meter.peak.get }
-      }
-      (best, rows, shuffle, peak)
-    }
+    def runQ(name: String, dir: String): (Double, Long, Long, Long) =
+      meter.best(runs)(SparkEntry.queries(name)(spark, dir).count())
     def mb(b: Long): String = f"${b / 1e6}%.1f"
 
     val probes = Seq(
@@ -138,16 +126,9 @@ object GraphErScaleSmoke {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
         try {
-          var best = Double.MaxValue; var shuffle = 0L; var rows = 0L
-          for (_ <- 0 to runs) { // extra first pass = warm, still measured-best
-            spark.catalog.clearCache()
-            meter.reset()
-            val t0 = System.nanoTime()
-            rows = GraphOps.pageRank(e, iterations = 4).count()
-            val dt = (System.nanoTime() - t0) / 1e9
-            org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
-            if (dt < best) { best = dt; shuffle = meter.total.get }
-          }
+          // one extra first pass warms the plan and still competes for best
+          val (best, rows, shuffle, _) =
+            meter.best(runs + 1)(GraphOps.pageRank(e, iterations = 4).count())
           Map("query" -> s"g1_rankloop_10x[$label]", "t10_sec" -> f"$best%.2f",
             "rows10" -> rows.toString, "shuffle10_mb" -> mb(shuffle))
         } finally {
@@ -167,16 +148,10 @@ object GraphErScaleSmoke {
       Seq(f, bk)
     }
 
-    val json = (results ++ bucketRows).map(_.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-        .mkString("{", ",", "}"))
-      .mkString(
-        s"""{"sf":"$sfDir","copies":$copies,"partitions":$parts,"results":[""",
-        ",", "]}")
     val outName = if (copies == 10) "graph_er_scale_smoke.json"
       else s"graph_er_scale_smoke_${copies}x.json"
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(outName), json.getBytes("UTF-8"))
-    println(json)
+    SmokeMeter.writeRows(outName,
+      s""""sf":"$sfDir","copies":$copies,"partitions":$parts""", results ++ bucketRows)
     graft.util.Fs.deleteTree(work)
     spark.stop()
   }

@@ -54,8 +54,7 @@ object ScaleSmoke {
     val spark = graft.SparkProfile.session("graft-scalesmoke")
     // the decade protocol: 32 shuffle partitions at 10×, 96 at 30×, 320 at 100×
     spark.conf.set("spark.sql.shuffle.partitions", "32")
-    val meter = new SmokeMeter
-    spark.sparkContext.addSparkListener(meter)
+    val meter = SmokeMeter.register(spark)
 
     val work = java.nio.file.Files.createTempDirectory("graft_scale_").toString
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -93,20 +92,8 @@ object ScaleSmoke {
       ("d4_ngram_jaccard", skew1, skew10),
       ("d13_containment", skew1, skew10))
 
-    def runDf(thunk: () => DataFrame): (Double, Long, Long, Long) = {
-      var best = Double.MaxValue; var rows = 0L
-      var shuffle = 0L; var peak = 0L
-      for (_ <- 0 until runs) {
-        spark.catalog.clearCache()
-        meter.reset()
-        val t0 = System.nanoTime()
-        rows = thunk().count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
-        if (dt < best) { best = dt; shuffle = meter.total.get; peak = meter.peak.get }
-      }
-      (best, rows, shuffle, peak)
-    }
+    def runDf(thunk: () => DataFrame): (Double, Long, Long, Long) =
+      meter.best(runs)(thunk().count())
     def run(name: String, dir: String): (Double, Long, Long, Long) =
       runDf(() => SparkEntry.queries(name)(spark, dir))
 
@@ -158,15 +145,8 @@ object ScaleSmoke {
           s"dispatch ${d30}->${d100}")
         row
       }
-      val json = rows.map(r => r.map { case (k, v) =>
-        "\"" + k + "\":\"" + v + "\"" }.mkString("{", ",", "}"))
-        .mkString(
-          s"""{"sf":"$sfDir","copies":$copies,"mode":"100x","results":[""",
-          ",", "]}")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("dedup_scale_smoke_100x.json"),
-        json.getBytes("UTF-8"))
-      println(json)
+      SmokeMeter.writeRows("dedup_scale_smoke_100x.json",
+        s""""sf":"$sfDir","copies":$copies,"mode":"100x"""", rows)
       graft.util.Fs.deleteTree(work)
       spark.stop()
       return
@@ -550,7 +530,7 @@ object ScaleSmoke {
         val t1 = System.nanoTime()
         Similarity.saveIvfPq(idx, path)
         val tEncode = (System.nanoTime() - t1) / 1e9
-        org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
+        meter.drain()
         val encodePeak = meter.peak.get
         val appendBatch = rotated(11).limit(5000)
         val t2 = System.nanoTime()
@@ -582,12 +562,9 @@ object ScaleSmoke {
       Seq(row)
     }
 
-    val json = (results ++ skewResults30 ++ leakageResults ++ eventResults ++ annResults ++ zorderResults ++ mmResults ++ annBuildResults).map(r => r.map { case (k, v) =>
-      "\"" + k + "\":\"" + v + "\"" }.mkString("{", ",", "}"))
-      .mkString(s"""{"sf":"$sfDir","copies":$copies,"results":[""", ",", "]}")
-    java.nio.file.Files.write(java.nio.file.Paths.get("scale_smoke.json"),
-      json.getBytes("UTF-8"))
-    println(json)
+    SmokeMeter.writeRows("scale_smoke.json", s""""sf":"$sfDir","copies":$copies""",
+      results ++ skewResults30 ++ leakageResults ++ eventResults ++ annResults ++
+        zorderResults ++ mmResults ++ annBuildResults)
 
     // best-effort cleanup of the synthesized corpora
     graft.util.Fs.deleteTree(work)

@@ -57,8 +57,7 @@ object SemanticScaleSmoke {
     val spark = graft.SparkProfile.session("graft-semscalesmoke")
     // the decade protocol: 32 shuffle partitions at 10×, 96 at 30×, 320 at 100×
     spark.conf.set("spark.sql.shuffle.partitions", "32")
-    val meter = new SmokeMeter
-    spark.sparkContext.addSparkListener(meter)
+    val meter = SmokeMeter.register(spark)
 
     val work = java.nio.file.Files.createTempDirectory("graft_semscale_").toString
 
@@ -99,19 +98,8 @@ object SemanticScaleSmoke {
     val suites = Seq("tpch_q1", "tpch_q3", "tpch_q9", "tpch_q18", "tpch_q21",
       "m3_calc_to_many", "m13_cube", "m6_rlac")
 
-    def timed(name: String, dir: String): (Double, Long, Long, Long) = {
-      var best = Double.MaxValue; var rows = 0L; var shuffle = 0L; var peak = 0L
-      for (_ <- 0 until runs) {
-        spark.catalog.clearCache()
-        meter.reset()
-        val t0 = System.nanoTime()
-        rows = SparkEntry.queries(name)(spark, dir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
-        if (dt < best) { best = dt; shuffle = meter.total.get; peak = meter.peak.get }
-      }
-      (best, rows, shuffle, peak)
-    }
+    def timed(name: String, dir: String): (Double, Long, Long, Long) =
+      meter.best(runs)(SparkEntry.queries(name)(spark, dir).count())
     /** Untimed executed-plan read: collect() drives the query's OWN
       * QueryExecution to completion so AdaptiveSparkPlan reports the FINAL
       * join strategies, not the initial static plan.
@@ -218,12 +206,8 @@ object SemanticScaleSmoke {
       }
     } else Nil
 
-    val json = (results ++ results30 ++ results100).map(r => r.map { case (k, v) =>
-      "\"" + k + "\":\"" + v + "\"" }.mkString("{", ",", "}"))
-      .mkString(s"""{"sf":"$sfDir","copies":$copies,"results":[""", ",", "]}")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("semantic_scale_smoke.json"), json.getBytes("UTF-8"))
-    println(json)
+    SmokeMeter.writeRows("semantic_scale_smoke.json", s""""sf":"$sfDir","copies":$copies""",
+      results ++ results30 ++ results100)
 
     graft.util.Fs.deleteTree(work)
     spark.stop()

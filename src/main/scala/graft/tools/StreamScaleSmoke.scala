@@ -204,12 +204,7 @@ object StreamScaleSmoke {
     if (want("neardup")) { runNearDup("1x", 10); runNearDup("10x", 100) }
     if (want("er")) { runErLink("1x", 10); runErLink("10x", 100) }
 
-    val json = results.map(_.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-        .mkString("{", ",", "}"))
-      .mkString(s"""{"sf":"$sfDir","results":[""", ",", "]}")
-    java.nio.file.Files.write(java.nio.file.Paths.get("stream_scale_smoke.json"),
-      json.getBytes("UTF-8"))
-    println(json)
+    SmokeMeter.writeRows("stream_scale_smoke.json", s""""sf":"$sfDir"""", results.toSeq)
     graft.util.Fs.deleteTree(work)
     spark.stop()
   }

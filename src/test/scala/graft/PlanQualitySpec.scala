@@ -139,7 +139,7 @@ class PlanQualitySpec extends AnyFunSuite {
     // Now per column: a map-combinable stats aggregate crossed with a
     // value-only distinct count — no Expand, bare values on the distinct
     // exchange, and every scan prunes to exactly its own column (two scans per
-    // column: stats + distinct; tools.ProfileShapes carries the 10x evidence).
+    // column: stats + distinct; OPTIMIZATION_r16.md §8 carries the 10x evidence).
     val plan = executedPlan("q28_profile")
     assert(!plan.contains("Expand"),
       s"exact-distinct profile must not plan through Expand\n${plan.take(2500)}")

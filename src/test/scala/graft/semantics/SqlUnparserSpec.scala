@@ -261,4 +261,33 @@ class SqlUnparserSpec extends AnyFunSuite {
       assert(text.contains(s"CAST(1.5 AS ${d.typeName(FloatType)})"), s"${d.name}:\n$text")
     }
   }
+
+  test("lag, lead and ntile render in all 11 dialects, or refuse where the engine lacks the form") {
+    def render(d: String, fn: String): Either[String, String] =
+      try Right(tpch.transformSql(s"SELECT $fn OVER (ORDER BY o_orderkey) AS w FROM orders", d))
+      catch { case e: UnsupportedOperationException => Left(e.getMessage) }
+    def renders(d: String, fn: String, pattern: String): Unit = render(d, fn) match {
+      case Right(text) => assert(pattern.r.findFirstIn(text).isDefined, s"$d $fn:\n$text")
+      case Left(msg) => fail(s"$d $fn refused: $msg")
+    }
+    def refuses(d: String, fn: String, reason: String): Unit = render(d, fn) match {
+      case Left(msg) => assert(msg.startsWith(s"$d dialect: ") && msg.contains(reason), msg)
+      case Right(text) => fail(s"$d $fn rendered:\n$text")
+    }
+    for (d <- SqlUnparser.dialects.map(_.name)) {
+      renders(d, "ntile(4)", """ntile\(4\) OVER""")
+      if (d == "clickhouse") {
+        refuses(d, "lag(o_orderkey)", "lagInFrame")
+        refuses(d, "lead(o_orderkey, 2)", "leadInFrame")
+      } else {
+        // a NULL default is left out
+        renders(d, "lag(o_orderkey)", """lag\([^(),]+, 1\) OVER""")
+        renders(d, "lead(o_orderkey, 2)", """lead\([^(),]+, 2\) OVER""")
+        if (d == "redshift") refuses(d, "lag(o_orderkey, 1, 0)", "LAG takes no default")
+        else renders(d, "lag(o_orderkey, 1, 0)", """lag\([^(),]+, 1, .+\) OVER""")
+        if (d == "spark") renders(d, "lag(o_orderkey) IGNORE NULLS", """\) IGNORE NULLS OVER""")
+        else refuses(d, "lag(o_orderkey) IGNORE NULLS", "IGNORE NULLS")
+      }
+    }
+  }
 }
